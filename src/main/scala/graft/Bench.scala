@@ -116,6 +116,18 @@ object Bench {
       s""""peak_exec_mb":${pk / 1048576}"""
   }
 
+  /** The session every bench row runs in (and [[ExplainApp]] plans in):
+    * `local[cpus]`, one shuffle partition per core, AQE on. */
+  def session(cpus: String): SparkSession = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus)
+    .config("spark.sql.session.timeZone", "UTC")
+    // events.parquet has TIMESTAMP(NANOS); read as nanos-epoch longs
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
   def main(args: Array[String]): Unit = {
     val benchStartMs = System.currentTimeMillis
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -148,15 +160,7 @@ object Bench {
       val (t1, i1, _) = cpuSample()
       if (t1 == t0) 0.0 else 1.0 - (i1 - i0).toDouble / (t1 - t0)
     } catch { case _: Throwable => -1.0 }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet has TIMESTAMP(NANOS); read as nanos-epoch longs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark) // SQL surface
 

@@ -55,9 +55,8 @@ object IvfIndex {
 
   def build(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, seed: Long = 42L, maxIter: Int = 10): Index = {
-    import org.apache.spark.ml.feature.VectorAssembler
     import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+    import org.apache.spark.ml.functions.array_to_vector
 
     val base = corpus.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("vec"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.StatFunctions.dotProduct
@@ -124,9 +124,10 @@ object Pq {
   /** Encode the corpus: (id, s, code) — m rows per vector.
     *
     * r17: broadcast-relation join instead of the [[assignCodes]]
-    * literal-tree projection. The PqExperiment A/B (sf0.1, 32 cores)
-    * measured the literal expression at 1.53 s/scan vs 0.24-0.63 s for
-    * this shape with byte-identical output (except() empty both ways):
+    * literal-tree projection. The A/B recorded in OPTIMIZATION_r17.md
+    * (sf0.1, 32 cores) measured the literal expression at 1.53 s/scan
+    * vs 0.24-0.63 s for this shape with byte-identical output (except()
+    * empty both ways):
     * q254's cost was never Catalyst planning (~0.1 s warm) but the
     * EXECUTION of the m*k unrolled dot-product/sort_array tree per row.
     * Arithmetic is term-for-term the literal path's — the same

@@ -8,7 +8,8 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.functions.StatFunctions._
 
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, TimeUnit}
+import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
@@ -29,7 +30,12 @@ import scala.concurrent.duration.Duration
   *   E. one char-level rollup over the (small) distinct-value table;
   *   F. one groupBy-all-columns job for duplicate rows;
   *   G. one `df.agg` with all pairwise Pearson + nullity correlations;
-  *   H. one explode->groupBy job for all Cramer's-V contingency tables.
+  *   H. one explode->groupBy job for all Cramer's-V contingency tables;
+  *   K. opt-in Kendall tau-b and phi-k.
+  *
+  * Each pass is a method below whose parameters are the upstream results
+  * it reads; [[profile]] runs them as `Future`s on one bounded pool, and
+  * those futures are the pass dependency graph.
   *
   * Every driver transfer is bounded (top-K, bins, contingency <= 100x100,
   * duplicate head) — nothing scales with row count, so the same plan holds
@@ -41,6 +47,47 @@ object Profiler {
     * otherwise parse the dot as struct-field access. */
   private def qcol(name: String): Column =
     col("`" + name.replace("`", "``") + "`")
+
+  /** Runs `body`; with GRAFT_VERBOSE set, prints its wall time to stderr. */
+  private def timed[T](name: String)(body: => T): T = {
+    val t0 = System.nanoTime()
+    val r = body
+    if (sys.env.contains("GRAFT_VERBOSE"))
+      System.err.println(f"[profiler] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
+    r
+  }
+
+  private def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
+
+  private[profile] type RankMaps = Map[String, mutable.LongMap[Double]]
+
+  /** A pass-B half's value statistics plus its persisted count table. */
+  private type BResult = (Map[String, ValueInfo], Option[DataFrame])
+
+  /** Pass B's per-column value statistics (or sketch mode's stand-ins). */
+  private case class ValueInfo(
+      nDistinct: Long, nUnique: Long, chi2P: Option[Double],
+      topK: Seq[(String, Long)])
+
+  /** Pass A's result: its aggregate rows, awaited on first read, so a
+    * pass that holds it blocks on pass A only where it reads it. */
+  private final class PassA(jobs: Seq[Future[Row]]) {
+    lazy val values: Map[String, Any] = jobs.flatMap { f =>
+      val r = await(f)
+      r.schema.fieldNames.zip(r.toSeq)
+    }.toMap
+    def any(k: String): Option[Any] = values.get(k).filter(_ != null)
+    def long(k: String): Long =
+      any(k).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
+    def double(k: String): Double =
+      any(k).map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN)
+    def nRows: Long = long("__n")
+  }
+
+  /** One fixed-width histogram: `value` is the column as a double (epoch
+    * seconds for datetimes), binned over [min, max]. */
+  private case class HistTarget(
+      name: String, value: Column, min: Double, max: Double, bins: Int)
 
   def profile(df: DataFrame, cfg: ProfileConfig = ProfileConfig.default): TableProfile = {
     // MapType columns canonicalize to a sorted-entries string up front
@@ -54,52 +101,215 @@ object Profiler {
     val declared: Seq[(StructField, ProfileType)] =
       fields.map(f => f -> ProfileType.fromDataType(f.dataType))
     val supported = declared.filter(_._2 != ProfileType.Unsupported)
+    def named(keep: ProfileType => Boolean, cols: Seq[(StructField, ProfileType)]) =
+      cols.collect { case (f, t) if keep(t) => f.name }
+    val preNumeric = named(_ == ProfileType.Numeric, supported)
+    val preDatetime = named(_ == ProfileType.DateTime, supported)
+    val catSupported = named(_ != ProfileType.Numeric, supported)
+    def typeOf(c: String) = fields.find(_.name == c).map(_.dataType)
+    val repartitioned = repartitionInput(canon, cfg)
+    val working =
+      if (repartitioned) canon.repartition(passWidth(canon))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      else if (cfg.persist) canon.persist(StorageLevel.MEMORY_AND_DISK)
+      else canon
+    val aChunks = passAChunks(supported, cfg)
 
-    // Scale-adaptive parallelism for the multi-pass scans (r16, guide
-    // §2/§6): a table that arrives as FEWER scan partitions than the
-    // pass width below (one 10 MB parquet file = 3 splits under the
-    // bytesPerCore/openCost split rule) runs every pass — pass A's
-    // fused aggregates, B's explode→groupBy map sides, D's MAD, G's
-    // co-moment scans — at that width, leaving most cores idle even
-    // with the job pool overlapping passes. One round-robin repartition
-    // at persist time widens every downstream pass for the cost of
-    // shuffling the input once. Width: defaultParallelism/4, NOT the
-    // full core count — the pool overlaps ~poolSize single-stage jobs,
-    // so per-job width cores/4 keeps in-flight tasks ≈ 2× cores
-    // (measured at sf0.1/32 cores, whole profile incl. the shuffle:
-    // raw 3-split 11.7-12.9 s, width 8 = 8.1-9.2 s, width 32 =
-    // 10.8-11.7 s — full-width oversubscribes and loses the win).
-    // Guards keep it scale-safe and output-safe:
-    //   - only when the scan is UNDER-parallelized (at 100 TB the scan
-    //     has thousands of splits and this is a no-op — no shuffle);
-    //   - only above a size floor (a few-MB table profiles faster in
-    //     one task than the exchange costs; tiny oracle fixtures keep
-    //     their exact historical plan and byte-identical output);
-    //   - only when persisting (no persist = each pass re-reads the
-    //     source; repartitioning would add a shuffle per pass).
-    // The head sample is taken from the PRE-repartition plan below, so
-    // sampled rows are unaffected. Exact aggregates are partition-
-    // invariant; float moments can move in the last ulp (the gates
-    // round at 4-6 dp for exactly this noise class — q04's convention).
-    //
-    // NOT IN SKETCH MODE (r17, ADVICE r16 + the q00b verdict item):
-    // percentile_approx / approx_top_k / HLL are partition-ORDER-
-    // dependent, so for the sketch-distinct profile (q00b, the 100 TB
-    // operating mode) this shuffle both (a) moved the estimates by more
-    // than the claimed ulp and (b) is the prime plan difference behind
-    // the driver-measured q00b 32-core full-bench regression (56.6 s
-    // warm vs 12.2 s in r14; the driver's clean 8-core reading ran
-    // BELOW the width floor, i.e. WITHOUT the repartition, and was
-    // fine at 8.2 s — the pathology tracked this exchange, not the
-    // job-grouping split below). Sketch mode's real deployment has
-    // thousands of scan splits where this is a no-op anyway. Exact-
-    // distinct profiles (q00/q00c) keep it: their value-count passes
-    // dominate and the r16 win is driver-confirmed; q00's
-    // percentile_approx quantiles still carry the (documented,
-    // gate-safe) sketch drift under the shuffle.
-    val passWidth =
-      math.max(2, df.sparkSession.sparkContext.defaultParallelism / 4)
-    val repartitioned = cfg.persist && cfg.exactDistinct && {
+    // Pass A and pass B (exact mode) are independent single-scan jobs,
+    // and passes C-H are independent given their results — all overlap
+    // on a bounded pool of concurrent Spark jobs (the reference used a
+    // client-side ThreadPool the same way, model/summary.py:155-185).
+    // Launch order is the pool's FIFO order: pass A's chunks, B1, B2,
+    // then (before the pass-B await) F, the head, C's full-bin job and
+    // Spearman's ranks. A pool thread only ever awaits a future created
+    // before its own, so even poolSize = 1 cannot deadlock.
+    val pool = Executors.newFixedThreadPool(cfg.poolSize)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val a = new PassA(aChunks.zipWithIndex.map { case (ch, i) =>
+      Future(timed(s"A:agg-chunk$i")(working.agg(ch.head, ch.tail: _*).head()))
+    })
+    def passB(cols: Seq[String])(exact: => BResult): Future[BResult] =
+      Future {
+        if (cols.isEmpty) (Map.empty[String, ValueInfo], None)
+        else if (cfg.exactDistinct) exact
+        else (sketchValueInfo(a, cols), None)
+      }
+    val catF = passB(catSupported)(passBCat(working, catSupported, cfg))
+    val numF = passB(preNumeric)(
+      passBNum(working, preNumeric, preNumeric.filter(typeOf(_).contains(FloatType)), cfg))
+    try {
+      val duplicatesF = Future(passF(working, supported.map(_._1), a, cfg))
+      // head rows come from the PRE-repartition plan: a round-robin
+      // exchange reorders rows, and the sample must stay byte-identical
+      // to the unrepartitioned profile (limit(10) on the raw scan reads
+      // almost nothing, so this costs ~0 even when `working` differs)
+      val headF = Future(passHead(if (repartitioned) canon else working, fields, cfg))
+      val histPreF =
+        if (!cfg.computeHistograms || !cfg.exactDistinct) Future.successful(Map.empty[String, Histogram])
+        else Future(passCFull(working, a, preNumeric, preDatetime, cfg))
+      val ranksF: Future[Option[Either[RankMaps, DataFrame]]] =
+        if (!cfg.computeCorrelations || !cfg.computeSpearman || preNumeric.size < 2)
+          Future.successful(None)
+        else Future(Some(passSpearmanRanks(working, preNumeric, await(numF), cfg)))
+
+      val (catInfo, vcTable) = await(catF)
+      val (numInfo, numCounts) = await(numF)
+      val valueInfo: Map[String, ValueInfo] = catInfo ++ numInfo
+      // Demotion: numeric with few distinct values profiles as categorical
+      // (reference: typeset_relations.py:68-77).
+      val typed: Seq[(StructField, ProfileType)] = supported.map { case (f, t) =>
+        val demote = t == ProfileType.Numeric && cfg.exactDistinct &&
+          valueInfo(f.name).nDistinct <= cfg.lowCategoricalThreshold
+        f -> (if (demote) ProfileType.Categorical else t)
+      }
+      val numericCols = named(_ == ProfileType.Numeric, typed)
+      val categoricalCols = named(_ == ProfileType.Categorical, typed)
+      val datetimeCols = named(_ == ProfileType.DateTime, typed)
+      val stringCats = categoricalCols.filter(typeOf(_).contains(StringType))
+      // Cramer's V and phi-k share one eligibility rule
+      val contingencyCols = categoricalCols.filter { c =>
+        val nd = valueInfo.get(c).map(_.nDistinct).getOrElse(Long.MaxValue)
+        nd >= 2 && nd <= cfg.maxCramersCardinality
+      }
+      val histogramsF = Future(passC(working, a, await(histPreF), numCounts,
+        numericCols, datetimeCols, valueInfo(_).nDistinct, cfg))
+      val madsF = Future(passD(working, a, numericCols, cfg))
+      val charStatsF = Future(passE(vcTable, stringCats))
+      // Pearson and Spearman run as CONCURRENT futures: Spearman's
+      // co-moment scan overlaps Pearson's aggregate instead of queueing
+      // behind it — they share no state beyond the persisted input.
+      val pearsonF = Future(passPearson(working, numericCols, cfg))
+      val spearmanF = Future {
+        if (numericCols.size < 2) None
+        else await(ranksF).map(passSpearman(working, numericCols, _, repartitioned))
+      }
+      val cramersF = Future(passH(working, contingencyCols, cfg))
+      val kendallF = Future(passK(working, numericCols, cfg))
+      val phikF = Future(passPhik(working, contingencyCols, cfg))
+
+      val (histograms, mads, charStats) =
+        (await(histogramsF), await(madsF), await(charStatsF))
+      val nRows = a.nRows
+      val columnProfiles: Seq[ColumnProfile] = declared.map { case (f, declaredType) =>
+        val p = f.name
+        val effType = typed.find(_._1.name == p).map(_._2).getOrElse(declaredType)
+        val cnt = if (declaredType == ProfileType.Unsupported) 0L else a.long(s"$p::count")
+        val vi = valueInfo.get(p)
+        val common = CommonStats(nRows, cnt,
+          vi.map(_.nDistinct).getOrElse(0L), vi.map(_.nUnique).getOrElse(0L))
+        val typedStats: TypedStats = effType match {
+          case ProfileType.Numeric =>
+            val qs = a.any(s"$p::quantiles").orNull match {
+              case s: scala.collection.Seq[_] =>
+                cfg.quantiles.zip(s.map(x =>
+                  Option(x).map(_.asInstanceOf[Number].doubleValue)
+                    .getOrElse(Double.NaN))).toMap
+              case _ => Map.empty[Double, Double]
+            }
+            NumericStats(
+              mean = a.double(s"$p::mean"), std = a.double(s"$p::std"),
+              variance = a.double(s"$p::variance"), min = a.double(s"$p::min"),
+              max = a.double(s"$p::max"), sum = a.double(s"$p::sum"),
+              skewness = a.double(s"$p::skew"), kurtosis = a.double(s"$p::kurt"),
+              quantiles = qs, mad = mads.getOrElse(p, Double.NaN),
+              nZeros = a.long(s"$p::zeros"), nInfinite = a.long(s"$p::inf"),
+              nonNullCount = cnt, histogram = histograms.get(p),
+              chiSquaredP = vi.flatMap(_.chi2P))
+          case ProfileType.Categorical =>
+            val lengths =
+              if (f.dataType == StringType && declaredType == ProfileType.Categorical)
+                Some(LengthStats(a.double(s"$p::lenMean"), a.long(s"$p::lenMin"),
+                  a.long(s"$p::lenMax"), a.double(s"$p::lenMedian")))
+              else None
+            CategoricalStats(vi.map(_.topK).getOrElse(Seq.empty), lengths,
+              charStats.get(p), vi.flatMap(_.chi2P))
+          case ProfileType.Bool =>
+            BooleanStats(a.long(s"$p::true"), a.long(s"$p::false"))
+          case ProfileType.DateTime =>
+            DateTimeStats(a.long(s"$p::epochMin"), a.long(s"$p::epochMax"),
+              histograms.get(p))
+          case _ => UnsupportedStats
+        }
+        ColumnProfile(p, rawTypeName.getOrElse(p, f.dataType.simpleString),
+          effType, common, typedStats)
+      }
+
+      val missingCounts = columnProfiles.map(c => c.name -> c.common.nMissing).toMap
+      val nCellsMissing = supported.map(s => missingCounts(s._1.name)).sum
+      val table = TableStats(
+        n = nRows, nVar = fields.size, nCellsMissing = nCellsMissing,
+        pCellsMissing =
+          if (nRows * supported.size == 0) 0.0
+          else nCellsMissing.toDouble / (nRows * supported.size),
+        typeCounts = columnProfiles.groupBy(_.profileType.name)
+          .map { case (k, v) => k -> v.size })
+      val (nDuplicates, duplicateRows) = await(duplicatesF)
+      val profile0 = TableProfile(table, columnProfiles, missingCounts,
+        nDuplicates, duplicateRows,
+        await(pearsonF).toSeq ++ await(spearmanF).toSeq, await(cramersF),
+        await(headF), Seq.empty, await(kendallF), await(phikF))
+      profile0.copy(alerts = Alerts.compute(profile0, cfg))
+    } finally {
+      // Also on failure: a failed pass rethrows from its await, and the
+      // pool's non-daemon threads and the cached tables must not outlive
+      // the call. Waiting for in-flight passes first means none of them
+      // can persist a table after it is released here.
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      for (f <- Seq(catF, numF); (_, Some(t)) <- f.value.flatMap(_.toOption))
+        t.unpersist(false)
+      if (cfg.persist) working.unpersist()
+    }
+  }
+
+  // Scale-adaptive parallelism for the multi-pass scans (r16, guide
+  // §2/§6): a table that arrives as FEWER scan partitions than the
+  // pass width below (one 10 MB parquet file = 3 splits under the
+  // bytesPerCore/openCost split rule) runs every pass — pass A's
+  // fused aggregates, B's explode→groupBy map sides, D's MAD, G's
+  // co-moment scans — at that width, leaving most cores idle even
+  // with the job pool overlapping passes. One round-robin repartition
+  // at persist time widens every downstream pass for the cost of
+  // shuffling the input once. Width: defaultParallelism/4, NOT the
+  // full core count — the pool overlaps ~poolSize single-stage jobs,
+  // so per-job width cores/4 keeps in-flight tasks ≈ 2× cores
+  // (measured at sf0.1/32 cores, whole profile incl. the shuffle:
+  // raw 3-split 11.7-12.9 s, width 8 = 8.1-9.2 s, width 32 =
+  // 10.8-11.7 s — full-width oversubscribes and loses the win).
+  private def passWidth(df: DataFrame): Int =
+    math.max(2, df.sparkSession.sparkContext.defaultParallelism / 4)
+
+  /** Whether [[profile]] widens its persisted input to [[passWidth]].
+    * Guards keep it scale-safe and output-safe:
+    *   - only when the scan is UNDER-parallelized (at 100 TB the scan
+    *     has thousands of splits and this is a no-op — no shuffle);
+    *   - only above a size floor (a few-MB table profiles faster in
+    *     one task than the exchange costs; tiny oracle fixtures keep
+    *     their exact historical plan and byte-identical output);
+    *   - only when persisting (no persist = each pass re-reads the
+    *     source; repartitioning would add a shuffle per pass).
+    * The head sample is taken from the PRE-repartition plan, so
+    * sampled rows are unaffected. Exact aggregates are partition-
+    * invariant; float moments can move in the last ulp (the gates
+    * round at 4-6 dp for exactly this noise class — q04's convention).
+    *
+    * NOT IN SKETCH MODE (r17, ADVICE r16 + the q00b verdict item):
+    * percentile_approx / approx_top_k / HLL are partition-ORDER-
+    * dependent, so for the sketch-distinct profile (q00b, the 100 TB
+    * operating mode) this shuffle both (a) moved the estimates by more
+    * than the claimed ulp and (b) is the prime plan difference behind
+    * the driver-measured q00b 32-core full-bench regression (56.6 s
+    * warm vs 12.2 s in r14; the driver's clean 8-core reading ran
+    * BELOW the width floor, i.e. WITHOUT the repartition, and was
+    * fine at 8.2 s — the pathology tracked this exchange, not the
+    * job-grouping split of pass A). Sketch mode's real deployment has
+    * thousands of scan splits where this is a no-op anyway. Exact-
+    * distinct profiles (q00/q00c) keep it: their value-count passes
+    * dominate and the r16 win is driver-confirmed; q00's
+    * percentile_approx quantiles still carry the (documented,
+    * gate-safe) sketch drift under the shuffle. */
+  private def repartitionInput(canon: DataFrame, cfg: ProfileConfig): Boolean =
+    cfg.persist && cfg.exactDistinct && {
       // stats-availability guard (ADVICE r16): a stats-less plan (e.g.
       // LogicalRDD / checkpoint-backed input) reports the conservative
       // spark.sql.defaultSizeInBytes sentinel (Long.MaxValue by
@@ -107,47 +317,46 @@ object Profiler {
       // every tiny RDD-backed table; require a REAL estimate below the
       // sentinel before paying the exchange.
       val sz = canon.queryExecution.optimizedPlan.stats.sizeInBytes
-      canon.rdd.getNumPartitions < passWidth &&
+      canon.rdd.getNumPartitions < passWidth(canon) &&
         sz >= BigInt(8L * 1024 * 1024) &&
-        sz < BigInt(df.sparkSession.sessionState.conf.defaultSizeInBytes)
-    }
-    val working =
-      if (repartitioned)
-        canon.repartition(passWidth).persist(StorageLevel.MEMORY_AND_DISK)
-      else if (cfg.persist) canon.persist(StorageLevel.MEMORY_AND_DISK)
-      else canon
-    def timed[T](name: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      if (sys.env.contains("GRAFT_VERBOSE"))
-        System.err.println(f"[profiler] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
+        sz < BigInt(canon.sparkSession.sessionState.conf.defaultSizeInBytes)
     }
 
-    // Pass A and pass B (exact mode) are independent single-scan jobs,
-    // and passes C-H are independent given their results — all overlap
-    // on a bounded pool of concurrent Spark jobs (the reference used a
-    // client-side ThreadPool the same way, model/summary.py:155-185).
-    val pool = Executors.newFixedThreadPool(cfg.poolSize)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-
-    // ---- Pass A: fused scalar aggregates, chunked for codegen ----------
-    // One agg with every expression would exceed ~100 aggregate buffer
-    // fields on a wide table, which silently drops the whole
-    // HashAggregate out of whole-stage codegen (measured 15.6 s vs ~3 s
-    // at sf0.1). Expressions carry a buffer-width estimate and are
-    // greedily packed into <= 90-buffer chunks; sketch aggregates
-    // (percentile, HLL) are ObjectHashAggregate and never codegen, so
-    // they get their own job rather than dragging the scalars down.
-    // Chunks run concurrently on the pool over the persisted input —
-    // still a constant number of scans, independent of row count.
-    val scalarAggs = scala.collection.mutable.ArrayBuffer[(Column, Int)](
-      (count(lit(1)).as("__n"), 1))
-    val sketchAggs = scala.collection.mutable.ArrayBuffer[Column]()
+  /** Pass A: fused scalar aggregates, chunked for codegen.
+    *
+    * One agg with every expression would exceed ~100 aggregate buffer
+    * fields on a wide table, which silently drops the whole
+    * HashAggregate out of whole-stage codegen (measured 15.6 s vs ~3 s
+    * at sf0.1). Expressions carry a buffer-width estimate and are
+    * greedily packed into <= 90-buffer chunks; sketch aggregates
+    * (percentile, HLL) are ObjectHashAggregate and never codegen, so
+    * they get their own jobs rather than dragging the scalars down.
+    * Chunks run concurrently on the pool over the persisted input —
+    * still a constant number of scans, independent of row count.
+    *
+    * Sketch chunks come FIRST: the percentile job is the longest pass-A
+    * leg (sort-based ObjectHashAggregate) and pass D gates on its
+    * medians — launching it before the scalar chunks packs the pool
+    * better. The HLL distinct chunk (sketch mode only) runs
+    * CONCURRENTLY with it. r16: the sketch/distinct groups are
+    * themselves SPLIT into <= 6 aggregates per job — a 16-column HLL
+    * group fused in ONE ObjectHashAggregate was the measured pass-A
+    * critical path (warm 4.5 s while most cores idled). Splitting
+    * changes ONLY which columns share a job — each column's aggregate
+    * still runs over the same partitions, so every result is
+    * bit-identical; the pool overlaps the extra jobs. r17 re-measured
+    * the VERDICT-suspected alternative (one fused job per family):
+    * q00b 11.5 s vs 8.7 s at local[8] — the split stays; the r16
+    * 32-core regression tracked the sketch-mode repartition (see
+    * [[repartitionInput]]), not this split. */
+  private def passAChunks(supported: Seq[(StructField, ProfileType)],
+      cfg: ProfileConfig): Seq[Seq[Column]] = {
+    val scalarAggs = mutable.ArrayBuffer[(Column, Int)]((count(lit(1)).as("__n"), 1))
+    val sketchAggs = mutable.ArrayBuffer[Column]()
     // HLL distinct sketches get their OWN chunk: in sketch mode they are
     // as expensive as the quantile job, and fusing both into one serial
     // aggregation doubled pass A's critical path (measured 11s vs 2x ~5s)
-    val distinctAggs = scala.collection.mutable.ArrayBuffer[Column]()
+    val distinctAggs = mutable.ArrayBuffer[Column]()
     // Sketch-mode top-K values: pass B (the exact explode->groupBy value
     // counts) is skipped entirely when exactDistinct=false, which used
     // to leave the 100 TB operating mode with NO top values at all.
@@ -160,19 +369,17 @@ object Profiler {
     // datetime its range; sketch mode never demotes numerics) — sketching
     // all 17 lineitem columns measured +3.4 s wall on q00b vs ~0 for the
     // 2 categorical ones.
-    val topkAggs = scala.collection.mutable.ArrayBuffer[Column]()
+    val topkAggs = mutable.ArrayBuffer[Column]()
     val sketchTopK = !cfg.exactDistinct && cfg.topK > 0 &&
       cfg.sketchTopKMaxTracked > 0
-    def addTopkAgg(p: String): Unit = if (sketchTopK) {
-      val k = math.min(cfg.topK, cfg.sketchTopKMaxTracked)
-      topkAggs += expr(
-        s"approx_top_k(cast(`$p` as string), $k, ${cfg.sketchTopKMaxTracked})")
-        .as(s"$p::topk")
-    }
     supported.foreach { case (f, t) =>
       val c = qcol(f.name)
       val p = f.name
       scalarAggs += ((count(c).as(s"$p::count"), 1))
+      // sketch mode reads $p::approxDistinct for EVERY column (bool and
+      // datetime included) — omitting it silently reported nDistinct = 0
+      if (!cfg.exactDistinct)
+        distinctAggs += approx_count_distinct(c, cfg.distinctRsd).as(s"$p::approxDistinct")
       t match {
         case ProfileType.Numeric =>
           val d = c.cast("double")
@@ -194,115 +401,97 @@ object Profiler {
           else
             percentile_approx(d, array(qs.map(lit): _*),
               lit((1.0 / cfg.quantileRelativeError).toInt))).as(s"$p::quantiles")
-          if (!cfg.exactDistinct)
-            distinctAggs += approx_count_distinct(c, cfg.distinctRsd).as(s"$p::approxDistinct")
         case ProfileType.Categorical =>
           val len = length(c).cast("double")
           scalarAggs += ((avg(len).as(s"$p::lenMean"), 2))
           scalarAggs += ((min(length(c)).as(s"$p::lenMin"), 1))
           scalarAggs += ((max(length(c)).as(s"$p::lenMax"), 1))
           sketchAggs += percentile_approx(len, lit(0.5), lit(10000)).as(s"$p::lenMedian")
-          if (!cfg.exactDistinct)
-            distinctAggs += approx_count_distinct(c, cfg.distinctRsd).as(s"$p::approxDistinct")
-          addTopkAgg(p)   // Categorical is the ONE type whose report surfaces topValues
+          if (sketchTopK) {
+            val k = math.min(cfg.topK, cfg.sketchTopKMaxTracked)
+            topkAggs += expr(
+              s"approx_top_k(cast(`$p` as string), $k, ${cfg.sketchTopKMaxTracked})")
+              .as(s"$p::topk")
+          }
         case ProfileType.Bool =>
           scalarAggs += ((count(when(c === true, 1)).as(s"$p::true"), 1))
           scalarAggs += ((count(when(c === false, 1)).as(s"$p::false"), 1))
-          // sketch mode reads $p::approxDistinct for EVERY cat-side
-          // column (bool/datetime included) — omitting the aggregate
-          // here silently reported nDistinct = 0
-          if (!cfg.exactDistinct)
-            distinctAggs += approx_count_distinct(c, cfg.distinctRsd).as(s"$p::approxDistinct")
         case ProfileType.DateTime =>
           val e = unix_timestamp(c.cast("timestamp"))
           scalarAggs += ((min(e).as(s"$p::epochMin"), 1))
           scalarAggs += ((max(e).as(s"$p::epochMax"), 1))
-          if (!cfg.exactDistinct)
-            distinctAggs += approx_count_distinct(c, cfg.distinctRsd).as(s"$p::approxDistinct")
         case _ => ()
       }
     }
-    val scalarChunks: Seq[Seq[Column]] = {
-      val chunks = scala.collection.mutable.ArrayBuffer[Seq[Column]]()
-      var cur = scala.collection.mutable.ArrayBuffer[Column]()
-      var w = 0
-      scalarAggs.foreach { case (e, width) =>
-        if (w + width > 90 && cur.nonEmpty) { chunks += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer[Column](); w = 0 }
-        cur += e; w += width
-      }
-      if (cur.nonEmpty) chunks += cur.toSeq
-      chunks.toSeq
-    }
-    // sketch chunks FIRST: the percentile job is the longest pass-A leg
-    // (sort-based ObjectHashAggregate) and pass D gates on its medians —
-    // launching it before the scalar chunks packs the pool better. The
-    // HLL distinct chunk (sketch mode only) runs CONCURRENTLY with it.
-    // r16: the sketch/distinct groups are themselves SPLIT into <= 6
-    // aggregates per job — a 16-column HLL group fused in ONE
-    // ObjectHashAggregate was the measured pass-A critical path (warm
-    // 4.5 s while most cores idled). Splitting changes ONLY which
-    // columns share a job — each column's aggregate still runs over the
-    // same partitions, so every result is bit-identical; the pool
-    // overlaps the extra jobs. r17 re-measured the VERDICT-suspected
-    // alternative (one fused job per family): q00b 11.5 s vs 8.7 s at
-    // local[8] — the split stays; the r16 32-core regression tracked
-    // the sketch-mode repartition (removed above), not this split.
-    val aJobs: Seq[Future[Row]] =
-      ((sketchAggs.toSeq.grouped(6) ++ distinctAggs.toSeq.grouped(6) ++
-        topkAggs.toSeq.grouped(6)).toSeq
-        .filter(_.nonEmpty) ++ scalarChunks)
-        .zipWithIndex.map { case (ch, i) =>
-          Future {
-            timed(s"A:agg-chunk$i")(working.agg(ch.head, ch.tail: _*).head())
-          }
-        }
-    lazy val aMap: Map[String, Any] = aJobs.flatMap { f =>
-      val r = Await.result(f, Duration.Inf)
-      r.schema.fieldNames.zip(r.toSeq)
-    }.toMap
-    def aAny(k: String): Option[Any] = aMap.get(k).filter(_ != null)
-    def aLong(k: String): Long =
-      aAny(k).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-    def aDouble(k: String): Double =
-      aAny(k).map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN)
-    lazy val nRows: Long = aLong("__n")
+    val scalarChunks = scalarAggs.foldLeft(Vector.empty[(Vector[Column], Int)]) {
+      case (chunks :+ ((cur, w)), (e, width)) if w + width <= 90 =>
+        chunks :+ ((cur :+ e, w + width))
+      case (chunks, (e, width)) => chunks :+ ((Vector(e), width))
+    }.map(_._1)
+    (sketchAggs.grouped(6) ++ distinctAggs.grouped(6) ++ topkAggs.grouped(6))
+      .map(_.toSeq).toSeq ++ scalarChunks
+  }
 
-    // ---- Pass B: per-(column,value) counts, as TWO concurrent jobs -----
-    // Replaces the reference's per-column value_counts jobs
-    // (series_wrappers.py:104-131) with explode->groupBy — split by
-    // declared type: the melt multiplies rows by column count, so two
-    // half-width jobs running concurrently finish in roughly half the
-    // wall time of one full-width job. The numeric half (B2) also
-    // carries each value's direct double cast, from which Spearman's
-    // rank table and the clamped-bin histogram fixups derive WITHOUT
-    // re-scanning the data. Distinct stats still group on the
-    // cast-to-string form — injective for every numeric type, unlike
-    // the double cast (longs above 2^53 collide there).
-    case class ValueInfo(
-        nDistinct: Long, nUnique: Long, chi2P: Option[Double],
-        topK: Seq[(String, Long)])
-    // Sketch-mode top values off the approx_top_k result (array of
-    // (item, count) structs, already count-descending). Null items
-    // dropped for parity with exact mode's `WHERE v IS NOT NULL`.
-    def sketchTopKFor(c: String): Seq[(String, Long)] =
-      aMap.get(s"$c::topk") match {
-        case Some(a: scala.collection.Seq[_]) =>
-          a.collect {
-            case r: Row if !r.isNullAt(0) => (r.getString(0), r.getLong(1))
-          }.toSeq
-        case _ => Seq.empty
-      }
-    val preNumeric = supported.collect {
-      case (f, ProfileType.Numeric) => f.name }
-    val preDatetime = supported.collect {
-      case (f, ProfileType.DateTime) => f.name }
-    val catSupported = supported.collect {
-      case (f, t) if t != ProfileType.Numeric => f.name }
-    // shared tail of both halves: distinct/unique/chi2 + top-K from a
-    // (c, v, cnt) table
-    def statsFromCounts(counts: DataFrame, names: Seq[String], label: String)
-        : Map[String, ValueInfo] = {
-      val distinctRows = timed(s"B:$label-stats")(counts.groupBy("c").agg(
+  // ---- Pass B: per-(column,value) counts, as TWO concurrent jobs -----
+  // Replaces the reference's per-column value_counts jobs
+  // (series_wrappers.py:104-131) with explode->groupBy — split by
+  // declared type: the melt multiplies rows by column count, so two
+  // half-width jobs running concurrently finish in roughly half the
+  // wall time of one full-width job. The numeric half (B2) also
+  // carries each value's direct double cast, from which Spearman's
+  // rank table and the clamped-bin histogram fixups derive WITHOUT
+  // re-scanning the data. Distinct stats still group on the
+  // cast-to-string form — injective for every numeric type, unlike
+  // the double cast (longs above 2^53 collide there).
+
+  /** (c, v, cnt): every non-null value of `cols`, cast to string, with
+    * its count — one melt → groupBy job over the data. */
+  private def valueCounts(working: DataFrame, cols: Seq[String]): DataFrame =
+    working
+      .select(explode(array(cols.map { c =>
+        struct(lit(c).as("c"), qcol(c).cast("string").as("v"))
+      }: _*)).as("kv"))
+      .select(col("kv.c").as("c"), col("kv.v").as("v"))
+      .where(col("v").isNotNull)
+      .groupBy("c", "v").agg(count(lit(1)).as("cnt"))
+
+  /** Pass B1 (exact mode): the categorical / boolean / datetime side.
+    * Pass E (char rollups) reads the persisted count table, so it is
+    * returned when char stats are on and released otherwise. */
+  private def passBCat(working: DataFrame, cols: Seq[String],
+      cfg: ProfileConfig): BResult = {
+    val (info, vc) = statsFromCounts(valueCounts(working, cols), cols, cfg, "cat")
+    if (cfg.computeCharStats) (info, Some(vc))
+    else { vc.unpersist(); (info, None) }
+  }
+
+  /** Pass B2 (exact mode): the numeric side, with the double cast
+    * carried per distinct value. vd (the exact double a DIRECT cast
+    * produces) is derived per DISTINCT value after the groupBy, not per
+    * input row: int/long/double/decimal strings parse back to the
+    * identical double, and floats are restored through an intermediate
+    * float cast (a float's shortest string parses to a different double
+    * than (double)f). Keeps the explode+shuffle rows as narrow as B1's. */
+  private def passBNum(working: DataFrame, cols: Seq[String],
+      floatCols: Seq[String], cfg: ProfileConfig): BResult = {
+    val vd =
+      if (floatCols.isEmpty) col("v").cast("double")
+      else when(col("c").isin(floatCols: _*),
+        col("v").cast("float").cast("double"))
+        .otherwise(col("v").cast("double"))
+    val (info, nc) = statsFromCounts(
+      valueCounts(working, cols).withColumn("vd", vd), cols, cfg, "num")
+    (info, Some(nc))
+  }
+
+  /** Shared tail of both pass-B halves: persists the (c, v, cnt) table,
+    * then distinct/unique/chi2 + top-K per column off it. Returns the
+    * persisted table, or releases it again when a job fails. */
+  private def statsFromCounts(counts: DataFrame, names: Seq[String],
+      cfg: ProfileConfig, label: String): (Map[String, ValueInfo], DataFrame) = {
+    val persisted = counts.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val distinctRows = timed(s"B:$label-stats")(persisted.groupBy("c").agg(
         count(lit(1)).as("k"),
         sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("u"),
         sum(col("cnt")).as("N"),
@@ -313,712 +502,501 @@ object Profiler {
         r.getAs[String]("c") -> ((k, r.getAs[Long]("u"),
           chi2PValue(chi2, k - 1)))
       }.toMap
-      val topMap = timed(s"B:$label-topk")(topKPerColumn(counts, cfg.topK))
-      names.map { c =>
+      val topMap = timed(s"B:$label-topk")(topKPerColumn(persisted, cfg.topK))
+      (names.map { c =>
         val (k, u, p) = distinctMap.getOrElse(c, (0L, 0L, 1.0))
         c -> ValueInfo(k, u, Some(p), topMap.getOrElse(c, Seq.empty))
-      }.toMap
-    }
-    // B1: categorical / boolean / datetime side
-    val valueInfoF: Future[(Map[String, ValueInfo], Option[DataFrame])] = Future {
-      if (catSupported.isEmpty) (Map.empty[String, ValueInfo], None)
-      else if (cfg.exactDistinct) {
-        val kvs = catSupported.map { c =>
-          struct(lit(c).as("c"), qcol(c).cast("string").as("v"))
-        }
-        val vc = working
-          .select(explode(array(kvs: _*)).as("kv"))
-          .select(col("kv.c").as("c"), col("kv.v").as("v"))
-          .where(col("v").isNotNull)
-          .groupBy("c", "v").agg(count(lit(1)).as("cnt"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val out = statsFromCounts(vc, catSupported, "cat")
-        // E (char rollups) reads the persisted cat-side table
-        if (cfg.computeCharStats) (out, Some(vc))
-        else { vc.unpersist(); (out, None) }
-      } else {
-        (catSupported.map { c =>
-          c -> ValueInfo(aLong(s"$c::approxDistinct"), -1L, None, sketchTopKFor(c))
-        }.toMap, None)
+      }.toMap, persisted)
+    } catch { case e: Throwable => persisted.unpersist(false); throw e }
+  }
+
+  /** Sketch mode's pass B: distinct estimates and top values straight
+    * from pass A's HLL and approx_top_k sketches (the latter an array of
+    * (item, count) structs, already count-descending). Null items are
+    * dropped for parity with exact mode's `WHERE v IS NOT NULL`. */
+  private def sketchValueInfo(a: PassA, cols: Seq[String]): Map[String, ValueInfo] =
+    cols.map { c =>
+      val top = a.any(s"$c::topk") match {
+        case Some(s: scala.collection.Seq[_]) =>
+          s.collect { case r: Row if !r.isNullAt(0) => (r.getString(0), r.getLong(1)) }.toSeq
+        case _ => Seq.empty
       }
-    }
-    // B2: numeric side, with the double cast carried per distinct value
-    val numStatsF: Future[(Map[String, ValueInfo], Option[DataFrame])] = Future {
-      if (preNumeric.isEmpty) (Map.empty[String, ValueInfo], None)
-      else if (cfg.exactDistinct) {
-        val kvs = preNumeric.map { c =>
-          struct(lit(c).as("c"), qcol(c).cast("string").as("v"))
+      c -> ValueInfo(a.long(s"$c::approxDistinct"), -1L, None, top)
+    }.toMap
+
+  /** Pass F: duplicate rows — (n - distinct rows, the most duplicated
+    * rows with their counts). Pandas semantics, NOT the reference spark
+    * impl, which is identically zero (dataframe_wrappers.py:542-550).
+    *
+    * By default rows group on a 128-bit row-hash pair: groupBy on the
+    * full row shuffles every byte of the table, while groupBy on
+    * (h1, h2) shuffles 16 bytes + a count per row — THE scale difference
+    * for pass F at 100 TB. Two independently-seeded XxHash64s make a
+    * false row-merge need a simultaneous 2^-128 double collision (~1e-15
+    * expected merges at 1e12 rows). Hash inputs interleave each column
+    * with its null flag: the hash mixer SKIPS null children, so without
+    * the flags ("a", null) and (null, "a") would hash identically in
+    * BOTH family members. Float/double normalize -0.0 -> 0.0 and NaN ->
+    * canonical NaN to match groupBy's key equality. The exact fallback
+    * groups on every column (collision-impossible, full-row shuffle;
+    * maps were already canonicalized to strings at profile() entry). */
+  private def passF(working: DataFrame, supported: Seq[StructField], a: PassA,
+      cfg: ProfileConfig): (Long, Seq[(Map[String, String], Long)]) = {
+    val names = supported.map(_.name)
+    def values(r: Row): Map[String, String] =
+      names.map(n => n -> Option(r.getAs[Any](n)).map(_.toString).orNull).toMap
+    if (!cfg.computeDuplicates || names.isEmpty) (0L, Seq.empty)
+    else {
+      import org.apache.spark.sql.graft.ColumnBridge
+      import org.apache.spark.sql.catalyst.expressions.XxHash64
+      val hashEx = supported.flatMap { f =>
+        val c = qcol(f.name)
+        val v = f.dataType match {
+          case DoubleType | FloatType =>
+            when(isnan(c), lit(Double.NaN).cast(f.dataType))
+              .when(c === 0.0, lit(0.0).cast(f.dataType))
+              .otherwise(c)
+          case _ => c
         }
-        // vd (the exact double a DIRECT cast produces) is derived per
-        // DISTINCT value after the groupBy, not per input row: int/
-        // long/double/decimal strings parse back to the identical
-        // double, and floats are restored through an intermediate
-        // float cast (a float's shortest string parses to a different
-        // double than (double)f). Keeps the explode+shuffle rows as
-        // narrow as B1's.
-        val floatCols = preNumeric.filter(c =>
-          fields.find(_.name == c).exists(_.dataType == FloatType))
-        val vdExpr =
-          if (floatCols.isEmpty) col("v").cast("double")
-          else when(col("c").isin(floatCols: _*),
-            col("v").cast("float").cast("double"))
-            .otherwise(col("v").cast("double"))
-        val nc = working
-          .select(explode(array(kvs: _*)).as("kv"))
-          .select(col("kv.c").as("c"), col("kv.v").as("v"))
-          .where(col("v").isNotNull)
-          .groupBy("c", "v").agg(count(lit(1)).as("cnt"))
-          .withColumn("vd", vdExpr)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        (statsFromCounts(nc, preNumeric, "num"), Some(nc))
-      } else {
-        (preNumeric.map { c =>
-          c -> ValueInfo(aLong(s"$c::approxDistinct"), -1L, None, sketchTopKFor(c))
-        }.toMap, None)
-      }
-    }
-    // Passes that do not depend on pass B's value info start BEFORE the
-    // await below, so they overlap with B's explode/groupBy instead of
-    // queueing behind it.
-    val supportedNames = supported.map(_._1.name)
-    val duplicatesF: Future[(Long, Seq[(Map[String, String], Long)])] = Future {
-      if (!cfg.computeDuplicates || supportedNames.isEmpty) (0L, Seq.empty[(Map[String, String], Long)])
-      else if (cfg.duplicatesByHash) {
-        // Pandas semantics (n - distinct rows) via a 128-bit row-hash
-        // pair: groupBy on the full row shuffles every byte of the
-        // table, while groupBy on (h1, h2) shuffles 16 bytes + a count
-        // per row — THE scale difference for pass F at 100 TB. Two
-        // independently-seeded XxHash64s make a false row-merge need a
-        // simultaneous 2^-128 double collision (~1e-15 expected merges
-        // at 1e12 rows). Hash inputs interleave each column with its
-        // null flag: the hash mixer SKIPS null children, so without the
-        // flags ("a", null) and (null, "a") would hash identically in
-        // BOTH family members. Float/double normalize -0.0 -> 0.0 and
-        // NaN -> canonical NaN to match groupBy's key equality.
-        import org.apache.spark.sql.graft.ColumnBridge
-        import org.apache.spark.sql.catalyst.expressions.XxHash64
-        val hashIn: Seq[Column] = supported.flatMap { case (f, _) =>
-          val c = qcol(f.name)
-          val v = f.dataType match {
-            case DoubleType | FloatType =>
-              when(isnan(c), lit(Double.NaN).cast(f.dataType))
-                .when(c === 0.0, lit(0.0).cast(f.dataType))
-                .otherwise(c)
-            case _ => c
-          }
-          Seq(v, isnull(c))
-        }
-        val hashEx = hashIn.map(ColumnBridge.expression)
-        val h1 = ColumnBridge.column(XxHash64(hashEx, 42L))
-        val h2 = ColumnBridge.column(XxHash64(hashEx, -7046029254386353131L))
-        val grouped = working
-          .groupBy(h1.as("__h1"), h2.as("__h2"))
-          .agg(count(lit(1)).as("__cnt"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val distinctRowCount = timed("F:dup-count")(grouped.count())
-        val topHash = timed("F:dup-top")(grouped.where(col("__cnt") > 1)
-          .orderBy(col("__cnt").desc, col("__h1"), col("__h2"))
-          .limit(cfg.duplicatesHead).collect())
-        grouped.unpersist()
-        val topSeq = if (topHash.isEmpty) Seq.empty[(Map[String, String], Long)]
+        Seq(v, isnull(c))
+      }.map(ColumnBridge.expression)
+      val h1 = ColumnBridge.column(XxHash64(hashEx, 42L))
+      val h2 = ColumnBridge.column(XxHash64(hashEx, -7046029254386353131L))
+      val (keyed, keys, order) =
+        if (cfg.duplicatesByHash)
+          (working, Seq(h1.as("__h1"), h2.as("__h2")),
+            Seq(col("__cnt").desc, col("__h1"), col("__h2")))
+        else (working.select(names.map(qcol): _*), names.map(qcol),
+          col("__cnt").desc +: names.map(qcol))
+      val grouped = keyed.groupBy(keys: _*).agg(count(lit(1)).as("__cnt"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val (distinctRowCount, top) =
+        try (timed("F:dup-count")(grouped.count()),
+          timed("F:dup-top")(grouped.where(col("__cnt") > 1).orderBy(order: _*)
+            .limit(cfg.duplicatesHead).collect()))
+        finally grouped.unpersist()
+      val topSeq =
+        if (!cfg.duplicatesByHash) top.map(r => values(r) -> r.getAs[Long]("__cnt")).toSeq
+        else if (top.isEmpty) Seq.empty
         else {
           // One representative row per listed group: a map-only scan
           // filtered to <= duplicatesHead hash pairs (ties at the cut
           // resolve by hash, not column order — counts are identical
           // either way). Driver-side sort restores the cnt-desc,
           // value-ascending presentation of the exact path.
-          val cntOf = topHash.map(r =>
-            (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-          val cond = topHash.map(r =>
-            h1 === r.getLong(0) && h2 === r.getLong(1)).reduce(_ || _)
+          val cntOf = top.map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+          val cond = top.map(r => h1 === r.getLong(0) && h2 === r.getLong(1)).reduce(_ || _)
           val reps = timed("F:dup-reps")(working.where(cond)
-            .select((supportedNames.map(qcol) :+ h1.as("__h1") :+
-              h2.as("__h2")): _*)
+            .select((names.map(qcol) :+ h1.as("__h1") :+ h2.as("__h2")): _*)
             .dropDuplicates("__h1", "__h2").collect())
-          reps.map { r =>
-            val vals = supportedNames.map(n =>
-              n -> Option(r.getAs[Any](n)).map(_.toString).orNull).toMap
-            val cnt = cntOf((r.getAs[Long]("__h1"), r.getAs[Long]("__h2")))
-            (vals, cnt)
-          }.sortBy { case (vals, cnt) =>
-            (-cnt, supportedNames.map(n => Option(vals(n)).getOrElse(""))
-              .mkString("\u0000"))
-          }.toSeq
+          reps.map(r => values(r) -> cntOf((r.getAs[Long]("__h1"), r.getAs[Long]("__h2"))))
+            .sortBy { case (vals, cnt) =>
+              (-cnt, names.map(n => Option(vals(n)).getOrElse("")).mkString("\u0000"))
+            }.toSeq
         }
-        (nRows - distinctRowCount, topSeq)
-      } else {
-        // Exact fallback: groupBy every column (collision-impossible,
-        // full-row shuffle). Pandas semantics (n - distinct rows), NOT
-        // the reference spark impl which is identically zero
-        // (dataframe_wrappers.py:542-550). (Maps were already
-        // canonicalized to strings at profile() entry.)
-        val grouped = working.select(supportedNames.map(qcol): _*)
-          .groupBy(supportedNames.map(qcol): _*)
-          .agg(count(lit(1)).as("__cnt"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val distinctRowCount = timed("F:dup-count")(grouped.count())
-        val top = timed("F:dup-top")(grouped.where(col("__cnt") > 1)
-          .orderBy((col("__cnt").desc +: supportedNames.map(qcol)): _*)
-          .limit(cfg.duplicatesHead).collect())
-        grouped.unpersist()
-        val dups = nRows - distinctRowCount
-        val topSeq = top.map { r =>
-          supportedNames.map(n =>
-            n -> Option(r.getAs[Any](n)).map(_.toString).orNull).toMap ->
-            r.getAs[Long]("__cnt")
-        }.toSeq
-        (dups, topSeq)
-      }
+      (a.nRows - distinctRowCount, topSeq)
     }
-    val headF: Future[Seq[Map[String, String]]] = Future {
-      // head rows come from the PRE-repartition plan: a round-robin
-      // exchange reorders rows, and the sample must stay byte-identical
-      // to the unrepartitioned profile (limit(10) on the raw scan reads
-      // almost nothing, so this costs ~0 even when `working` differs)
-      (if (repartitioned) canon else working)
-        .limit(cfg.sampleHead).collect().map { r =>
-        fields.map(f =>
-          f.name -> Option(r.getAs[Any](f.name)).map(_.toString).orNull).toMap
-      }.toSeq
+  }
+
+  /** The report's head sample: the first `sampleHead` rows as strings. */
+  private def passHead(source: DataFrame, fields: Seq[StructField],
+      cfg: ProfileConfig): Seq[Map[String, String]] =
+    source.limit(cfg.sampleHead).collect().map { r =>
+      fields.map(f =>
+        f.name -> Option(r.getAs[Any](f.name)).map(_.toString).orNull).toMap
+    }.toSeq
+
+  // ---- Pass C: all histograms in one explode->groupBy ----------------
+
+  /** Histogram targets off pass A's min/max: numeric columns with
+    * `numericBins(c)` bins, datetime columns with the full bin count.
+    * All-null columns (NaN min/max) get none. */
+  private def histTargets(a: PassA, numeric: Seq[String], datetime: Seq[String],
+      cfg: ProfileConfig)(numericBins: String => Int): Seq[HistTarget] =
+    (numeric.map(c => HistTarget(c, qcol(c).cast("double"),
+      a.double(s"$c::min"), a.double(s"$c::max"), numericBins(c))) ++
+      datetime.map(c => HistTarget(c,
+        unix_timestamp(qcol(c).cast("timestamp")).cast("double"),
+        a.long(s"$c::epochMin").toDouble, a.long(s"$c::epochMax").toDouble,
+        cfg.histogramBins)))
+      .filter(t => !t.min.isNaN && !t.max.isNaN)
+
+  /** Folds (bin, count) pairs into one histogram per target; bins
+    * outside [0, bins) are dropped. */
+  private def foldHistograms(targets: Seq[HistTarget])(
+      binCounts: HistTarget => Iterable[(Int, Long)]): Map[String, Histogram] =
+    targets.map { t =>
+      val counts = Array.fill(t.bins)(0L)
+      binCounts(t).foreach { case (b, n) => if (b >= 0 && b < t.bins) counts(b) += n }
+      val w = if (t.max > t.min) (t.max - t.min) / t.bins else 1.0
+      t.name -> Histogram(counts.toSeq, (0 to t.bins).map(i => t.min + i * w))
+    }.toMap
+
+  /** Every target's histogram from one explode → groupBy(c, bin) job
+    * over the data. */
+  private def runHistogramJob(working: DataFrame, targets: Seq[HistTarget],
+      label: String): Map[String, Histogram] =
+    if (targets.isEmpty) Map.empty
+    else {
+      val binStructs = targets.map { t =>
+        struct(lit(t.name).as("c"),
+          when(t.value.isNotNull && !t.value.isNaN &&
+            t.value =!= Double.PositiveInfinity && t.value =!= Double.NegativeInfinity,
+            histogramBin(t.value, t.min, t.max, t.bins)).as("bin"))
+      }
+      val rows = timed(label)(working
+        .select(explode(array(binStructs: _*)).as("kb"))
+        .select(col("kb.c").as("c"), col("kb.bin").as("bin"))
+        .where(col("bin").isNotNull)
+        .groupBy("c", "bin").agg(count(lit(1)).as("cnt"))
+        .collect())
+      val byCol = rows.groupBy(_.getAs[String]("c"))
+      foldHistograms(targets)(t => byCol.getOrElse(t.name, Array.empty[Row])
+        .map(r => (r.getAs[Int]("bin"), r.getAs[Long]("cnt"))))
     }
 
-    // ---- Pass C: all histograms in one explode->groupBy ----------------
-    // (name, min, max, bins) -> one explode job over the data; shared by
-    // the pre-await full-bin pass and the sketch-mode clamped pass.
-    def runHistogramJob(targets: Seq[(String, Double, Double, Int)],
-        label: String): Map[String, Histogram] =
-      if (targets.isEmpty) Map.empty
+  /** Exact-by-construction histogram from B2's numeric value counts:
+    * bin each distinct value (its exact double is carried in `vd`)
+    * weighted by its count. Only used for columns with
+    * n_distinct < bins, so the collect is bounded by bins x cols. */
+  private def histogramsFromCounts(nc: DataFrame,
+      targets: Seq[HistTarget]): Map[String, Histogram] =
+    if (targets.isEmpty) Map.empty
+    else {
+      val rows = timed("C:hist-fixup")(
+        nc.where(col("c").isin(targets.map(_.name): _*))
+          .select(col("c"), col("vd"), col("cnt")).collect())
+      val byCol = rows.groupBy(_.getAs[String]("c"))
+      foldHistograms(targets) { t =>
+        byCol.getOrElse(t.name, Array.empty[Row]).toSeq
+          .map(r => (r.getAs[Double]("vd"), r.getAs[Long]("cnt")))
+          .collect { case (x, n) if !x.isNaN && !x.isInfinite =>
+            // identical IEEE arithmetic to histogramBin
+            val b = if (t.max <= t.min) 0
+              else math.min(math.floor((x - t.min) / ((t.max - t.min) / t.bins)),
+                (t.bins - 1).toDouble).toInt
+            (b, n)
+          }
+      }
+    }
+
+  /** Pass C, exact mode, launched BEFORE the pass-B await so its scan
+    * overlaps B's explode/groupBy: histograms for every declared-numeric
+    * + datetime column at the FULL bin count. Columns whose effective
+    * bin count is smaller (n_distinct < bins) are re-derived afterwards
+    * from B2's value-count table by [[passC]] — a bounded driver-side
+    * fixup, not a second scan. */
+  private def passCFull(working: DataFrame, a: PassA, numeric: Seq[String],
+      datetime: Seq[String], cfg: ProfileConfig): Map[String, Histogram] =
+    runHistogramJob(working,
+      histTargets(a, numeric, datetime, cfg)(_ => cfg.histogramBins), "C:histograms")
+
+  /** Pass C (post-B): clamp/fix up the precomputed histograms. A numeric
+    * column with n_distinct < histogramBins gets min(bins, n_distinct)
+    * bins (reference parity). Its exact histogram is DERIVED from pass
+    * B's value-count table: binning each distinct value weighted by its
+    * count is identical to binning each row, and such a column has
+    * < bins distinct values by definition, so the collect is bounded.
+    * Demoted columns lose their histogram. Sketch mode has no full-bin
+    * pass to fix up (pass B is free there, no value-count scan to
+    * overlap), so one clamped job after it is the cheapest plan. */
+  private def passC(working: DataFrame, a: PassA, full: Map[String, Histogram],
+      numCounts: Option[DataFrame], numericCols: Seq[String],
+      datetimeCols: Seq[String], nDistinct: String => Long,
+      cfg: ProfileConfig): Map[String, Histogram] = {
+    def clampedBins(c: String): Int =
+      math.min(cfg.histogramBins, math.max(1, nDistinct(c).toInt))
+    if (!cfg.computeHistograms) Map.empty
+    else if (cfg.exactDistinct) {
+      val clamped = histTargets(a,
+        numericCols.filter(clampedBins(_) != cfg.histogramBins), Nil, cfg)(clampedBins)
+      val keep = (numericCols ++ datetimeCols).toSet
+      full.view.filterKeys(keep).toMap ++
+        numCounts.fold(Map.empty[String, Histogram])(histogramsFromCounts(_, clamped))
+    } else
+      runHistogramJob(working,
+        histTargets(a, numericCols, datetimeCols, cfg)(clampedBins), "C:histograms")
+  }
+
+  /** Pass D: MAD for all numeric columns in one agg, around pass A's
+    * medians. */
+  private def passD(working: DataFrame, a: PassA, numericCols: Seq[String],
+      cfg: ProfileConfig): Map[String, Double] =
+    if (!cfg.computeMad || numericCols.isEmpty) Map.empty
+    else {
+      val medians = numericCols.map { c =>
+        c -> (a.any(s"$c::quantiles").orNull match {
+          case s: scala.collection.Seq[_] if s.nonEmpty =>
+            val idx = cfg.quantiles.indexOf(0.5)
+            if (idx >= 0) s(idx).asInstanceOf[Number].doubleValue else Double.NaN
+          case _ => Double.NaN
+        })
+      }.filter(!_._2.isNaN)
+      if (medians.isEmpty) Map.empty
       else {
-        val binStructs = targets.map { case (c, mn, mx, bins) =>
-          val base = fields.find(_.name == c).get.dataType match {
-            case _: TimestampType | DateType | TimestampNTZType =>
-              unix_timestamp(qcol(c).cast("timestamp")).cast("double")
-            case _ => qcol(c).cast("double")
-          }
-          struct(lit(c).as("c"),
-            when(base.isNotNull && !base.isNaN &&
-              base =!= Double.PositiveInfinity && base =!= Double.NegativeInfinity,
-              histogramBin(base, mn, mx, bins)).as("bin"))
+        val exprs = medians.map { case (c, med) =>
+          (if (cfg.exactQuantiles)
+            expr(s"percentile(abs(cast(`$c` as double) - $med), 0.5)")
+          else
+            percentile_approx(abs(qcol(c).cast("double") - lit(med)), lit(0.5),
+              lit((1.0 / cfg.quantileRelativeError).toInt))).as(c)
         }
-        val rows = timed(label)(working
-          .select(explode(array(binStructs: _*)).as("kb"))
-          .select(col("kb.c").as("c"), col("kb.bin").as("bin"))
-          .where(col("bin").isNotNull)
-          .groupBy("c", "bin").agg(count(lit(1)).as("cnt"))
-          .collect())
-        val byCol = rows.groupBy(_.getAs[String]("c"))
-        targets.map { case (c, mn, mx, bins) =>
-          val counts = Array.fill(bins)(0L)
-          byCol.getOrElse(c, Array.empty[Row]).foreach { r =>
-            val b = r.getAs[Int]("bin")
-            if (b >= 0 && b < bins) counts(b) = r.getAs[Long]("cnt")
-          }
-          c -> assembleHistogram(counts, mn, mx, bins)
+        val r = timed("D:mad")(working.agg(exprs.head, exprs.tail: _*).head())
+        medians.map { case (c, _) =>
+          c -> Option(r.getAs[Any](c)).map(_.asInstanceOf[Number].doubleValue)
+            .getOrElse(Double.NaN)
         }.toMap
       }
-    // Exact-by-construction histogram from B2's numeric value counts:
-    // bin each distinct value (its exact double is carried in `vd`)
-    // weighted by its count. Only used for columns with
-    // n_distinct < bins, so the collect is bounded by bins x cols.
-    def histogramsFromCounts(nc: DataFrame,
-        targets: Seq[(String, Double, Double, Int)]): Map[String, Histogram] =
-      if (targets.isEmpty) Map.empty
-      else {
-        val rows = timed("C:hist-fixup")(
-          nc.where(col("c").isin(targets.map(_._1): _*))
-            .select(col("c"), col("vd"), col("cnt")).collect())
-        val byCol = rows.groupBy(_.getAs[String]("c"))
-        targets.map { case (c, mn, mx, bins) =>
-          val counts = Array.fill(bins)(0L)
-          byCol.getOrElse(c, Array.empty[Row]).foreach { r =>
-            val x = r.getAs[Double]("vd")
-            if (!x.isNaN && !x.isInfinite) {
-              // identical IEEE arithmetic to histogramBin
-              val b = if (mx <= mn) 0
-                else math.min(math.floor((x - mn) / ((mx - mn) / bins)),
-                  (bins - 1).toDouble).toInt
-              if (b >= 0 && b < bins) counts(b) += r.getAs[Long]("cnt")
-            }
-          }
-          c -> assembleHistogram(counts, mn, mx, bins)
-        }.toMap
-      }
-    // Exact mode: histograms for every declared-numeric + datetime column
-    // at the FULL bin count, launched BEFORE the pass-B await so the scan
-    // overlaps B's explode/groupBy. Columns whose effective bin count is
-    // smaller (n_distinct < bins) are re-derived afterwards from B2's
-    // value-count table — a bounded driver-side fixup, not a second scan.
-    val histPreF: Future[Map[String, Histogram]] =
-      if (!cfg.computeHistograms || !cfg.exactDistinct)
-        Future.successful(Map.empty)
-      else Future {
-        val targets =
-          (preNumeric.map(c =>
-            (c, aDouble(s"$c::min"), aDouble(s"$c::max"), cfg.histogramBins))
-            ++ preDatetime.map(c =>
-              (c, aLong(s"$c::epochMin").toDouble,
-                aLong(s"$c::epochMax").toDouble, cfg.histogramBins)))
-            .filter(t => !t._2.isNaN && !t._3.isNaN)
-        runHistogramJob(targets, "C:histograms")
-      }
-    // Spearman's rank table derives from B2's numeric counts — one small
-    // aggregation over distinct cells, not another data scan. When those
-    // counts prove the whole rank table driver-sized, the per-column
-    // rank maps are also built HERE, pre-demotion, so the post-B
-    // critical path runs only the one-scan co-moment job. (Awaiting
-    // numStatsF from this pool thread is FIFO-safe: it was created
-    // earlier.)
-    val spearmanRanksF: Future[Option[Either[
-        Map[String, scala.collection.mutable.LongMap[Double]], DataFrame]]] =
-      if (!cfg.computeCorrelations || !cfg.computeSpearman ||
-        preNumeric.size < 2) Future.successful(None)
-      else Future {
-        Await.result(numStatsF, Duration.Inf) match {
-          case (numInfo, Some(nc)) =>
-            // rank in DOUBLE space (ties averaged across values that
-            // collide under the cast, matching the direct-melt plan):
-            // re-aggregate the string-keyed counts by vd
-            val total = preNumeric.iterator.map(c => numInfo(c).nDistinct).sum
-            if (total <= cfg.spearmanBroadcastMaxDistinct)
-              // driver-sized: rank IN the driver off one bounded collect
-              // of the PERSISTED count table — no vd re-aggregation
-              // shuffle (the driver accumulator folds string-distinct
-              // values that collide under the double cast), and the
-              // distributed ranking would only have been collected into
-              // these maps anyway
-              Some(Left(timed("G:spearman-maps")(buildRankMapsFromCounts(
-                nc.where(!col("vd").isNaN)
-                  .select(col("c"), col("vd").as("v"), col("cnt")),
-                preNumeric))))
-            else {
-              val dcounts = nc.where(!col("vd").isNaN)
-                .select(col("c"), col("vd").as("v"), col("cnt"))
-                .groupBy("c", "v").agg(sum(col("cnt")).as("cnt"))
-              Some(Right(timed("G:spearman-ranks")(
-                graft.ops.Ranking.avgRanksFromCounts(dcounts, "c", "v"))))
-            }
-          case (numInfo, None) =>
-            // sketch mode: no counts table — rank from a direct melt
-            // (one groupBy shuffle). The broadcast one-scan plan is
-            // still gated here, on the HLL++ distinct ESTIMATES with a
-            // 1.2x safety margin for sketch error (3 rsd = 3%; 20% is
-            // comfortably past any excursion): a 100 TB rank table
-            // still takes the shuffle plan, but a driver-sized one gets
-            // the same zero-shuffle co-moment pass as exact mode.
-            val kv = working.select(explode(array(preNumeric.map(c =>
-                struct(lit(c).as("c"), qcol(c).cast("double").as("v"))): _*)).as("kv"))
-              .select(col("kv.c").as("c"), col("kv.v").as("v"))
-              .where(col("v").isNotNull && !col("v").isNaN)
-            val total = preNumeric.iterator.map(c => numInfo(c).nDistinct).sum
-            if (total * 1.2 <= cfg.spearmanBroadcastMaxDistinct)
-              Some(Left(timed("G:spearman-maps")(buildRankMapsFromCounts(
-                kv.groupBy("c", "v").agg(count(lit(1)).as("cnt")),
-                preNumeric))))
-            else Some(Right(timed("G:spearman-ranks")(
-              graft.ops.Ranking.avgRanks(kv, "c", "v"))))
-        }
-      }
-
-    val (catInfo, vcTable: Option[DataFrame]) =
-      Await.result(valueInfoF, Duration.Inf)
-    val (numInfo, numCounts: Option[DataFrame]) =
-      Await.result(numStatsF, Duration.Inf)
-    val valueInfo: Map[String, ValueInfo] = catInfo ++ numInfo
-    // Demotion: numeric with few distinct values profiles as categorical
-    // (reference: typeset_relations.py:68-77).
-    val typed: Seq[(StructField, ProfileType)] = supported.map { case (f, t) =>
-      val demote = t == ProfileType.Numeric && cfg.exactDistinct &&
-        valueInfo(f.name).nDistinct <= cfg.lowCategoricalThreshold
-      f -> (if (demote) ProfileType.Categorical else t)
-    }
-    val numericCols = typed.collect { case (f, ProfileType.Numeric) => f.name }
-    val categoricalCols = typed.collect { case (f, ProfileType.Categorical) => f.name }
-    val datetimeCols = typed.collect { case (f, ProfileType.DateTime) => f.name }
-
-    // ---- Pass C (post-B): clamp/fix up the precomputed histograms ------
-    // A numeric column with n_distinct < histogramBins gets
-    // min(bins, n_distinct) bins (reference parity). Its exact histogram
-    // is DERIVED from pass B's value-count table: binning each distinct
-    // value weighted by its count is identical to binning each row, and
-    // such a column has < bins distinct values by definition, so the
-    // collect is bounded. Demoted columns lose their histogram.
-    val histogramsF: Future[Map[String, Histogram]] = Future {
-      if (!cfg.computeHistograms) Map.empty
-      else if (cfg.exactDistinct) {
-        val full = Await.result(histPreF, Duration.Inf)
-        val clamped: Seq[(String, Double, Double, Int)] = numericCols.flatMap { c =>
-          val bins = math.min(cfg.histogramBins,
-            math.max(1, valueInfo(c).nDistinct.toInt))
-          if (bins == cfg.histogramBins) None
-          else Some((c, aDouble(s"$c::min"), aDouble(s"$c::max"), bins))
-        }.filter(t => !t._2.isNaN && !t._3.isNaN)
-        val fixed = numCounts match {
-          case Some(nc) => histogramsFromCounts(nc, clamped)
-          case None => runHistogramJob(clamped, "C:hist-clamped")
-        }
-        val keep = (numericCols ++ datetimeCols).toSet
-        full.view.filterKeys(keep).toMap ++ fixed
-      } else {
-        // sketch mode: pass B is free (no value-count scan to overlap),
-        // so one clamped job after it is the cheapest plan
-        val targets: Seq[(String, Double, Double, Int)] =
-          (numericCols.map { c =>
-            (c, aDouble(s"$c::min"), aDouble(s"$c::max"),
-              math.min(cfg.histogramBins,
-                math.max(1, valueInfo(c).nDistinct.toInt)))
-          } ++ datetimeCols.map { c =>
-            (c, aLong(s"$c::epochMin").toDouble, aLong(s"$c::epochMax").toDouble,
-              cfg.histogramBins)
-          }).filter(t => !t._2.isNaN && !t._3.isNaN)
-        runHistogramJob(targets, "C:histograms")
-      }
     }
 
-    // ---- Pass D: MAD for all numeric columns in one agg ----------------
-    val madsF: Future[Map[String, Double]] = Future {
-      if (!cfg.computeMad || numericCols.isEmpty) Map.empty
-      else {
-        val medians = numericCols.map { c =>
-          c -> {
-            val q = aAny(s"$c::quantiles").orNull
-            q match {
-              case s: scala.collection.Seq[_] if s.nonEmpty =>
-                val idx = cfg.quantiles.indexOf(0.5)
-                if (idx >= 0) s(idx).asInstanceOf[Number].doubleValue else Double.NaN
-              case _ => Double.NaN
-            }
-          }
-        }.filter(!_._2.isNaN)
-        if (medians.isEmpty) Map.empty
-        else {
-          val exprs = medians.map { case (c, med) =>
-            (if (cfg.exactQuantiles)
-              expr(s"percentile(abs(cast(`$c` as double) - $med), 0.5)")
-            else
-              percentile_approx(abs(qcol(c).cast("double") - lit(med)), lit(0.5),
-                lit((1.0 / cfg.quantileRelativeError).toInt))).as(c)
-          }
-          val r = timed("D:mad")(working.agg(exprs.head, exprs.tail: _*).head())
-          medians.map { case (c, _) =>
-            c -> Option(r.getAs[Any](c)).map(_.asInstanceOf[Number].doubleValue)
-              .getOrElse(Double.NaN)
-          }.toMap
+  /** Pass E: char-level rollups of the string columns `cols`, weighting
+    * each distinct value's chars by the value's count: an explode over
+    * B1's (small) distinct-value table, not the data. */
+  private def passE(vcTable: Option[DataFrame], cols: Seq[String]): Map[String, CharStats] =
+    vcTable match {
+      case Some(vc) if cols.nonEmpty =>
+        val chars = vc
+          .where(col("c").isin(cols: _*))
+          .select(col("c"), col("cnt"),
+            explode(split(col("v"), "")).as("ch"))
+          .where(length(col("ch")) > 0)
+          .groupBy("c", "ch").agg(sum(col("cnt")).as("n"))
+        val w = Window.partitionBy("c").orderBy(col("n").desc, col("ch"))
+        val top = timed("E:chars")(chars.withColumn("rn", row_number().over(w))
+          .where(col("rn") <= 1000).collect())
+        top.groupBy(_.getAs[String]("c")).map { case (c, rs) =>
+          val pairs = rs.sortBy(r => (-r.getAs[Long]("n"), r.getAs[String]("ch")))
+            .map(r => r.getAs[String]("ch") -> r.getAs[Long]("n")).toSeq
+          val total = pairs.map(_._2).sum
+          def rollup(f: Int => String): Map[String, Long] =
+            pairs.groupBy { case (ch, _) => f(ch.codePointAt(0)) }
+              .map { case (k, vs) => k -> vs.map(_._2).sum }
+          c -> CharStats(
+            nCharacters = total,
+            nCharactersDistinct = pairs.size.toLong,
+            topChars = pairs.take(100),
+            categoryCounts = rollup(cp =>
+              unicodeCategoryName(Character.getType(cp))),
+            blockCounts = rollup(cp =>
+              Option(Character.UnicodeBlock.of(cp))
+                .map(_.toString).getOrElse("UNKNOWN")),
+            scriptCounts = rollup(cp =>
+              Character.UnicodeScript.of(cp).name))
+        }
+      case _ => Map.empty
+    }
+
+  /** Every pairwise `corr` of `cols` over `data`, as a symmetric matrix
+    * (NaN where corr is null). corr carries 6 aggregate buffer fields;
+    * > ~16 pairs in one agg drops the HashAggregate out of codegen (the
+    * pass-A lesson) — so 15-pair chunks, run SEQUENTIALLY: nesting
+    * Futures on the profiler's bounded pool and awaiting them from a
+    * pool thread deadlocks at poolSize=1 (the only thread blocks on
+    * tasks that can never schedule). */
+  private def corrMatrix(method: String, data: DataFrame, cols: Seq[String])(
+      value: String => Column): CorrelationMatrix = {
+    val pairs = for { i <- cols.indices; j <- (i + 1) until cols.size } yield (i, j)
+    val rs = pairs.zipWithIndex.grouped(15).flatMap { ch =>
+      val exprs = ch.map { case ((i, j), k) =>
+        corr(value(cols(i)), value(cols(j))).as(s"c$k")
+      }
+      data.agg(exprs.head, exprs.tail: _*).head().toSeq
+    }.toSeq
+    val m = Array.fill(cols.size, cols.size)(1.0)
+    pairs.zip(rs).foreach { case ((i, j), r) =>
+      val v = Option(r).map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN)
+      m(i)(j) = v; m(j)(i) = v
+    }
+    CorrelationMatrix(method, cols, m.map(_.toSeq).toSeq)
+  }
+
+  /** Pass G: Pearson over the numeric columns. */
+  private def passPearson(working: DataFrame, numericCols: Seq[String],
+      cfg: ProfileConfig): Option[CorrelationMatrix] =
+    if (!cfg.computeCorrelations || numericCols.size < 2) None
+    else Some(timed("G:pearson")(
+      corrMatrix("pearson", working, numericCols)(c => qcol(c).cast("double"))))
+
+  /** Spearman's rank state, built concurrently with pass B. The rank
+    * table derives from B2's numeric counts — one small aggregation over
+    * distinct cells, not another data scan. When those counts prove the
+    * whole rank table driver-sized, the per-column rank maps are built
+    * HERE, pre-demotion, so the post-B critical path runs only the
+    * one-scan co-moment job (Left); above the gate the SHUFFLE rank
+    * table is the 100 TB fallback (Right). */
+  private def passSpearmanRanks(working: DataFrame, cols: Seq[String],
+      numStats: BResult, cfg: ProfileConfig): Either[RankMaps, DataFrame] = {
+    val (numInfo, numCounts) = numStats
+    val total = cols.iterator.map(c => numInfo(c).nDistinct).sum
+    numCounts match {
+      case Some(nc) =>
+        // rank in DOUBLE space (ties averaged across values that
+        // collide under the cast, matching the direct-melt plan):
+        // re-aggregate the string-keyed counts by vd
+        val counts = nc.where(!col("vd").isNaN)
+          .select(col("c"), col("vd").as("v"), col("cnt"))
+        if (total <= cfg.spearmanBroadcastMaxDistinct)
+          // driver-sized: rank IN the driver off one bounded collect
+          // of the PERSISTED count table — no vd re-aggregation
+          // shuffle (the driver accumulator folds string-distinct
+          // values that collide under the double cast), and the
+          // distributed ranking would only have been collected into
+          // these maps anyway
+          Left(timed("G:spearman-maps")(buildRankMapsFromCounts(counts, cols)))
+        else
+          Right(timed("G:spearman-ranks")(graft.ops.Ranking.avgRanksFromCounts(
+            counts.groupBy("c", "v").agg(sum(col("cnt")).as("cnt")), "c", "v")))
+      case None =>
+        // sketch mode: no counts table — rank from a direct melt
+        // (one groupBy shuffle). The driver-side rank maps are still
+        // gated here, on the HLL++ distinct ESTIMATES with a 1.2x
+        // safety margin for sketch error (3 rsd = 3%; 20% is
+        // comfortably past any excursion): a 100 TB rank table still
+        // takes the shuffle plan, but a driver-sized one gets the same
+        // zero-shuffle co-moment pass as exact mode.
+        val kv = working.select(explode(array(cols.map(c =>
+            struct(lit(c).as("c"), qcol(c).cast("double").as("v"))): _*)).as("kv"))
+          .select(col("kv.c").as("c"), col("kv.v").as("v"))
+          .where(col("v").isNotNull && !col("v").isNaN)
+        if (total * 1.2 <= cfg.spearmanBroadcastMaxDistinct)
+          Left(timed("G:spearman-maps")(buildRankMapsFromCounts(
+            kv.groupBy("c", "v").agg(count(lit(1)).as("cnt")), cols)))
+        else Right(timed("G:spearman-ranks")(
+          graft.ops.Ranking.avgRanks(kv, "c", "v")))
+    }
+  }
+
+  /** Pass G: Spearman over the post-demotion numeric columns, applying
+    * the rank state [[passSpearmanRanks]] built before demotion. */
+  private def passSpearman(working: DataFrame, numericCols: Seq[String],
+      ranks: Either[RankMaps, DataFrame], repartitioned: Boolean): CorrelationMatrix =
+    ranks match {
+      case Left(maps) =>
+        // r17: the co-moment scan is the LAST job of the profile (it
+        // gates on demotion, so the pool is idle by now) — at the
+        // passWidth the persisted table runs 1.6 s on 8 of 32 cores.
+        // When the input was repartition-eligible (>= 8 MB, scan
+        // under-parallelized), widen just this NARROW projection
+        // (numeric doubles only) to the full core count: the
+        // exchange is tens of MB against a 3x scan win. Partition
+        // regrouping moves the Welford pairwise merge order — the
+        // same last-ulp drift class as the pass-width repartition
+        // itself (gates round at 4-6 dp); sub-floor fixtures keep
+        // the historical plan byte-for-byte.
+        val base =
+          if (repartitioned)
+            working.select(numericCols.map(qcol): _*).repartition(
+              working.sparkSession.sparkContext.defaultParallelism)
+          else working
+        timed("G:spearman")(spearmanViaRankMaps(base, numericCols, maps))
+      case Right(rankTable) =>
+        timed("G:spearman")(spearmanMatrix(working, numericCols, Some(rankTable)))
+    }
+
+  /** Pass H: Cramer's V over all pairs of `cols` in one explode →
+    * groupBy job of contingency counts. */
+  private def passH(working: DataFrame, cols: Seq[String],
+      cfg: ProfileConfig): Seq[CramersResult] =
+    if (!cfg.computeCramers || cols.size < 2) Seq.empty
+    else {
+      val pairs = for {
+        i <- cols.indices; j <- (i + 1) until cols.size
+      } yield (cols(i), cols(j))
+      val pairStructs = pairs.map { case (a, b) =>
+        struct(lit(s"${a}|${b}").as("p"),
+          qcol(a).cast("string").as("va"), qcol(b).cast("string").as("vb"))
+      }
+      val ct = timed("H:cramers")(working
+        .select(explode(array(pairStructs: _*)).as("kv"))
+        .select(col("kv.p").as("p"), col("kv.va").as("va"), col("kv.vb").as("vb"))
+        .where(col("va").isNotNull && col("vb").isNotNull)
+        .groupBy("p", "va", "vb").agg(count(lit(1)).as("cnt"))
+        .collect())
+      val byPair = ct.groupBy(_.getAs[String]("p"))
+      pairs.flatMap { case (a, b) =>
+        byPair.get(s"${a}|${b}").map { rows =>
+          val obs = rows.map(r => (r.getAs[String]("va"),
+            r.getAs[String]("vb"), r.getAs[Long]("cnt")))
+          val n = obs.map(_._3).sum
+          val rowTotals = obs.groupBy(_._1).map { case (k, v) => k -> v.map(_._3).sum }
+          val colTotals = obs.groupBy(_._2).map { case (k, v) => k -> v.map(_._3).sum }
+          val chi2 = (for {
+            (ra, rt) <- rowTotals; (cb, ctot) <- colTotals
+          } yield {
+            val e = rt.toDouble * ctot / n
+            val o = obs.find(t => t._1 == ra && t._2 == cb).map(_._3).getOrElse(0L)
+            (o - e) * (o - e) / e
+          }).sum
+          val dof = (rowTotals.size - 1L) * (colTotals.size - 1L)
+          CramersResult(a, b, chi2, chi2PValue(chi2, dof),
+            correctedCramersV(chi2, n, rowTotals.size.toLong, colTotals.size.toLong))
         }
       }
     }
 
-    // ---- Pass E: char-level rollups from the distinct-value table ------
-    val charStatsF: Future[Map[String, CharStats]] = Future {
-      vcTable match {
-        case Some(vc) if categoricalCols.nonEmpty =>
-          val stringCats = categoricalCols.filter(c =>
-            fields.find(_.name == c).exists(_.dataType == StringType))
-          if (stringCats.isEmpty) Map.empty
-          else {
-            // Weight each distinct value's chars by the value's count:
-            // explode over the (small) distinct-value table, not the data.
-            val chars = vc
-              .where(col("c").isin(stringCats: _*))
-              .select(col("c"), col("cnt"),
-                explode(split(col("v"), "")).as("ch"))
-              .where(length(col("ch")) > 0)
-              .groupBy("c", "ch").agg(sum(col("cnt")).as("n"))
-            val w = Window.partitionBy("c").orderBy(col("n").desc, col("ch"))
-            val top = timed("E:chars")(chars.withColumn("rn", row_number().over(w))
-              .where(col("rn") <= 1000).collect())
-            // vc stays persisted: pass G's Spearman ranks read it too;
-            // released once at the end of profile()
-            val byCol = top.groupBy(_.getAs[String]("c"))
-            byCol.map { case (c, rs) =>
-              val pairs = rs.sortBy(r => (-r.getAs[Long]("n"), r.getAs[String]("ch")))
-                .map(r => r.getAs[String]("ch") -> r.getAs[Long]("n")).toSeq
-              val total = pairs.map(_._2).sum
-              def rollup(f: Int => String): Map[String, Long] =
-                pairs.groupBy { case (ch, _) => f(ch.codePointAt(0)) }
-                  .map { case (k, vs) => k -> vs.map(_._2).sum }
-              c -> CharStats(
-                nCharacters = total,
-                nCharactersDistinct = pairs.size.toLong,
-                topChars = pairs.take(100),
-                categoryCounts = rollup(cp =>
-                  unicodeCategoryName(Character.getType(cp))),
-                blockCounts = rollup(cp =>
-                  Option(Character.UnicodeBlock.of(cp))
-                    .map(_.toString).getOrElse("UNKNOWN")),
-                scriptCounts = rollup(cp =>
-                  Character.UnicodeScript.of(cp).name))
-            }
-          }
-        case _ => Map.empty
+  /** Pass K: Kendall tau-b per numeric pair (off by default, reference
+    * parity). */
+  private def passK(working: DataFrame, numericCols: Seq[String],
+      cfg: ProfileConfig): Map[(String, String), Double] =
+    if (!cfg.computeKendall || numericCols.size < 2) Map.empty
+    else if (cfg.kendallExact) {
+      // opt-in exact path: full-table tau-b per pair through the
+      // distributed grid kernel (no sample, no O(n^2) pair space) —
+      // mirrors the exact-vs-sketch split for distinct/quantiles
+      timed("K:kendall-exact")(
+        (for { i <- numericCols.indices
+               j <- (i + 1) until numericCols.size } yield {
+          val pair = working.select(
+            qcol(numericCols(i)).cast("double").as("x"),
+            qcol(numericCols(j)).cast("double").as("y"))
+          val r = graft.ops.Kendall
+            .tauBExactDistributed(pair, "x", "y")
+            .select("tau_b").head()
+          val tau = if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
+          (numericCols(i), numericCols(j)) -> tau
+        }).toMap)
+    } else {
+      // tie key must be unique per row pattern: concat_ws SKIPS nulls, so
+      // (null,5) and (5,null) would both key as "5" and make the cap cut
+      // run-dependent — coalesce every column to an explicit sentinel
+      val tieKey = concat_ws("_", numericCols.map(c =>
+        coalesce(qcol(c).cast("string"), lit("\u0000"))): _*)
+      val sampled = graft.ops.Sampling.hashSampleCapped(
+        working.select(numericCols.map(qcol): _*),
+        numericCols.head, cfg.kendallSamplePct, cfg.kendallSampleCap,
+        tieKey)
+      // The cap bounds the transfer (<= kendallSampleCap rows, ~1 MB),
+      // so collect ONCE and run Knight's O(n log n) tau per pair on the
+      // driver: ~10^5 compares per pair vs 5*10^7 shuffled rows for a
+      // distributed pair join of the same sample (measured 55 s -> ms
+      // at sf0.1 with p=8).
+      val rows = timed("K:kendall-sample")(
+        sampled.select(numericCols.map(c =>
+          qcol(c).cast("double")): _*).collect())
+      val byCol = numericCols.indices.map { ci =>
+        rows.map(r => if (r.isNullAt(ci)) Double.NaN else r.getDouble(ci))
       }
-    }
-
-    // ---- Pass G: Pearson and Spearman as CONCURRENT futures ------------
-    // (Pass F, duplicates, was launched before the pass-B await above.)
-    // Spearman's rank build overlaps Pearson's aggregate instead of
-    // queueing behind it — they share no state beyond the persisted input.
-    val pearsonF: Future[Option[CorrelationMatrix]] = Future {
-      if (!cfg.computeCorrelations || numericCols.size < 2) None
-      else {
-        val pairs = for {
-          i <- numericCols.indices; j <- (i + 1) until numericCols.size
-        } yield (numericCols(i), numericCols(j))
-        val exprs = pairs.zipWithIndex.map { case ((a, b), i) =>
-          corr(qcol(a).cast("double"), qcol(b).cast("double")).as(s"p$i")
-        }
-        // corr carries 6 aggregate buffer fields; > ~16 pairs in one agg
-        // drops the HashAggregate out of codegen (the pass-A lesson) —
-        // chunk to 15 pairs, run SEQUENTIALLY here: nesting Futures on
-        // the shared bounded pool and Await-ing them from a pool thread
-        // deadlocks at poolSize=1 (the only thread blocks on tasks that
-        // can never schedule). Other passes still overlap this one.
-        val rs = timed("G:pearson")(
-          exprs.grouped(15).toSeq
-            .flatMap { ch =>
-              val r = working.agg(ch.head, ch.tail: _*).head()
-              r.schema.fieldNames.zip(r.toSeq)
-            }.toMap)
-        val m = Array.fill(numericCols.size, numericCols.size)(1.0)
-        pairs.zipWithIndex.foreach { case ((a, b), i) =>
-          val v = Option(rs.getOrElse(s"p$i", null))
-            .map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN)
-          val ia = numericCols.indexOf(a); val ib = numericCols.indexOf(b)
-          m(ia)(ib) = v; m(ib)(ia) = v
-        }
-        Some(CorrelationMatrix("pearson", numericCols, m.map(_.toSeq).toSeq))
-      }
-    }
-    val spearmanF: Future[Option[CorrelationMatrix]] = Future {
-      if (!cfg.computeCorrelations || !cfg.computeSpearman ||
-        numericCols.size < 2) None
-      else Await.result(spearmanRanksF, Duration.Inf) match {
-        // rank maps/table were built concurrently with pass B; only the
-        // final application waited for the demotion decision, and it
-        // uses the post-demotion column subset of the pre-built state
-        case Some(Left(maps)) =>
-          // r17: the co-moment scan is the LAST job of the profile (it
-          // gates on demotion, so the pool is idle by now) — at the
-          // passWidth the persisted table runs 1.6 s on 8 of 32 cores.
-          // When the input was repartition-eligible (>= 8 MB, scan
-          // under-parallelized), widen just this NARROW projection
-          // (numeric doubles only) to the full core count: the
-          // exchange is tens of MB against a 3x scan win. Partition
-          // regrouping moves the Welford pairwise merge order — the
-          // same last-ulp drift class as the pass-width repartition
-          // itself (gates round at 4-6 dp); sub-floor fixtures keep
-          // the historical plan byte-for-byte.
-          val base =
-            if (repartitioned)
-              working.select(numericCols.map(qcol): _*).repartition(
-                df.sparkSession.sparkContext.defaultParallelism)
-            else working
-          Some(timed("G:spearman")(
-            spearmanViaRankMaps(base, numericCols, maps)))
-        case Some(Right(ranks)) =>
-          Some(timed("G:spearman")(
-            spearmanMatrix(working, numericCols, Some(ranks))))
-        case None => None
-      }
-    }
-
-    // ---- Pass H: Cramer's V over all categorical pairs -----------------
-    val cramersF: Future[Seq[CramersResult]] = Future {
-      if (!cfg.computeCramers) Seq.empty
-      else {
-        val eligible = categoricalCols.filter { c =>
-          val nd = valueInfo.get(c).map(_.nDistinct).getOrElse(Long.MaxValue)
-          nd >= 2 && nd <= cfg.maxCramersCardinality
-        }
-        if (eligible.size < 2) Seq.empty
-        else {
-          val pairs = for {
-            i <- eligible.indices; j <- (i + 1) until eligible.size
-          } yield (eligible(i), eligible(j))
-          val pairStructs = pairs.map { case (a, b) =>
-            struct(lit(s"${a}|${b}").as("p"),
-              qcol(a).cast("string").as("va"), qcol(b).cast("string").as("vb"))
-          }
-          val ct = timed("H:cramers")(working
-            .select(explode(array(pairStructs: _*)).as("kv"))
-            .select(col("kv.p").as("p"), col("kv.va").as("va"), col("kv.vb").as("vb"))
-            .where(col("va").isNotNull && col("vb").isNotNull)
-            .groupBy("p", "va", "vb").agg(count(lit(1)).as("cnt"))
-            .collect())
-          val byPair = ct.groupBy(_.getAs[String]("p"))
-          pairs.flatMap { case (a, b) =>
-            byPair.get(s"${a}|${b}").map { rows =>
-              val obs = rows.map(r => (r.getAs[String]("va"),
-                r.getAs[String]("vb"), r.getAs[Long]("cnt")))
-              val n = obs.map(_._3).sum
-              val rowTotals = obs.groupBy(_._1).map { case (k, v) => k -> v.map(_._3).sum }
-              val colTotals = obs.groupBy(_._2).map { case (k, v) => k -> v.map(_._3).sum }
-              val chi2 = (for {
-                (ra, rt) <- rowTotals; (cb, ctot) <- colTotals
-              } yield {
-                val e = rt.toDouble * ctot / n
-                val o = obs.find(t => t._1 == ra && t._2 == cb).map(_._3).getOrElse(0L)
-                (o - e) * (o - e) / e
-              }).sum
-              val dof = (rowTotals.size - 1L) * (colTotals.size - 1L)
-              CramersResult(a, b, chi2, chi2PValue(chi2, dof),
-                correctedCramersV(chi2, n, rowTotals.size.toLong, colTotals.size.toLong))
-            }
-          }
-        }
-      }
-    }
-
-    // ---- Optional Kendall / phi-k (off by default, reference parity) ---
-    val kendallF: Future[Map[(String, String), Double]] = Future {
-      if (!cfg.computeKendall || numericCols.size < 2) Map.empty
-      else if (cfg.kendallExact) {
-        // opt-in exact path: full-table tau-b per pair through the
-        // distributed grid kernel (no sample, no O(n^2) pair space) —
-        // mirrors the exact-vs-sketch split for distinct/quantiles
-        timed("K:kendall-exact")(
-          (for { i <- numericCols.indices
-                 j <- (i + 1) until numericCols.size } yield {
-            val pair = working.select(
-              qcol(numericCols(i)).cast("double").as("x"),
-              qcol(numericCols(j)).cast("double").as("y"))
-            val r = graft.ops.Kendall
-              .tauBExactDistributed(pair, "x", "y")
-              .select("tau_b").head()
-            val tau = if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
+      timed("K:kendall-local")(
+        (for { i <- numericCols.indices; j <- (i + 1) until numericCols.size }
+          yield {
+            // pairwise deletion, matching Kendall.tauB's null handling
+            // (NaN pairs contribute to no count there either)
+            val keep = rows.indices.filter(k =>
+              !byCol(i)(k).isNaN && !byCol(j)(k).isNaN)
+            val tau = graft.ops.Kendall.tauBLocal(
+              keep.map(byCol(i)).toArray, keep.map(byCol(j)).toArray)
             (numericCols(i), numericCols(j)) -> tau
           }).toMap)
-      } else {
-        // tie key must be unique per row pattern: concat_ws SKIPS nulls, so
-        // (null,5) and (5,null) would both key as "5" and make the cap cut
-        // run-dependent — coalesce every column to an explicit sentinel
-        val tieKey = concat_ws("_", numericCols.map(c =>
-          coalesce(qcol(c).cast("string"), lit("\u0000"))): _*)
-        val sampled = graft.ops.Sampling.hashSampleCapped(
-          working.select(numericCols.map(qcol): _*),
-          numericCols.head, cfg.kendallSamplePct, cfg.kendallSampleCap,
-          tieKey)
-        // The cap bounds the transfer (<= kendallSampleCap rows, ~1 MB),
-        // so collect ONCE and run Knight's O(n log n) tau per pair on the
-        // driver: ~10^5 compares per pair vs 5*10^7 shuffled rows for a
-        // distributed pair join of the same sample (measured 55 s -> ms
-        // at sf0.1 with p=8).
-        val rows = timed("K:kendall-sample")(
-          sampled.select(numericCols.map(c =>
-            qcol(c).cast("double")): _*).collect())
-        val byCol = numericCols.indices.map { ci =>
-          rows.map(r => if (r.isNullAt(ci)) Double.NaN else r.getDouble(ci))
-        }
-        timed("K:kendall-local")(
-          (for { i <- numericCols.indices; j <- (i + 1) until numericCols.size }
-            yield {
-              // pairwise deletion, matching Kendall.tauB's null handling
-              // (NaN pairs contribute to no count there either)
-              val keep = rows.indices.filter(k =>
-                !byCol(i)(k).isNaN && !byCol(j)(k).isNaN)
-              val tau = graft.ops.Kendall.tauBLocal(
-                keep.map(byCol(i)).toArray, keep.map(byCol(j)).toArray)
-              (numericCols(i), numericCols(j)) -> tau
-            }).toMap)
-      }
-    }
-    val phikF: Future[Map[(String, String), Double]] = Future {
-      if (!cfg.computePhik) Map.empty
-      else {
-        val eligible = categoricalCols.filter { c =>
-          val nd = valueInfo.get(c).map(_.nDistinct).getOrElse(Long.MaxValue)
-          nd >= 2 && nd <= cfg.maxCramersCardinality
-        }
-        (for { i <- eligible.indices; j <- (i + 1) until eligible.size }
-          yield (eligible(i), eligible(j)) ->
-            graft.ops.PhiKOp.phik(working, eligible(i), eligible(j),
-              cfg.maxCramersCardinality)).toMap
-      }
     }
 
-    // ---- Assembly (head sample was launched before the pass-B await) ---
-    val (histograms, mads, charStats) = (
-      Await.result(histogramsF, Duration.Inf),
-      Await.result(madsF, Duration.Inf),
-      Await.result(charStatsF, Duration.Inf))
-    val (nDuplicates, duplicateRows) = Await.result(duplicatesF, Duration.Inf)
-    val correlations =
-      Await.result(pearsonF, Duration.Inf).toSeq ++
-        Await.result(spearmanF, Duration.Inf).toSeq
-    val cramers = Await.result(cramersF, Duration.Inf)
-    val head = Await.result(headF, Duration.Inf)
-    val kendall = Await.result(kendallF, Duration.Inf)
-    val phikMap = Await.result(phikF, Duration.Inf)
-    pool.shutdown()
-    vcTable.foreach(_.unpersist(false))   // pass E done with it
-    numCounts.foreach(_.unpersist(false)) // passes C/G done with it
-
-    val columnProfiles: Seq[ColumnProfile] = declared.map { case (f, declaredType) =>
-      val p = f.name
-      val effType = typed.find(_._1.name == p).map(_._2).getOrElse(declaredType)
-      val cnt = if (declaredType == ProfileType.Unsupported) 0L else aLong(s"$p::count")
-      val vi = valueInfo.get(p)
-      val common = CommonStats(nRows, cnt,
-        vi.map(_.nDistinct).getOrElse(0L), vi.map(_.nUnique).getOrElse(0L))
-      val typedStats: TypedStats = effType match {
-        case ProfileType.Numeric =>
-          val qs = aAny(s"$p::quantiles").orNull match {
-            case s: scala.collection.Seq[_] =>
-              cfg.quantiles.zip(s.map(x =>
-                Option(x).map(_.asInstanceOf[Number].doubleValue)
-                  .getOrElse(Double.NaN))).toMap
-            case _ => Map.empty[Double, Double]
-          }
-          NumericStats(
-            mean = aDouble(s"$p::mean"), std = aDouble(s"$p::std"),
-            variance = aDouble(s"$p::variance"), min = aDouble(s"$p::min"),
-            max = aDouble(s"$p::max"), sum = aDouble(s"$p::sum"),
-            skewness = aDouble(s"$p::skew"), kurtosis = aDouble(s"$p::kurt"),
-            quantiles = qs, mad = mads.getOrElse(p, Double.NaN),
-            nZeros = aLong(s"$p::zeros"), nInfinite = aLong(s"$p::inf"),
-            nonNullCount = cnt, histogram = histograms.get(p),
-            chiSquaredP = vi.flatMap(_.chi2P))
-        case ProfileType.Categorical =>
-          val lengths =
-            if (f.dataType == StringType && declaredType == ProfileType.Categorical)
-              Some(LengthStats(aDouble(s"$p::lenMean"), aLong(s"$p::lenMin"),
-                aLong(s"$p::lenMax"), aDouble(s"$p::lenMedian")))
-            else None
-          CategoricalStats(vi.map(_.topK).getOrElse(Seq.empty), lengths,
-            charStats.get(p), vi.flatMap(_.chi2P))
-        case ProfileType.Bool =>
-          BooleanStats(aLong(s"$p::true"), aLong(s"$p::false"))
-        case ProfileType.DateTime =>
-          DateTimeStats(aLong(s"$p::epochMin"), aLong(s"$p::epochMax"),
-            histograms.get(p))
-        case _ => UnsupportedStats
-      }
-      ColumnProfile(p, rawTypeName.getOrElse(p, f.dataType.simpleString),
-        effType, common, typedStats)
-    }
-
-    val missingCounts = columnProfiles.map(c => c.name -> c.common.nMissing).toMap
-    val nCellsMissing = supported.map(s => missingCounts(s._1.name)).sum
-    val table = TableStats(
-      n = nRows, nVar = fields.size, nCellsMissing = nCellsMissing,
-      pCellsMissing =
-        if (nRows * supported.size == 0) 0.0
-        else nCellsMissing.toDouble / (nRows * supported.size),
-      typeCounts = columnProfiles.groupBy(_.profileType.name)
-        .map { case (k, v) => k -> v.size })
-
-    val profile0 = TableProfile(table, columnProfiles, missingCounts,
-      nDuplicates, duplicateRows, correlations, cramers, head, Seq.empty,
-      kendall, phikMap)
-    val result = profile0.copy(alerts = Alerts.compute(profile0, cfg))
-    if (cfg.persist) working.unpersist()
-    result
-  }
-
-  private def assembleHistogram(
-      counts: Array[Long], mn: Double, mx: Double, bins: Int): Histogram = {
-    val w = if (mx > mn) (mx - mn) / bins else 1.0
-    Histogram(counts.toSeq, (0 to bins).map(i => mn + i * w))
-  }
+  /** Pass K: phi-k per pair of `cols` (off by default). */
+  private def passPhik(working: DataFrame, cols: Seq[String],
+      cfg: ProfileConfig): Map[(String, String), Double] =
+    if (!cfg.computePhik) Map.empty
+    else (for { i <- cols.indices; j <- (i + 1) until cols.size }
+      yield (cols(i), cols(j)) ->
+        graft.ops.PhiKOp.phik(working, cols(i), cols(j),
+          cfg.maxCramersCardinality)).toMap
 
   /** Exact per-column top-K value counts WITHOUT a per-column sort:
     * bounded top-K heaps per partition (mergeable), merged on the driver.
@@ -1040,11 +1018,11 @@ object Profiler {
           org.apache.spark.sql.Encoders.STRING,
           org.apache.spark.sql.Encoders.scalaLong))
       .mapPartitions { it =>
-        val heaps = scala.collection.mutable.Map
-          .empty[String, scala.collection.mutable.PriorityQueue[(String, Long)]]
+        val heaps = mutable.Map
+          .empty[String, mutable.PriorityQueue[(String, Long)]]
         it.foreach { case (c, v, cnt) =>
           val h = heaps.getOrElseUpdate(c,
-            scala.collection.mutable.PriorityQueue.empty[(String, Long)](ord))
+            mutable.PriorityQueue.empty[(String, Long)](ord))
           h.enqueue((v, cnt))
           if (h.size > k) h.dequeue() // drops the ord-max = worst element
         }
@@ -1063,124 +1041,56 @@ object Profiler {
     * Here ranks come from [[graft.ops.Ranking.avgRanks]]'s two-phase
     * distributed prefix sum over the per-(col,value) COUNT table (no
     * global or per-column windows — every stage is hash/range
-    * partitioned). Two plans rebuild the rank-space wide table:
-    *
-    *   - BROADCAST (when `colDistinct` is known and its total is at most
-    *     `broadcastMaxTotalDistinct`): each column's (value -> avgrank)
-    *     table is broadcast and map-side hash-joined onto the data — ONE
-    *     scan, zero shuffles, fully codegen. The rank tables are exactly
-    *     as big as each column's distinct-value count, which the
-    *     profiler knows exactly from pass B before choosing.
-    *   - SHUFFLE (the 100 TB fallback): melt to (rid, col, value), join
-    *     ranks on (col, value), rebuild rows by conditional aggregation
-    *     on rid — a plain hash shuffle over N*m rank rows, no pivot
-    *     analysis pass, nothing broadcast.
-    *
-    * One chunked aggregate then computes all pairwise correlations. */
+    * partitioned). This is the SHUFFLE plan, the 100 TB fallback: melt
+    * to (rid, col, value), join ranks on (col, value), rebuild rows by
+    * conditional aggregation on rid — a plain hash shuffle over N*m
+    * rank rows, no pivot analysis pass, nothing broadcast. One chunked
+    * aggregate then computes all pairwise correlations. */
   private[profile] def spearmanMatrix(df: DataFrame, cols: Seq[String],
-      precomputedRanks: Option[DataFrame] = None,
-      colDistinct: Map[String, Long] = Map.empty,
-      broadcastMaxTotalDistinct: Long = 0L): CorrelationMatrix = {
-    def vtimed[T](name: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      if (sys.env.contains("GRAFT_VERBOSE"))
-        System.err.println(f"[profiler] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    val useBroadcast = precomputedRanks.isDefined && cols.nonEmpty &&
-      cols.forall(colDistinct.contains) &&
-      cols.map(colDistinct).sum <= broadcastMaxTotalDistinct
-    if (sys.env.contains("GRAFT_VERBOSE"))
-      System.err.println(s"[profiler] G:spearman plan=" +
-        (if (useBroadcast) "broadcast" else "shuffle") +
-        s" totalDistinct=${if (colDistinct.nonEmpty) cols.map(colDistinct).sum else -1}")
-    if (useBroadcast)
-      return spearmanViaRankMaps(df, cols,
-        buildRankMaps(precomputedRanks.get, cols))
-    val ranked: DataFrame =
-      {
-        val rid = monotonically_increasing_id().as("__rid")
-        val base = df.select((cols.map(c => qcol(c).cast("double").as(c)) :+ rid): _*)
-        val kv = base.select(col("__rid"),
-            explode(array(cols.map(c =>
-              struct(lit(c).as("c"), col(s"`$c`").as("v"))): _*)).as("kv"))
-          .select(col("__rid"), col("kv.c").as("c"), col("kv.v").as("v"))
-          .where(col("v").isNotNull && !col("v").isNaN)
-        val ranks = precomputedRanks.getOrElse(
-          graft.ops.Ranking.avgRanks(kv.select("c", "v"), "c", "v"))
-        kv.join(ranks, Seq("c", "v"))
-          .groupBy("__rid")
-          .agg(
-            max(when(col("c") === cols.head, col("avgrank"))).as(cols.head),
-            cols.tail.map(c =>
-              max(when(col("c") === c, col("avgrank"))).as(c)): _*)
-      }
-    val pairs = for {
-      i <- cols.indices; j <- (i + 1) until cols.size
-    } yield (cols(i), cols(j))
-    val exprs = pairs.zipWithIndex.map { case ((a, b), i) =>
-      corr(col(s"`$a`"), col(s"`$b`")).as(s"s$i")
-    }
-    // > ~16 corr in one agg exceeds the codegen buffer budget (6 fields
-    // each) — persist the rank-space table once and chunk the agg
-    val rankedP = ranked.persist(StorageLevel.MEMORY_AND_DISK)
-    val rs: Map[String, Any] = vtimed("G:spearman-corr")(
-      exprs.grouped(15).toSeq.flatMap { ch =>
-        val r = rankedP.agg(ch.head, ch.tail: _*).head()
-        r.schema.fieldNames.zip(r.toSeq)
-      }.toMap)
-    rankedP.unpersist(false)
-    val m = Array.fill(cols.size, cols.size)(1.0)
-    pairs.zipWithIndex.foreach { case ((a, b), i) =>
-      val v = Option(rs.getOrElse(s"s$i", null))
-        .map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN)
-      val ia = cols.indexOf(a); val ib = cols.indexOf(b)
-      m(ia)(ib) = v; m(ib)(ia) = v
-    }
-    CorrelationMatrix("spearman", cols, m.map(_.toSeq).toSeq)
+      precomputedRanks: Option[DataFrame] = None): CorrelationMatrix = {
+    val rid = monotonically_increasing_id().as("__rid")
+    val base = df.select((cols.map(c => qcol(c).cast("double").as(c)) :+ rid): _*)
+    val kv = base.select(col("__rid"),
+        explode(array(cols.map(c =>
+          struct(lit(c).as("c"), qcol(c).as("v"))): _*)).as("kv"))
+      .select(col("__rid"), col("kv.c").as("c"), col("kv.v").as("v"))
+      .where(col("v").isNotNull && !col("v").isNaN)
+    val ranks = precomputedRanks.getOrElse(
+      graft.ops.Ranking.avgRanks(kv.select("c", "v"), "c", "v"))
+    // the chunked corr agg scans the rank-space table once per chunk:
+    // persist it once
+    val ranked = kv.join(ranks, Seq("c", "v"))
+      .groupBy("__rid")
+      .agg(
+        max(when(col("c") === cols.head, col("avgrank"))).as(cols.head),
+        cols.tail.map(c =>
+          max(when(col("c") === c, col("avgrank"))).as(c)): _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try timed("G:spearman-corr")(corrMatrix("spearman", ranked, cols)(qcol))
+    finally ranked.unpersist(false)
   }
 
-  /** Spearman via driver-resident rank maps — the small-cardinality fast
-    * path. The caller guarantees the rank table fits on the driver
-    * (gated on the EXACT per-column distinct counts), so:
-    * per column, a primitive (doubleToLongBits(value) -> avgrank)
-    * LongMap is built and broadcast; ONE mapPartitions scan then
-    * accumulates Welford co-moments for every column pair (numerically
-    * stable, the same merge formula Spark's own Covariance aggregate
-    * uses), merged on the driver. Zero shuffles, zero joins, one scan,
-    * and the driver transfer is partitions x pairs x 6 doubles. */
-  /** Collect a (c, v, avgrank) rank table into per-column primitive
-    * (doubleToLongBits(value) -> avgrank) maps. Caller guarantees the
-    * table is driver-sized. */
   /** Driver-side tie-averaged ranking straight from a per-(column, value)
-    * COUNT table already proven driver-sized by the broadcast gate: one
+    * COUNT table already proven driver-sized by the rank-map gate: one
     * bounded collect, then a per-column sort + prefix sum. Replaces the
-    * distributed range-shuffle ranking ([[graft.ops.Ranking]]) PLUS the
+    * distributed range-shuffle ranking ([[graft.ops.Ranking]]) PLUS a
     * map-building collect when the ranks were only ever going to be
     * collected into broadcast maps anyway — same avg-rank semantics
-    * (#smaller + (cnt+1)/2, -0.0 folded, matching [[buildRankMaps]]'s
-    * keying). The shuffle plan remains the route above the gate. */
+    * (#smaller + (cnt+1)/2, -0.0 folded) and the same
+    * doubleToLongBits(value) keys [[spearmanViaRankMaps]] reads. The
+    * shuffle plan ([[spearmanMatrix]]) remains the route above the gate. */
   private[profile] def buildRankMapsFromCounts(
-      counts: DataFrame, cols: Seq[String])
-      : Map[String, scala.collection.mutable.LongMap[Double]] = {
+      counts: DataFrame, cols: Seq[String]): RankMaps = {
     import org.apache.spark.sql.Encoders
-    def vtimed[T](name: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      if (sys.env.contains("GRAFT_VERBOSE"))
-        System.err.println(f"[profiler] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
     // typed collect: primitive tuple decode, no per-field Row boxing on
     // a table that can be millions of rows
-    val rows = vtimed("G:spearman-maps-collect")(
+    val rows = timed("G:spearman-maps-collect")(
       counts.where(col("c").isin(cols: _*))
         .select(col("c"), col("v").cast("double"), col("cnt").cast("long"))
         .as[(String, Double, Long)](Encoders.tuple(
           Encoders.STRING, Encoders.scalaDouble, Encoders.scalaLong))
         .collect())
-    vtimed("G:spearman-maps-rank") {
+    timed("G:spearman-maps-rank") {
       // r17: this was 1.5 s of single-threaded boxed-tuple sorting on
       // q00's critical path. Now: one cheap bucketing pass into
       // primitive (order-encoded key, count) arrays per column, then
@@ -1196,24 +1106,24 @@ object Profiler {
       // NaN never reaches here (both call sites filter it) and -0.0 is
       // folded before encoding.
       def enc(bits: Long): Long = bits ^ ((bits >> 63) & 0x7fffffffffffffffL)
-      val keyBufs = scala.collection.mutable.Map
-        .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
-      val cntBufs = scala.collection.mutable.Map
-        .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+      val keyBufs = mutable.Map
+        .empty[String, mutable.ArrayBuilder.ofLong]
+      val cntBufs = mutable.Map
+        .empty[String, mutable.ArrayBuilder.ofLong]
       rows.foreach { case (c, v0, n) =>
         val v = if (v0 == 0.0) 0.0 else v0 // fold -0.0 before accumulating
         keyBufs.getOrElseUpdate(c,
-          new scala.collection.mutable.ArrayBuilder.ofLong) +=
+          new mutable.ArrayBuilder.ofLong) +=
           enc(java.lang.Double.doubleToLongBits(v))
         cntBufs.getOrElseUpdate(c,
-          new scala.collection.mutable.ArrayBuilder.ofLong) += n
+          new mutable.ArrayBuilder.ofLong) += n
       }
-      def rankOne(c: String): scala.collection.mutable.LongMap[Double] = {
-        val out = scala.collection.mutable.LongMap.empty[Double]
+      def rankOne(c: String): mutable.LongMap[Double] = {
+        val out = mutable.LongMap.empty[Double]
         (keyBufs.get(c), cntBufs.get(c)) match {
           case (Some(kb), Some(nb)) =>
             val ks = kb.result(); val ns = nb.result()
-            val m = scala.collection.mutable.LongMap.empty[Long]
+            val m = mutable.LongMap.empty[Long]
             var i = 0
             while (i < ks.length) { // fold duplicate values across input rows
               m.update(ks(i), m.getOrElse(ks(i), 0L) + ns(i)); i += 1
@@ -1245,27 +1155,22 @@ object Profiler {
     }
   }
 
-  private[profile] def buildRankMaps(ranks: DataFrame, cols: Seq[String])
-      : Map[String, scala.collection.mutable.LongMap[Double]] = {
-    val maps = cols.map(c =>
-      c -> scala.collection.mutable.LongMap.empty[Double]).toMap
-    ranks.where(col("c").isin(cols: _*)).collect().foreach { r =>
-      val v0 = r.getAs[Double]("v")
-      val v = if (v0 == 0.0) 0.0 else v0 // fold -0.0 (join-key parity)
-      maps(r.getAs[String]("c"))
-        .update(java.lang.Double.doubleToLongBits(v), r.getAs[Double]("avgrank"))
-    }
-    maps
-  }
-
+  /** Spearman via driver-resident rank maps — the small-cardinality fast
+    * path. The caller guarantees the rank table fits on the driver
+    * (gated on the EXACT per-column distinct counts), so:
+    * per column, a primitive (doubleToLongBits(value) -> avgrank)
+    * LongMap is built and broadcast; ONE mapPartitions scan then
+    * accumulates Welford co-moments for every column pair (numerically
+    * stable, the same merge formula Spark's own Covariance aggregate
+    * uses), merged on the driver. Zero shuffles, zero joins, one scan,
+    * and the driver transfer is partitions x pairs x 6 doubles. */
   private[profile] def spearmanViaRankMaps(df: DataFrame, cols: Seq[String],
-      rankMaps: Map[String, scala.collection.mutable.LongMap[Double]])
-      : CorrelationMatrix = {
+      rankMaps: RankMaps): CorrelationMatrix = {
     val spark = df.sparkSession
     val nCols = cols.size
-    val mapsArr: Array[scala.collection.mutable.LongMap[Double]] =
+    val mapsArr: Array[mutable.LongMap[Double]] =
       cols.map(c => rankMaps.getOrElse(c,
-        scala.collection.mutable.LongMap.empty[Double])).toArray
+        mutable.LongMap.empty[Double])).toArray
     val bc = spark.sparkContext.broadcast(mapsArr)
     val base = df.select(cols.map(c => qcol(c).cast("double").as(c)): _*)
     val pairI = (for { i <- 0 until nCols; j <- (i + 1) until nCols } yield i).toArray

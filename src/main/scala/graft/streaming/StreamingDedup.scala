@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.ops.{Dedup, TextAnalysis}
+import graft.ops.TextAnalysis
 
 /** Streaming deduplication — keep the first occurrence of each document
   * fingerprint across an unbounded stream, with per-key occurrence

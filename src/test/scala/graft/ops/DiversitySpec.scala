@@ -6,7 +6,6 @@ class DiversitySpec extends SparkSpec {
 
   test("hillNumbers: hand-computed ladder, uniform equality, ordering D0>=D1>=D2") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // group a: counts {4, 2, 2} over 3 types; group u: uniform {3, 3, 3}
     val toks = (Seq.fill(4)(("a", "x")) ++ Seq.fill(2)(("a", "y")) ++
       Seq.fill(2)(("a", "z")) ++

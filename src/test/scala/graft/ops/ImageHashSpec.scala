@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Pixel-level BMP decode + dHash + banded near-dup. The committed
   * fixture (scripts/gen_image_fixture.py) certifies the happy path

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** KMV sketch edges (q376 gates the estimator path over the corpus
   * vocabulary; this pins the exact-small branch and merge facts). */

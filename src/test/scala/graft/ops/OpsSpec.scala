@@ -203,7 +203,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("packChunks: next-fit boundaries, per-doc reset, at-most-one-chunk overflow") {
-    import org.apache.spark.sql.functions.col
     // doc 0: tokens 50,50,50,30 with budget 100 -> packs 0,0,1,1
     // (pack 0 overflows to 100+? no: before=0,50,100,150 -> floor/100 = 0,0,1,1)
     // doc 1 restarts at pack 0
@@ -221,7 +220,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("semDedupPairs: within-cluster pairs found, cross-cluster misses documented") {
-    import org.apache.spark.sql.functions.col
     // two well-separated directions; ids 0,1 near +x, ids 2,3 near +y,
     // id 4 sits between x and y but nearer x (cos 0.9 with x-axis)
     def vec(xs: Double*) = xs.toArray
@@ -1054,7 +1052,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("globalSequencePack: partition-invariant and gap-free on a bigger corpus") {
-    import org.apache.spark.sql.functions.col
     val docs = (0L until 200L).map { i =>
       (i, Seq.fill((i % 7 + 1).toInt)("w").mkString(" "))
     }.toDF("doc_id", "text")
@@ -1074,7 +1071,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("stratifiedFolds: exact per-class balance, deterministic, partition-invariant") {
-    import org.apache.spark.sql.functions.col
     val df = (0L until 103L).map(i => (i, s"c${i % 3}")).toDF("id", "cls")
     val folds = Sampling.stratifiedFolds(df, "id", "cls", 4)
     val sizes = folds.groupBy("cls", "fold").count()
@@ -1095,7 +1091,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("hashingTrickFeatures: counts ride signs, collisions merge, deterministic") {
-    import org.apache.spark.sql.functions.col
     val docs = Seq((1L, "alpha alpha beta"), (2L, "alpha")).toDF("doc_id", "text")
     val out = FeatureEng.hashingTrickFeatures(docs, "doc_id", "text", 64)
     val rows = out.collect()
@@ -1118,7 +1113,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("countMinEstimates: est >= true always, exact at generous width") {
-    import org.apache.spark.sql.functions.col
     val docs = Seq((1L, "a a a b b c"), (2L, "a b d")).toDF("id", "text")
     val probes = Seq("a", "b", "c", "d", "zz").toDF("word")
     // wide sketch: no collisions plausible at width 4096 over 4 words

@@ -123,7 +123,6 @@ class OutliersSpec extends SparkSpec {
   }
 
   test("mahalanobisTopK: the joint outlier ranks first") {
-    import org.apache.spark.sql.functions.col
     // tight correlated cloud along y = x, plus one point far OFF the
     // correlation axis but inside both marginal ranges
     val pts = (1 to 60).map(i => (i.toLong, i % 20 + 1.0,

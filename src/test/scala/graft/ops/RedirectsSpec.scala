@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** [[Redirects.resolveChains]] mechanics at unit scale (q409 gates
   * the corpus-scale construction): exact hops, the

@@ -409,7 +409,6 @@ class RelevanceSpec extends SparkSpec {
   }
 
   test("bm25DenseRerank: recall bounds the rerank, cosine flips the order") {
-    import org.apache.spark.sql.functions.col
     // docs 1-3 contain the query term; doc 4 does not (never recalled
     // even though its vector is closest to the query). BM25 order by
     // tf: 2 (x3), 1 (x2), 3 (x1); cosine rerank flips 1 and 2.

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Round-10 additions: Fisher separation, two-NN intrinsic dimension,
   * duplicated-span coverage, assortativity, log-odds terms,

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** [[Sitemap.frontier]] loop edges beyond the q379 gate fixture:
   * depth truncation, all-dangling seeds, and an unbroken cycle ring

@@ -7,7 +7,6 @@ class SkewSpec extends SparkSpec {
 
   test("theilDecomposition: hand-computed groups, additive identity, equal group zero") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val df = Seq(("a", 2L), ("a", 2L), ("a", 4L), ("b", 1L), ("b", 1L))
       .toDF("g", "x")
     val out = Skew.theilDecomposition(df, "g", "x")

@@ -363,7 +363,6 @@ class TemporalSpec extends SparkSpec {
     }
   }
   test("cohortRetention: first-period cohorts, exact integer bucketing") {
-    import org.apache.spark.sql.functions.col
     // period 10: u1 active periods 0,1,2; u2 periods 1,1 (dedup), u3 period 2
     val ev = Seq((1L, 3L), (1L, 12L), (1L, 25L), (2L, 11L), (2L, 19L),
       (3L, 21L)).toDF("u", "t")
@@ -598,7 +597,6 @@ class TemporalSpec extends SparkSpec {
   }
 
   test("countAcf: perfect periodicity 1.0, gaps zero-filled, constant null") {
-    import org.apache.spark.sql.functions.col
     // periods 0..11 alternate 2,0,2,0... events only in even periods:
     // lag 2 is a perfect match (acf 1), lag 1 perfectly anti-phase
     val ev = (0 until 12 by 2).flatMap(p => Seq(p * 10L, p * 10L + 1))

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec

@@ -332,4 +332,35 @@ class ProfilerSpec extends SparkSpec {
     assert(approx(c2.pUnique, 1.0 / 3))
     assert(!c2.isUnique)
   }
+
+  test("a failing pass releases the job pool and the cached tables") {
+    // A column that raises on evaluation fails every pass that scans it.
+    // The failure must still shut the pool down (its threads are
+    // non-daemon: left alive they keep a CLI JVM running after main
+    // throws) and unpersist the input and pass B's count tables.
+    import org.apache.spark.sql.functions._
+    import scala.jdk.CollectionConverters._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    import org.apache.spark.sql.graft.CacheProbe
+    def liveUserThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && !t.isDaemon).toSet
+    val df = spark.range(0, 400).select(
+      col("id").cast("double").as("x"),
+      (col("id") % 7).cast("string").as("cat"),
+      when(col("id") > 300, raise_error(lit("planted failure")))
+        .otherwise(col("id")).as("bad"))
+    val cfg = ProfileConfig.default.copy(persist = true, computeSpearman = true)
+    Profiler.profile(df.drop("bad"), cfg) // Spark starts its lazy threads here
+    val cachedBefore = CacheProbe.entries(spark)
+    val threadsBefore = liveUserThreads()
+    val e = intercept[Exception](Profiler.profile(df, cfg))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("planted failure")), e)
+    assert(CacheProbe.entries(spark) <= cachedBefore)
+    eventually(timeout(Span(10, Seconds))) {
+      val leaked = liveUserThreads() -- threadsBefore
+      assert(leaked.isEmpty, leaked.map(_.getName))
+    }
+  }
 }

@@ -5,6 +5,23 @@ import graft.SparkSpec
 class SpearmanSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Collect a (c, v, avgrank) rank table into per-column primitive
+    * (doubleToLongBits(value) -> avgrank) maps, -0.0 folded: the
+    * reference the driver-side rank build is checked against. */
+  private def buildRankMaps(ranks: org.apache.spark.sql.DataFrame, cols: Seq[String])
+      : Map[String, scala.collection.mutable.LongMap[Double]] = {
+    import org.apache.spark.sql.functions.col
+    val maps = cols.map(c =>
+      c -> scala.collection.mutable.LongMap.empty[Double]).toMap
+    ranks.where(col("c").isin(cols: _*)).collect().foreach { r =>
+      val v0 = r.getAs[Double]("v")
+      val v = if (v0 == 0.0) 0.0 else v0 // fold -0.0 (join-key parity)
+      maps(r.getAs[String]("c"))
+        .update(java.lang.Double.doubleToLongBits(v), r.getAs[Double]("avgrank"))
+    }
+    maps
+  }
+
   test("rank-join spearman matches MLlib on real data") {
     val df = spark.read
       .parquet("/root/testdata/sf0.001/lineitem.parquet")
@@ -57,7 +74,7 @@ class SpearmanSpec extends SparkSpec {
       .agg(org.apache.spark.sql.functions.sum("cnt").as("cnt")) // fold like pass B
     val cols = Seq("x", "y")
     val direct = Profiler.buildRankMapsFromCounts(counts, cols)
-    val viaDist = Profiler.buildRankMaps(
+    val viaDist = buildRankMaps(
       graft.ops.Ranking.avgRanksFromCounts(counts, "c", "v"), cols)
     cols.foreach { c =>
       assert(direct(c).toMap == viaDist(c).toMap, s"column $c rank maps differ")
@@ -109,6 +126,32 @@ class SpearmanSpec extends SparkSpec {
     }.toMap
     cols.foreach { c =>
       assert(got(c).toMap == ref(c), s"column $c rank maps differ")
+    }
+  }
+
+  test("profile's shuffle-rank fallback matches the rank-map route") {
+    // spearmanBroadcastMaxDistinct = 0 sends profile() down the Right
+    // route: distributed ranks + spearmanMatrix's rank join, the plan a
+    // rank table too big for the driver takes. Ties, nulls, -0.0 next
+    // to 0.0 and a FloatType column exercise every keying rule.
+    val rnd = new scala.util.Random(20261018)
+    val df = (1 to 400).map { i =>
+      val x = if (i % 17 == 0) None
+        else if (i % 13 == 0) Some(-0.0)
+        else if (i % 11 == 0) Some(0.0)
+        else Some((rnd.nextInt(41) - 20).toDouble)
+      val f = if (i % 19 == 0) None else Some(rnd.nextInt(30) * 1.1f)
+      val y = if (i % 23 == 0) None else Some(math.floor(rnd.nextGaussian() * 8))
+      (x, f, y, rnd.nextInt(90).toLong)
+    }.toDF("x", "f", "y", "k")
+    val cfg = ProfileConfig.default.copy(persist = false, computeSpearman = true)
+    def spearman(p: TableProfile) = p.correlations.find(_.method == "spearman").get
+    val maps = spearman(Profiler.profile(df, cfg))
+    val shuffle = spearman(Profiler.profile(df, cfg.copy(spearmanBroadcastMaxDistinct = 0L)))
+    assert(maps.columns == Seq("x", "f", "y", "k") && shuffle.columns == maps.columns)
+    for (i <- maps.columns.indices; j <- maps.columns.indices) {
+      val (a, b) = (maps.values(i)(j), shuffle.values(i)(j))
+      assert(!a.isNaN && math.abs(a - b) < 1e-12, s"($i,$j): $a vs $b")
     }
   }
 
