@@ -104,16 +104,14 @@ object CrawlHealth {
     * run), open_run (the trailing run still growing at log end — 0
     * if the last fetch succeeded), and tripped = max_fail_run >=
     * tripAt. One shuffle on host; the run detection is the standard
-    * gaps-and-islands double row_number, partition-local. */
+    * gaps-and-islands double row_number, partition-local. Rows with a
+    * null host, order or outcome are dropped ([[breakerEvents]]). */
   def circuitBreakers(events: DataFrame, hostCol: String,
       orderCol: String, okCol: String, tripAt: Int): DataFrame = {
     require(tripAt >= 1, s"tripAt must be >= 1: $tripAt")
     val w = Window.partitionBy("host").orderBy("ord")
     val wf = Window.partitionBy("host", "ok").orderBy("ord")
-    val runs = events
-      .select(col(hostCol).cast("string").as("host"),
-        col(orderCol).cast("long").as("ord"),
-        col(okCol).cast("boolean").as("ok"))
+    val runs = breakerEvents(events, hostCol, orderCol, okCol)
       .withColumn("__grp",
         row_number().over(w) - row_number().over(wf))
     val failRuns = runs.where(!col("ok"))
@@ -136,6 +134,20 @@ object CrawlHealth {
         coalesce(col("__open"), lit(0L)).as("open_run"))
       .withColumn("tripped", col("max_fail_run") >= tripAt)
   }
+
+  /** The (host, ord, ok) input both breakers fold — this operator and
+    * its streaming twin [[graft.streaming.StreamingCircuitBreaker]]: a
+    * row with a null host, order or outcome carries no event (an
+    * unknown outcome is neither a failure nor a success, and must not
+    * split the failure run around it), so it is dropped. */
+  private[graft] def breakerEvents(events: DataFrame, hostCol: String,
+      orderCol: String, okCol: String): DataFrame =
+    events
+      .select(col(hostCol).cast("string").as("host"),
+        col(orderCol).cast("long").as("ord"),
+        col(okCol).cast("boolean").as("ok"))
+      .where(col("host").isNotNull && col("ord").isNotNull &&
+        col("ok").isNotNull)
 
   /** Soft-404 flags by the random-probe method: `probes` carries one
     * row per host — the content hash served for a URL that cannot

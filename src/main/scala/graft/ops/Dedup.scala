@@ -276,10 +276,7 @@ object Dedup {
       .select(col("id") +: explode(array_distinct(
         shingles(col("s"), q))).as("g") +: bcols: _*)
     val sz = grams.groupBy("id").agg(count(lit(1)).as("ng"))
-    val gKeys = "g" +: blockCols
-    val candLong = grams.withColumnRenamed("id", "i")
-      .join(grams.withColumnRenamed("id", "j"), gKeys.toSeq)
-      .where(col("i") < col("j"))
+    val candLong = bucketPairs(grams, "g" +: blockCols, Int.MaxValue)
       .groupBy("i", "j").agg(count(lit(1)).as("shared"))
       .join(sz.select(col("id").as("i"), col("ng").as("ni")), "i")
       .join(sz.select(col("id").as("j"), col("ng").as("nj")), "j")
@@ -311,21 +308,41 @@ object Dedup {
 
   /** MinHash signatures over any (id, g) shingle table. One shuffle
     * regardless of width, and ONE md5 per shingle regardless of width:
-    * the hash family is the double-hashing construction
-    * h_i(g) = h1(g) + i * h2(g) (h2 forced odd), with h1/h2 the two
-    * 28-bit halves of a single md5 — the standard trick that makes
-    * k-hash minhash cost O(1) hashes per element instead of O(k)
-    * (Kirsch & Mitzenmacher). Values stay < 2^34, overflow-safe and
-    * identically computable in any engine with md5 + integer ops. */
+    * the hash family is [[minhashHashPair]] + [[minhashHash]]. */
   def minhashSignaturesFromShingles(sh: DataFrame, numHashes: Int): DataFrame = {
-    val hex = md5(col("g"))
-    val h1 = conv(substring(hex, 1, 7), 16, 10).cast("long")
-    val h2 = conv(substring(hex, 8, 7), 16, 10).cast("long") * 2 + 1
+    val (h1, h2) = minhashHashPair(col("g"))
     val withH = sh.select(col("id"), h1.as("h1"), h2.as("h2"))
     val aggs = (0 until numHashes).map(i =>
-      min(col("h1") + lit(i.toLong) * col("h2")).as(s"s$i"))
+      min(minhashHash(col("h1"), col("h2"), i)).as(s"s$i"))
     withH.groupBy("id").agg(aggs.head, aggs.tail: _*)
   }
+
+  /** The seed pair of the MinHash family, shared by the batch
+    * signatures and [[graft.streaming.StreamingNearDup]]: h1 and h2
+    * are the two 28-bit halves of a single md5 of the shingle (h2
+    * forced odd) — the double-hashing construction that makes k-hash
+    * minhash cost O(1) hashes per element instead of O(k) (Kirsch &
+    * Mitzenmacher). Values stay < 2^34, overflow-safe and identically
+    * computable in any engine with md5 + integer ops. */
+  private[graft] def minhashHashPair(g: Column): (Column, Column) = {
+    val hex = md5(g)
+    (conv(substring(hex, 1, 7), 16, 10).cast("long"),
+      conv(substring(hex, 8, 7), 16, 10).cast("long") * 2 + 1)
+  }
+
+  /** Hash `i` of the MinHash family: h_i(g) = h1(g) + i * h2(g). */
+  private[graft] def minhashHash(h1: Column, h2: Column, i: Int): Column =
+    h1 + lit(i.toLong) * h2
+
+  /** The LSH band keys over signature columns `s0..s{bands*r-1}`: an
+    * array of one (band, key) struct per band, key = md5 of the band's
+    * comma-joined signature slice. Shared by the batch bucket table
+    * and the streaming twin, so both band identically. */
+  private[graft] def lshBandKeys(bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map { b =>
+      val slice = (0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}"))
+      struct(lit(b).as("band"), md5(concat_ws(",", slice: _*)).as("key"))
+    }: _*)
 
   /** MinHash signatures over char k-shingles. */
   def minhashSignatures(
@@ -338,72 +355,97 @@ object Dedup {
     * candidate pair once. Collision probability follows the standard
     * (1-(1-s^r)^b) S-curve.
     *
-    * `maxBucket` is the DEGENERATE-BUCKET guard every production LSH
-    * pipeline carries: a bucket of B colliding docs contributes
-    * B·(B−1)/2 candidate pairs, so one pathological signature (boiler-
-    * plate, templated, or repeated-token text — measured: a 4 860-doc
-    * bucket alone is 11.8 M pairs, and a 10× synthetic corpus put
-    * 51.9 M of its 52.5 M candidates in buckets > 100) turns the
-    * candidate self-join quadratic. Buckets above the cap are SKIPPED:
-    * at that size they are either giant exact-dup families (an exact
-    * pass collapses those first and cheaper) or degenerate signatures
-    * that verify would reject anyway. The filter is one extra
-    * (band, key) aggregate + semi join BEFORE the pair explosion —
-    * the aggregate is map-side combined, so the guard costs one small
-    * shuffle, not a scan of the would-be pairs. The drop is silent in
-    * this method's OUTPUT by design (a pair stream stays a pair
-    * stream); callers that need to see the recall loss read the
-    * skipped-bucket ledger from [[minhashLshSkippedBuckets]]. */
+    * `maxBucket` is the degenerate-bucket guard of [[bucketPairs]]
+    * (measured: a 4 860-doc bucket alone is 11.8 M pairs, and a 10×
+    * synthetic corpus put 51.9 M of its 52.5 M candidates in buckets >
+    * 100). Buckets above the cap are SKIPPED: at that size they are
+    * either giant exact-dup families (an exact pass collapses those
+    * first and cheaper) or degenerate signatures that verify would
+    * reject anyway. The drop is silent in this method's OUTPUT by
+    * design (a pair stream stays a pair stream); callers that need to
+    * see the recall loss read the skipped-bucket ledger from
+    * [[minhashLshSkippedBuckets]]. */
   def minhashLshPairs(
       signatures: DataFrame, bands: Int, rowsPerBand: Int,
       maxBucket: Int = 4096): DataFrame = {
-    require(maxBucket >= 2, "maxBucket must be >= 2")
     val buckets = lshBandBuckets(signatures, bands, rowsPerBand)
       .localCheckpoint(false)
-    val okBuckets = buckets.groupBy("band", "key")
-      .agg(count(lit(1)).as("__bsz"))
-      .where(col("__bsz") <= maxBucket)
-      .select("band", "key")
-    val bounded = buckets.join(okBuckets, Seq("band", "key"), "left_semi")
-    val a = bounded.as("a"); val b = bounded.as("b")
-    a.join(b,
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("i"), col("b.id").as("j"))
-      .distinct()
+    bucketPairs(buckets, Seq("band", "key"), maxBucket)
+      .select("i", "j").distinct()
   }
 
   /** The exploded (id, band, key) LSH bucket table [[minhashLshPairs]]
     * self-joins — factored out so the pairs path and the skipped-bucket
     * ledger below band identically. */
   private def lshBandBuckets(
-      signatures: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val bandCols = (0 until bands).map { b =>
-      val slice = (0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"),
-        md5(concat_ws(",", slice: _*)).as("key"))
-    }
+      signatures: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
     signatures
-      .select(col("id"), explode(array(bandCols: _*)).as("bk"))
+      .select(col("id"), explode(lshBandKeys(bands, rowsPerBand)).as("bk"))
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
-  }
 
-  /** The recall-loss ledger for [[minhashLshPairs]]'s degenerate-bucket
-    * guard: the (band, key) buckets a `maxBucket` cap SKIPS, with their
-    * sizes — so the drop is observable (is it one giant exact-dup
-    * family, or many degenerate boilerplate signatures?) instead of
-    * invisible. Same banding as the pairs path, one map-side-combined
-    * aggregate, no pair explosion. Returns (band, key, bucket_size)
-    * with bucket_size > maxBucket, empty when the guard dropped
-    * nothing. */
+  /** The recall-loss ledger for [[minhashLshPairs]]' degenerate-bucket
+    * guard ([[skippedBuckets]] over the same banding): returns (band,
+    * key, bucket_size) with bucket_size > maxBucket, empty when the
+    * guard dropped nothing. */
   def minhashLshSkippedBuckets(
       signatures: DataFrame, bands: Int, rowsPerBand: Int,
-      maxBucket: Int = 4096): DataFrame = {
+      maxBucket: Int = 4096): DataFrame =
+    skippedBuckets(lshBandBuckets(signatures, bands, rowsPerBand),
+      Seq("band", "key"), maxBucket)
+
+  /** The candidate step every bucketed near-dup operator shares
+    * (MinHash and SRP LSH, SimHash, dHash, winnowing): one row per
+    * (shared bucket, i < j pair) of `keyed`, a table with an `id`
+    * column and the bucket columns `keys`. Each side's other columns
+    * ride along as `<c>_i` / `<c>_j`, so a caller verifies on the
+    * joined row without joining back. Callers add their own final step
+    * (distinct, a verify, a shared-bucket count) and their own
+    * checkpoint of `keyed`.
+    *
+    * `maxBucket` is the DEGENERATE-BUCKET guard every production LSH
+    * pipeline carries: a bucket of B colliding docs contributes
+    * B·(B−1)/2 candidate pairs, so one pathological key turns the
+    * self-join quadratic. Buckets above the cap are skipped BEFORE the
+    * pair explosion by one map-side-combined (keys) aggregate + semi
+    * join — the guard costs one small shuffle, not a scan of the
+    * would-be pairs; [[skippedBuckets]] is its ledger. `Int.MaxValue`
+    * plans no guard aggregate at all (an uncapped path pays nothing
+    * for the knob it does not use). A bucket's size is its row count
+    * in `sizedOn`, `keyed` itself by default; a keyed table with
+    * several rows per (id, bucket) passes its distinct (id, keys)
+    * projection so the cap counts documents. */
+  private[graft] def bucketPairs(keyed: DataFrame, keys: Seq[String],
+      maxBucket: Int, sizedOn: Option[DataFrame] = None): DataFrame = {
     require(maxBucket >= 2, "maxBucket must be >= 2")
-    lshBandBuckets(signatures, bands, rowsPerBand)
-      .groupBy("band", "key")
-      .agg(count(lit(1)).as("bucket_size"))
-      .where(col("bucket_size") > maxBucket)
+    val bounded = capBuckets(keyed, keys, maxBucket, sizedOn.getOrElse(keyed))
+    val carried = keyed.columns.filterNot(c => c == "id" || keys.contains(c))
+    def side(tag: String) = bounded.select(keys.map(col) ++
+      (col("id").as(tag) +: carried.map(c => col(c).as(s"${c}_$tag"))): _*)
+    side("i").join(side("j"), keys).where(col("i") < col("j"))
+  }
+
+  /** `keyed` without the rows of buckets holding more than `maxBucket`
+    * rows of `sizedOn`: the guard of [[bucketPairs]], also applied on
+    * its own by the cross-side winnowing join. */
+  private def capBuckets(keyed: DataFrame, keys: Seq[String],
+      maxBucket: Int, sizedOn: DataFrame): DataFrame =
+    if (maxBucket == Int.MaxValue) keyed
+    else keyed.join(bucketSizes(sizedOn, keys)
+      .where(col("bucket_size") <= maxBucket).select(keys.map(col): _*),
+      keys, "left_semi")
+
+  private def bucketSizes(keyed: DataFrame, keys: Seq[String]): DataFrame =
+    keyed.groupBy(keys.map(col): _*).agg(count(lit(1)).as("bucket_size"))
+
+  /** The recall-loss ledger of [[bucketPairs]]' cap over the same keyed
+    * table: (keys..., bucket_size) for every bucket the cap SKIPS, so
+    * the drop is observable (one giant exact-dup family, or many
+    * degenerate keys?) instead of invisible. One map-side-combined
+    * aggregate, no pair explosion; empty when nothing was skipped. */
+  private[graft] def skippedBuckets(keyed: DataFrame, keys: Seq[String],
+      maxBucket: Int): DataFrame = {
+    require(maxBucket >= 2, "maxBucket must be >= 2")
+    bucketSizes(keyed, keys).where(col("bucket_size") > maxBucket)
   }
 
   /** End-to-end MinHash near-dup detection over any shingle table: LSH
@@ -537,19 +579,9 @@ object Dedup {
       .select(col("id"), col("simhash"),
         col("bk.blk").as("blk"), col("bk.key").as("key"))
       .localCheckpoint(false)
-    val ok = keyed.groupBy("blk", "key")
-      .agg(count(lit(1)).as("__bsz")).where(col("__bsz") <= maxBucket)
-      .select("blk", "key")
-    // explicit select: a USING semi join reorders the join columns to
-    // the front, so a positional toDF rename would mislabel the fields
-    val bounded = keyed.join(ok, Seq("blk", "key"), "left_semi")
-      .select("id", "simhash", "blk", "key")
-    val a = bounded.toDF("i", "sig_i", "blk", "key")
-    val b = bounded.toDF("j", "sig_j", "blk", "key")
-    a.join(b, Seq("blk", "key"))
-      .where(col("i") < col("j"))
+    bucketPairs(keyed, Seq("blk", "key"), maxBucket)
       .select(col("i"), col("j"),
-        expr("bit_count(sig_i ^ sig_j)").cast("int").as("hamming"))
+        expr("bit_count(simhash_i ^ simhash_j)").cast("int").as("hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()
   }
@@ -608,19 +640,8 @@ object Dedup {
         explode(array(comboCols: _*)).as("bk"))
       .select(col("id"), col("bk.blk").as("blk"), col("bk.key").as("key"))
       .localCheckpoint(false)
-    val ok = keyed.groupBy("blk", "key")
-      .agg(count(lit(1)).as("__bsz")).where(col("__bsz") <= maxBucket)
-      .select("blk", "key")
-    // explicit select: a USING semi join reorders the join columns to
-    // the front, so a positional toDF rename would mislabel the fields
-    val bounded = keyed.join(ok, Seq("blk", "key"), "left_semi")
-      .select("id", "blk", "key")
-    val a = bounded.toDF("i", "blk", "key")
-    val b = bounded.toDF("j", "blk", "key")
-    val cand = a.join(b, Seq("blk", "key"))
-      .where(col("i") < col("j"))
+    bucketPairs(keyed, Seq("blk", "key"), maxBucket)
       .select("i", "j").distinct()
-    cand
       .join(sigs.select(col("id").as("i"), col("simhash").as("sig_i")), "i")
       .join(sigs.select(col("id").as("j"), col("simhash").as("sig_j")), "j")
       .select(col("i"), col("j"),
@@ -648,10 +669,7 @@ object Dedup {
     val bk = Similarity
       .srpBandBuckets(df, idCol, vecCol, planesPerBand, bands)
       .localCheckpoint(true)
-    bk.select(col("band"), col("bucket"), col("id").as("i"))
-      .join(bk.select(col("band"), col("bucket"), col("id").as("j")),
-        Seq("band", "bucket"))
-      .where(col("i") < col("j"))
+    bucketPairs(bk, Seq("band", "bucket"), Int.MaxValue)
       .select("i", "j").distinct()
   }
 
@@ -751,13 +769,9 @@ object Dedup {
         Window.partitionBy("id").orderBy(col("ccos").desc, col("list_id"))))
       .where(col("__rn") === 1)
       .select(col("id"), col("list_id"), col("v"), col("n"))
-    val a = assigned.select(col("list_id"), col("id").as("i"),
-      col("v").as("va"), col("n").as("na"))
-    val b = assigned.select(col("list_id"), col("id").as("j"),
-      col("v").as("vb"), col("n").as("nb"))
-    a.join(b, Seq("list_id")).where(col("i") < col("j"))
+    bucketPairs(assigned, Seq("list_id"), Int.MaxValue)
       .withColumn("cos",
-        dotProduct(col("va"), col("vb")) / (col("na") * col("nb")))
+        dotProduct(col("v_i"), col("v_j")) / (col("n_i") * col("n_j")))
       .where(col("cos") >= threshold)
       .select(col("i"), col("j"), col("list_id"),
         round(col("cos"), 6).as("cos"))
@@ -1296,16 +1310,6 @@ object Dedup {
       .select(col("id"), col("f.pos").as("pos"), col("f.h").as("h"))
   }
 
-  /** Cross-document shared-span candidates from winnowing fingerprints:
-    * pairs of documents sharing at least `minShared` distinct selected
-    * hashes — each shared hash witnesses a verbatim k-token run, and by
-    * the winnowing guarantee every copied span of w + k - 1 tokens is
-    * caught. The corpus-frequency guard drops hashes selected in more
-    * than `maxDf` documents BEFORE the pair join (the q24 maxBucket
-    * discipline: one boilerplate sentence selected in B documents
-    * would otherwise fan out B·(B−1)/2 pairs), so per-hash join fanout
-    * is bounded by maxDf² and the plan survives templated corpora.
-    * Returns (i, j, n_shared) with i < j. */
   /** [[winnowSharedSpans]], memoized+checkpointed per (input plan,
     * params) through the session-cache registry — the candidate-pair
     * build is shared by the q295/q316/q333/q334 family exactly like
@@ -1319,18 +1323,23 @@ object Dedup {
       winnowSharedSpans(df, idCol, textCol, k, w, minShared, maxDf)
         .localCheckpoint(false))
 
+  /** Cross-document shared-span candidates from winnowing fingerprints:
+    * pairs of documents sharing at least `minShared` distinct selected
+    * hashes — each shared hash witnesses a verbatim k-token run, and by
+    * the winnowing guarantee every copied span of w + k - 1 tokens is
+    * caught. The corpus-frequency guard drops hashes selected in more
+    * than `maxDf` documents BEFORE the pair join ([[bucketPairs]]'
+    * cap: one boilerplate sentence selected in B documents would
+    * otherwise fan out B·(B−1)/2 pairs), so per-hash join fanout is
+    * bounded by maxDf² and the plan survives templated corpora.
+    * Returns (i, j, n_shared) with i < j. */
   def winnowSharedSpans(df: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int, minShared: Int, maxDf: Int = 64): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1: $minShared")
     require(maxDf >= 2, s"maxDf must be >= 2 (a pair needs 2 docs): $maxDf")
     val fp = winnowFingerprints(df, idCol, textCol, k, w)
       .select("id", "h").distinct()
-    val ok = fp.groupBy("h").agg(count(lit(1)).as("__df"))
-      .where(col("__df") <= maxDf).select("h")
-    val kept = fp.join(ok, Seq("h"))
-    kept.select(col("h"), col("id").as("i"))
-      .join(kept.select(col("h"), col("id").as("j")), Seq("h"))
-      .where(col("i") < col("j"))
+    bucketPairs(fp, Seq("h"), maxDf)
       .groupBy("i", "j").agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared)
   }
@@ -1489,10 +1498,8 @@ object Dedup {
       .select("id", "h").distinct()
     val bfp = winnowFingerprints(bench, idCol, textCol, k, w)
       .select("id", "h").distinct()
-    val ok = cfp.groupBy("h").agg(count(lit(1)).as("__df"))
-      .where(col("__df") <= maxDf).select("h")
     val bsz = bfp.groupBy("id").agg(count(lit(1)).as("bench_fp"))
-    cfp.join(ok, Seq("h"))
+    capBuckets(cfp, Seq("h"), maxDf, cfp)
       .select(col("h"), col("id").as("corpus_id"))
       .join(bfp.select(col("h"), col("id").as("bench_id")), Seq("h"))
       .groupBy("corpus_id", "bench_id")
@@ -1529,18 +1536,12 @@ object Dedup {
     require(minShared >= 1, s"minShared must be >= 1: $minShared")
     require(maxDf >= 2, s"maxDf must be >= 2 (a pair needs 2 docs): $maxDf")
     val fp = winnowFingerprints(df, idCol, textCol, k, w)
-    val ok = fp.select("id", "h").distinct()
-      .groupBy("h").agg(count(lit(1)).as("__df"))
-      .where(col("__df") <= maxDf).select("h")
-    val kept = fp.join(ok, Seq("h"))
-    val m = kept.select(col("h"), col("id").as("i"), col("pos").as("pa"))
-      .join(kept.select(col("h"), col("id").as("j"), col("pos").as("pb")),
-        Seq("h"))
-      .where(col("i") < col("j"))
+    val m = bucketPairs(fp, Seq("h"), maxDf,
+        sizedOn = Some(fp.select("id", "h").distinct()))
     val diags = m
-      .groupBy(col("i"), col("j"), (col("pa") - col("pb")).as("diag"))
+      .groupBy(col("i"), col("j"), (col("pos_i") - col("pos_j")).as("diag"))
       .agg(count(lit(1)).as("cnt"),
-        (max(col("pa")) - min(col("pa")) + lit(k.toLong)).as("span"))
+        (max(col("pos_i")) - min(col("pos_i")) + lit(k.toLong)).as("span"))
     val best = diags.withColumn("__rn", row_number().over(
         Window.partitionBy("i", "j")
           .orderBy(col("cnt").desc, col("span").desc, col("diag").asc)))
@@ -1550,7 +1551,7 @@ object Dedup {
     val pairs = m.groupBy("i", "j")
       .agg(count(lit(1)).as("n_matches"),
         countDistinct(col("h")).as("n_shared_h"),
-        countDistinct(col("pa") - col("pb")).as("n_diags"))
+        countDistinct(col("pos_i") - col("pos_j")).as("n_diags"))
       .where(col("n_shared_h") >= minShared)
     pairs.join(best, Seq("i", "j"))
       .select(col("i"), col("j"), col("n_shared_h"), col("n_matches"),

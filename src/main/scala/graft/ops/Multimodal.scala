@@ -487,12 +487,12 @@ object Multimodal {
     * uniform/black/letterboxed images sharing band 0x0000 — makes the
     * band self-join quadratic WITHIN that bucket (B docs → B·(B−1)/2
     * candidates). (band_idx, band_val) buckets above the cap are
-    * SKIPPED before the pair explosion via one map-side-combined
-    * aggregate + semi join; at that size they are either giant
-    * exact-dup families (an exact hash-groupBy collapses those first
-    * and cheaper) or degenerate rasters. Pass
-    * `Int.MaxValue` for the exhaustive path (the documented
-    * pigeonhole recall contract holds verbatim). The parameter is REQUIRED — like
+    * SKIPPED before the pair explosion ([[Dedup.bucketPairs]]); at
+    * that size they are either giant exact-dup families (an exact
+    * hash-groupBy collapses those first and cheaper) or degenerate
+    * rasters. Pass `Int.MaxValue` for the exhaustive path (no guard
+    * aggregate is planned, and the documented pigeonhole recall
+    * contract holds verbatim). The parameter is REQUIRED — like
     * [[dhashSkippedBands]], the recall-vs-blowup tradeoff must be an
     * explicit choice at every call site; a caller that sets a finite
     * cap for corpus scale accepts the recall loss and MUST read
@@ -505,25 +505,10 @@ object Multimodal {
     require(maxBits >= 0 && maxBits <= 3,
       s"dhashNearDupPairs: 4-band pigeonhole guarantees recall only " +
         s"to hamming 3, got maxBits=$maxBits; re-band before raising")
-    require(maxBucket >= 2, "maxBucket must be >= 2")
-    val withIdx = dhashBands(hashes, idCol, hashCol)
-    // uncapped → no guard aggregate in the plan (the common gated path
-    // pays nothing for the scale knob it does not use)
-    val bounded = if (maxBucket == Int.MaxValue) withIdx else {
-      val okBuckets = withIdx.groupBy("band_idx", "band_val")
-        .agg(count(lit(1)).as("__bsz"))
-        .where(col("__bsz") <= maxBucket)
-        .select("band_idx", "band_val")
-      withIdx.join(okBuckets, Seq("band_idx", "band_val"), "left_semi")
-    }
-    val l = bounded.select(col("band_idx"), col("band_val"),
-      col("id").as("i"), col("h").as("hi"))
-    val r = bounded.select(col("band_idx"), col("band_val"),
-      col("id").as("j"), col("h").as("hj"))
-    l.join(r, Seq("band_idx", "band_val"))
-      .where(col("i") < col("j"))
+    Dedup.bucketPairs(dhashBands(hashes, idCol, hashCol),
+        Seq("band_idx", "band_val"), maxBucket)
       .select(col("i"), col("j"),
-        bit_count(col("hi").bitwiseXOR(col("hj"))).cast("int")
+        bit_count(col("h_i").bitwiseXOR(col("h_j"))).cast("int")
           .as("hamming"))
       .where(col("hamming") <= maxBits)
       .distinct()
@@ -532,15 +517,11 @@ object Multimodal {
   /** The recall-loss ledger for [[dhashNearDupPairs]]'s degenerate-band
     * guard: the (band_idx, band_val) buckets a `maxBucket` cap SKIPS,
     * with their sizes — so the drop is observable (one giant exact-dup
-    * family? a sea of black frames?) instead of invisible. Same
-    * banding as the pairs path, one map-side-combined aggregate, no
-    * pair explosion. Empty when the guard dropped nothing. */
+    * family? a sea of black frames?) instead of invisible
+    * ([[Dedup.skippedBuckets]] over the same banding as the pairs
+    * path). Empty when the guard dropped nothing. */
   def dhashSkippedBands(hashes: DataFrame, idCol: String,
-      hashCol: String, maxBucket: Int): DataFrame = {
-    require(maxBucket >= 2, "maxBucket must be >= 2")
-    dhashBands(hashes, idCol, hashCol)
-      .groupBy("band_idx", "band_val")
-      .agg(count(lit(1)).as("bucket_size"))
-      .where(col("bucket_size") > maxBucket)
-  }
+      hashCol: String, maxBucket: Int): DataFrame =
+    Dedup.skippedBuckets(dhashBands(hashes, idCol, hashCol),
+      Seq("band_idx", "band_val"), maxBucket)
 }

@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   *  - lines `field: value`, `#` comments, field names case-insensitive;
   *    `user-agent`, `allow`, `disallow` interpreted, others skipped;
   *  - consecutive user-agent lines open a GROUP whose rules follow; a
-  *    user-agent line after rules starts a new group; groups naming
-  *    the same agent COMBINE (§2.2.1);
+  *    user-agent line after an allow/disallow/crawl-delay record
+  *    starts a new group ([[groups]], the one grammar [[parse]] and
+  *    [[crawlDelay]] share); groups naming the same agent COMBINE
+  *    (§2.2.1);
   *  - group selection for a product token: case-insensitive exact
   *    token match, else the `*` group, else default-allow;
   *  - rule matching: `*` matches any octet run, `$` anchors the end;
@@ -33,40 +35,69 @@ object Robots {
 
   final case class Rule(allow: Boolean, pattern: String)
 
+  /** `field: value` records of a robots.txt body in file order — the
+    * one line tokenizer every reader here shares: `#` comments
+    * stripped, lines without a `field:` prefix skipped, field names
+    * lowercased, both sides trimmed. A null body has no records. */
+  private def records(txt: String): Seq[(String, String)] =
+    Option(txt).getOrElse("").split("\n", -1).toSeq.flatMap { raw =>
+      val h = raw.indexOf('#')
+      val line = (if (h >= 0) raw.substring(0, h) else raw).trim
+      val ci = line.indexOf(':')
+      if (ci > 0) Some((line.substring(0, ci).trim.toLowerCase,
+        line.substring(ci + 1).trim))
+      else None
+    }
+
+  /** One user-agent group: its (lowercased) agent tokens and its
+    * member records (`allow`, `disallow`, `crawl-delay`) in file
+    * order. */
+  private final case class Group(agents: Seq[String],
+      rules: Seq[(String, String)])
+
+  /** The one group grammar [[parse]] and [[crawlDelay]] walk:
+    * consecutive `user-agent` lines open a group; an `allow`,
+    * `disallow` or `crawl-delay` record joins the open group and ENDS
+    * its agent list, so the next `user-agent` line starts a new group
+    * (the rule CPython's `urllib.robotparser` follows); `sitemap` and
+    * unknown records neither join nor end a group. Member records
+    * before any user-agent line belong to no group and are dropped
+    * (RFC: rules outside a group are ignored). A group without member
+    * records is still returned, so its agents count as having a
+    * group. */
+  private def groups(txt: String): Seq[Group] = {
+    val out = Seq.newBuilder[Group]
+    var agents = Vector.empty[String]
+    var rules = Vector.empty[(String, String)]
+    def close(): Unit = {
+      if (agents.nonEmpty) out += Group(agents, rules)
+      agents = Vector.empty
+      rules = Vector.empty
+    }
+    records(txt).foreach {
+      case ("user-agent", v) =>
+        if (rules.nonEmpty) close()
+        if (v.nonEmpty) agents :+= v.toLowerCase
+      case r @ (("allow" | "disallow" | "crawl-delay"), _) =>
+        if (agents.nonEmpty) rules :+= r
+      case _ => () // sitemap / unknown fields: not part of any group
+    }
+    close()
+    out.result()
+  }
+
   /** agent token (lowercased) → combined rules in file order. */
   def parse(txt: String): Map[String, Seq[Rule]] = {
     val acc = scala.collection.mutable.LinkedHashMap[String,
       scala.collection.mutable.ArrayBuffer[Rule]]()
-    var agents: List[String] = Nil
-    var inRules = false
-    Option(txt).getOrElse("").split("\n", -1).foreach { raw =>
-      val noComment = {
-        val h = raw.indexOf('#')
-        if (h >= 0) raw.substring(0, h) else raw
-      }
-      val line = noComment.trim
-      val ci = line.indexOf(':')
-      if (ci > 0) {
-        val field = line.substring(0, ci).trim.toLowerCase
-        val value = line.substring(ci + 1).trim
-        field match {
-          case "user-agent" =>
-            if (inRules) { agents = Nil; inRules = false }
-            val a = value.toLowerCase
-            if (a.nonEmpty) {
-              agents = a :: agents
-              acc.getOrElseUpdate(a,
-                scala.collection.mutable.ArrayBuffer[Rule]())
-            }
-          case "allow" | "disallow" =>
-            inRules = true
-            // a rule before any user-agent line belongs to no group
-            // (RFC: rules outside a group are ignored)
-            if (agents.nonEmpty && !(field == "disallow" && value.isEmpty))
-              agents.foreach(a => acc(a) += Rule(field == "allow", value))
-            // empty disallow = allow-all: representable as no rule
-          case _ => () // sitemap / unknown fields: skipped
-        }
+    groups(txt).foreach { g =>
+      g.agents.foreach(a =>
+        acc.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer[Rule]()))
+      g.rules.foreach {
+        case ("disallow", "") => () // allow-all: representable as no rule
+        case (f @ ("allow" | "disallow"), v) =>
+          g.agents.foreach(a => acc(a) += Rule(f == "allow", v))
+        case _ => ()
       }
     }
     acc.map { case (k, v) => k -> v.toSeq }.toMap
@@ -138,23 +169,8 @@ object Robots {
     * verbatim (absolute URLs per the protocol), order preserved,
     * comments stripped, group position irrelevant (the record is
     * global to the file). */
-  def sitemapRecords(txt: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    Option(txt).getOrElse("").split("\n", -1).foreach { raw =>
-      val noComment = {
-        val h = raw.indexOf('#')
-        if (h >= 0) raw.substring(0, h) else raw
-      }
-      val line = noComment.trim
-      val ci = line.indexOf(':')
-      if (ci > 0 &&
-        line.substring(0, ci).trim.equalsIgnoreCase("sitemap")) {
-        val v = line.substring(ci + 1).trim
-        if (v.nonEmpty) out += v
-      }
-    }
-    out.toSeq
-  }
+  def sitemapRecords(txt: String): Seq[String] =
+    records(txt).collect { case ("sitemap", v) if v.nonEmpty => v }
 
   /** (host, rec_idx, sm_url) seed table over per-host robots bodies —
     * map-only, one row per `Sitemap:` record in file order, ready to
@@ -186,38 +202,14 @@ object Robots {
     * the selected group (selection is by user-agent match, not by
     * directive validity). */
   def crawlDelay(txt: String, agent: String): Option[Double] = {
-    val delays = scala.collection.mutable.LinkedHashMap[String,
-      Option[Double]]()
-    var agents: List[String] = Nil
-    var inRules = false
-    Option(txt).getOrElse("").split("\n", -1).foreach { raw =>
-      val noComment = {
-        val h = raw.indexOf('#')
-        if (h >= 0) raw.substring(0, h) else raw
-      }
-      val line = noComment.trim
-      val ci = line.indexOf(':')
-      if (ci > 0) {
-        val field = line.substring(0, ci).trim.toLowerCase
-        val value = line.substring(ci + 1).trim
-        field match {
-          case "user-agent" =>
-            if (inRules) { agents = Nil; inRules = false }
-            val a = value.toLowerCase
-            if (a.nonEmpty) {
-              agents = a :: agents
-              delays.getOrElseUpdate(a, None)
-            }
-          case "allow" | "disallow" =>
-            inRules = true
-          case "crawl-delay" =>
-            inRules = true
-            val parsed = value.toDoubleOption
-              .filter(d => d >= 0 && !d.isNaN && !d.isInfinite)
-            if (parsed.isDefined)
-              agents.foreach(a => delays(a) = parsed)
-          case _ => ()
-        }
+    val delays = scala.collection.mutable.HashMap[String, Option[Double]]()
+    groups(txt).foreach { g =>
+      g.agents.foreach(a => delays.getOrElseUpdate(a, None))
+      g.rules.foreach {
+        case ("crawl-delay", v) =>
+          v.toDoubleOption.filter(d => d >= 0 && !d.isNaN && !d.isInfinite)
+            .foreach(d => g.agents.foreach(a => delays(a) = Some(d)))
+        case _ => ()
       }
     }
     val tok = Option(agent).getOrElse("").toLowerCase
@@ -316,15 +308,24 @@ object Robots {
        else p.join(r, Seq("host"), "left"))
         .as[(String, String, String, String)]
     joined.mapPartitions { it =>
-      val cache = scala.collection.mutable.HashMap[String,
-        Map[String, Seq[Rule]]]()
+      val verdict = verdicts[String]()
       it.map { case (host, agent, path, txt) =>
-        val allowed =
-          if (txt == null) true // no robots.txt → allowed (RFC §2.3.1.2)
-          else isAllowed(
-            cache.getOrElseUpdate(host, parse(txt)), agent, path)
-        (host, agent, path, allowed)
+        (host, agent, path, verdict(host, txt, agent, path))
       }
     }.toDF("host", "agent", "path", "allowed")
+  }
+
+  /** A parse-once verdict function for one partition: `(key, body,
+    * agent, path) => allowed`, parsing each key's body the first time
+    * the key is seen and reusing the parsed groups after that. The key
+    * names the body (a host, or a host and its version window), so two
+    * different bodies must never share a key. A null body is allowed
+    * (no robots.txt → allowed, RFC §2.3.1.2). Shared by [[crawlFilter]],
+    * the streaming fetch-time filter and the streaming ingest gate. */
+  private[graft] def verdicts[K](): (K, String, String, String) => Boolean = {
+    val cache = scala.collection.mutable.HashMap[K, Map[String, Seq[Rule]]]()
+    (key, txt, agent, path) =>
+      txt == null ||
+        isAllowed(cache.getOrElseUpdate(key, parse(txt)), agent, path)
   }
 }

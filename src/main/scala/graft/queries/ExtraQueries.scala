@@ -1842,17 +1842,13 @@ object ExtraQueries {
       val src = mem.toDF.toDF("arc_id", "content")
       val pages = graft.ops.Warc.curatedPages(src, "arc_id", "content")
       val admitted = pages.mapPartitions { it =>
-        val cache = scala.collection.mutable.HashMap[String,
-          Map[String, Seq[graft.ops.Robots.Rule]]]()
+        val verdict = graft.ops.Robots.verdicts[String]()
         it.filter { p =>
           val m = "http://([^/]+)(/.*)?".r.findFirstMatchIn(p.url)
           m.forall { g =>
             val host = g.group(1)
-            val path = Option(g.group(2)).getOrElse("/")
-            robotsByHost.get(host).forall(txt =>
-              graft.ops.Robots.isAllowed(
-                cache.getOrElseUpdate(host, graft.ops.Robots.parse(txt)),
-                "graftbot", path))
+            verdict(host, robotsByHost.get(host).orNull, "graftbot",
+              Option(g.group(2)).getOrElse("/"))
           }
         }
       }

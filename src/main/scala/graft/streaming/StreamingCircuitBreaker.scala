@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.ops.CrawlHealth
 
 /** Streaming per-host failure-run circuit breaker — the ONLINE form
   * of [[graft.ops.CrawlHealth.circuitBreakers]]: fetch outcomes
@@ -39,12 +40,7 @@ object StreamingCircuitBreaker {
     require(tripAt >= 1, s"tripAt must be >= 1: $tripAt")
     val spark = events.sparkSession
     import spark.implicits._
-    val keyed = events
-      .select(col(hostCol).cast("string").as("host"),
-        col(orderCol).cast("long").as("ord"),
-        col(okCol).cast("boolean").as("ok"))
-      .where(col("host").isNotNull && col("ord").isNotNull &&
-        col("ok").isNotNull)
+    val keyed = CrawlHealth.breakerEvents(events, hostCol, orderCol, okCol)
       .as[(String, Long, Boolean)]
       .groupByKey(_._1)
     keyed.flatMapGroupsWithState[St, BreakerRow](

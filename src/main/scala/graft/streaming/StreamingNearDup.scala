@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
+import graft.ops.Dedup
+
 /** Streaming MinHash-LSH near-duplicate CANDIDATE detection — the
   * unbounded-stream counterpart of `Dedup.minhashLshPairs`' candidate
   * stage: as documents arrive, each one is checked against every
@@ -36,37 +38,50 @@ object StreamingNearDup {
   final case class CandidatePair(band: Int, i: Long, j: Long)
 
   /** (band, key, id[, ts]) rows ready for per-bucket grouping: the
-    * row-local signature + banding shared by both variants. */
+    * row-local signature + banding shared by both variants, built from
+    * the batch operator's own hash family and band keys. */
   private def bandedKeys(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int,
       extra: Seq[String]): DataFrame = {
-    // one md5 per shingle, both 28-bit halves kept: h_i = h1 + i*h2
     val grams = graft.functions.WordNgramsExpr
       .ngrams(col(textCol), shingleN, distinct = true)
+    val extraCols = extra.map(col)
     val hashed = df.select(
-        col(idCol).cast("long").as("id") +: extra.map(col) :+
-        transform(grams, g => struct(
-          conv(substring(md5(g), 1, 7), 16, 10).cast("long").as("h1"),
-          (conv(substring(md5(g), 8, 7), 16, 10).cast("long") * 2 + 1)
-            .as("h2"))).as("hs"): _*)
+        col(idCol).cast("long").as("id") +: extraCols :+
+        transform(grams, { g =>
+          val (h1, h2) = Dedup.minhashHashPair(g)
+          struct(h1.as("h1"), h2.as("h2"))
+        }).as("hs"): _*)
       .where(size(col("hs")) > 0) // < n words: no signature (batch parity)
     val sigCols = (0 until numHashes).map(i =>
-      array_min(transform(col("hs"), h =>
-        h.getField("h1") + lit(i.toLong) * h.getField("h2"))).as(s"s$i"))
-    val extraCols = extra.map(col)
-    val sigs = hashed.select(col("id") +: extraCols ++: sigCols: _*)
-    val r = numHashes / bands
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws(",",
-          (0 until r).map(i => col(s"s${b * r + i}")): _*)).as("key"))
-    }
-    sigs
+      array_min(transform(col("hs"),
+        h => Dedup.minhashHash(h.getField("h1"), h.getField("h2"), i)))
+        .as(s"s$i"))
+    hashed.select(col("id") +: extraCols ++: sigCols: _*)
       .select(col("id") +: extraCols :+
-        explode(array(bandCols: _*)).as("bk"): _*)
+        explode(Dedup.lshBandKeys(bands, numHashes / bands)).as("bk"): _*)
       .select(col("bk.band").as("band") +: col("bk.key").as("key") +:
         col("id") +: extraCols: _*)
+  }
+
+  /** One bucket's fold over a micro-batch: the batch's ids join the
+    * bucket's members in ascending id order, each new member pairing
+    * with every earlier one, until the bucket holds `maxBucket`
+    * members (later arrivals are dropped; a re-arriving member emits
+    * nothing). Returns the new members and the emitted pairs. */
+  private def admit(band: Int, prev: List[Long], ids: Seq[Long],
+      maxBucket: Int): (List[Long], Iterator[CandidatePair]) = {
+    val members = scala.collection.mutable.LinkedHashSet.from(prev)
+    val out = List.newBuilder[CandidatePair]
+    ids.sorted.foreach { id =>
+      if (members.size < maxBucket && !members.contains(id)) {
+        members.foreach(m =>
+          out += CandidatePair(band, math.min(m, id), math.max(m, id)))
+        members += id
+      }
+    }
+    (members.toList, out.result().iterator)
   }
 
   /** (band, i, j) candidate pairs, i < j, emitted when the LATER
@@ -92,19 +107,10 @@ object StreamingNearDup {
     keyed.flatMapGroupsWithState[List[Long], CandidatePair](
       OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
       case ((band, _), rows, state) =>
-        val members =
-          scala.collection.mutable.LinkedHashSet.from(
-            state.getOption.getOrElse(Nil))
-        val out = List.newBuilder[CandidatePair]
-        rows.map(_._3).toSeq.sorted.foreach { id =>
-          if (members.size < maxBucket && !members.contains(id)) {
-            members.foreach(m =>
-              out += CandidatePair(band, math.min(m, id), math.max(m, id)))
-            members += id
-          }
-        }
-        state.update(members.toList)
-        out.result().iterator
+        val (members, out) = admit(band, state.getOption.getOrElse(Nil),
+          rows.map(_._3).toSeq, maxBucket)
+        state.update(members)
+        out
     }
   }
 
@@ -152,25 +158,16 @@ object StreamingNearDup {
         } else {
           val (prevMembers, prevMaxTs) =
             state.getOption.getOrElse((Nil, Long.MinValue))
-          val members =
-            scala.collection.mutable.LinkedHashSet.from(prevMembers)
-          val out = List.newBuilder[CandidatePair]
           val batch = rows.toSeq
-          batch.sortBy(_._3).foreach { r =>
-            val id = r._3
-            if (members.size < maxBucket && !members.contains(id)) {
-              members.foreach(m =>
-                out += CandidatePair(band, math.min(m, id), math.max(m, id)))
-              members += id
-            }
-          }
+          val (members, out) =
+            admit(band, prevMembers, batch.map(_._3), maxBucket)
           val maxSeenTs = math.max(prevMaxTs, batch.map(_._4.getTime).max)
-          state.update((members.toList, maxSeenTs))
+          state.update((members, maxSeenTs))
           // timeout must also sit at/after the current watermark (late
           // rows would otherwise schedule an already-expired timeout)
           state.setTimeoutTimestamp(
             math.max(maxSeenTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-          out.result().iterator
+          out
         }
     }
   }

@@ -16,7 +16,7 @@ import graft.ops.Robots
   * static versioned table broadcasts per micro-batch; no streaming
   * state, Append mode needs no watermark) on host plus the validity
   * interval `valid_from <= fetch_ts < valid_to` as residual, then the
-  * same per-partition parsed-group cache as [[Robots.crawlFilter]] —
+  * same per-partition parse-once verdicts as [[Robots.crawlFilter]] —
   * keyed by (host, version window) so two versions of one host never
   * share an entry.
   *
@@ -64,15 +64,11 @@ object StreamingRobots {
       // primitive-Long encode
       .as[(String, String, String, Option[Long], Option[Long], String)]
       .mapPartitions { it =>
-        val cache = scala.collection.mutable.HashMap[(String, Long),
-          Map[String, Seq[Robots.Rule]]]()
+        // no body in force (null) → allowed, RFC §2.3.1.2
+        val verdict = Robots.verdicts[(String, Long)]()
         it.map { case (host, agent, path, ts, from, txt) =>
-          val allowed =
-            if (txt == null) true // no body in force (RFC §2.3.1.2)
-            else Robots.isAllowed(
-              cache.getOrElseUpdate((host, from.getOrElse(Long.MinValue)),
-                Robots.parse(txt)), agent, path)
-          (host, agent, path, ts, allowed)
+          (host, agent, path, ts, verdict(
+            (host, from.getOrElse(Long.MinValue)), txt, agent, path))
         }
       }
       .toDF("host", "agent", "path", "fetch_ts_us", "allowed")

@@ -76,6 +76,22 @@ class RobotsSpec extends AnyFunSuite {
     assert(Robots.crawlDelay(inv, "graftbot") === None)
   }
 
+  test("one group grammar: crawl-delay ends the agent list for both " +
+    "the verdict and the delay") {
+    val txt = "User-agent: a\nCrawl-delay: 1\nUser-agent: b\nDisallow: /\n"
+    val g = Robots.parse(txt)
+    assert(Robots.isAllowed(g, "a", "/x"), "a's group has no rules")
+    assert(!Robots.isAllowed(g, "b", "/x"))
+    assert(Robots.crawlDelay(txt, "a") === Some(1.0))
+    assert(Robots.crawlDelay(txt, "b") === None)
+    // sitemap and unknown records neither join nor end a group
+    val g2 = Robots.parse(
+      "User-agent: a\nSitemap: https://h/s.xml\nX-Unknown: v\n" +
+        "User-agent: b\nDisallow: /p\n")
+    assert(!Robots.isAllowed(g2, "a", "/p"))
+    assert(!Robots.isAllowed(g2, "b", "/p"))
+  }
+
   test("hostile input: garbage lines, no throw, rules outside groups") {
     val g = Robots.parse(
       "Disallow: /orphan/\n::::\n\u0000 junk\nUser-agent: *\n" +

@@ -38,6 +38,34 @@ class StreamingCrawlHealthSpec extends SparkSpec {
     assert(rows(1).getLong(4) === 0L, "the trailing ok resets open")
   }
 
+  test("breakerStates and circuitBreakers agree on a null outcome: " +
+    "it is dropped, not counted, and does not split the run") {
+    implicit val sqlCtx = spark.sqlContext
+    val log = Seq(("h", 1L, Some(false)), ("h", 2L, None),
+      ("h", 3L, Some(false)))
+    val batch = graft.ops.CrawlHealth.circuitBreakers(
+        log.toDF("host", "ord", "ok"), "host", "ord", "ok", tripAt = 2)
+      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getBoolean(5))).toSeq
+    val mem = MemoryStream[(String, Long, Option[Boolean])]
+    val out = StreamingCircuitBreaker.breakerStates(
+      mem.toDF.toDF("host", "ord", "ok"), "host", "ord", "ok", tripAt = 2)
+    val q = out.toDF.writeStream.format("memory").queryName("sbrknull")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("gsbrknull").toString)
+      .outputMode(OutputMode.Append()).start()
+    mem.addData(log: _*)
+    q.processAllAvailable()
+    q.stop()
+    val last = spark.sql(
+      "SELECT nEvents, nFail, maxFailRun, openRun, tripped " +
+        "FROM sbrknull ORDER BY seq DESC LIMIT 1").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getBoolean(4))).toSeq
+    assert(batch === Seq((2L, 2L, 2L, 2L, true)))
+    assert(batch === last)
+  }
+
   test("trap screen: KMV state is set-deterministic across batch " +
     "splits and the estimate path engages above k") {
     implicit val sqlCtx = spark.sqlContext

@@ -56,6 +56,31 @@ class StreamingNearDupSpec extends SparkSpec {
     assert(got.sorted == Seq((0, 1L, 2L), (1, 1L, 2L)), got)
   }
 
+  test("batch and streaming MinHash-LSH emit the same candidate pairs") {
+    val docs = Seq(
+      1L -> dup,
+      2L -> "totally different words here now",
+      3L -> dup,                                  // exact duplicate of 1
+      4L -> "alpha beta gamma delta zeta",        // near duplicate of 1
+      5L -> "solo",                               // < shingleN words
+      6L -> "totally different words here now",   // exact duplicate of 2
+      7L -> "alpha beta gamma delta epsilon eta",
+      8L -> "solo")
+    val sigs = graft.ops.Dedup.minhashSignaturesFromShingles(
+      graft.ops.Dedup.wordShingleTable(docs.toDF("doc_id", "text"),
+        "doc_id", "text", 2), 8)
+    val batch = graft.ops.Dedup.minhashLshPairs(sigs, 2, 4, maxBucket = 100)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(batch.contains((1L, 3L)) && batch.contains((2L, 6L)), batch)
+    assert(!batch.exists(p => p._1 == 5L || p._2 == 5L || p._2 == 8L),
+      "a document shorter than shingleN words has no signature")
+    val oneBatch = drive(Seq(docs), maxBucket = 100)
+    val twoBatches = drive(Seq(docs.filter(_._1 % 2 == 0),
+      docs.filter(_._1 % 2 == 1)), maxBucket = 100)
+    assert(oneBatch.map(p => (p._2, p._3)).toSet === batch)
+    assert(twoBatches.map(p => (p._2, p._3)).toSet === batch)
+  }
+
   private def driveTs(batches: Seq[Seq[(Long, String, Long)]],
       ttlMs: Long): Seq[(Int, Long, Long)] = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
