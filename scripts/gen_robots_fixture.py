@@ -50,6 +50,9 @@ def parse(txt):
             if a:
                 agents.append(a)
                 groups.setdefault(a, [])
+        elif field == "crawl-delay":
+            # ends the agent list like a rule line, without adding a rule
+            in_rules = True
         elif field in ("allow", "disallow"):
             in_rules = True
             if agents and not (field == "disallow" and value == ""):

@@ -51,13 +51,14 @@ object StatFunctions {
   /** Fixed-width histogram bin index: least(floor((x-min)/w), bins-1) with
     * w = (max-min)/bins. Pure IEEE double arithmetic — identical in any
     * engine, so exact-match safe. min==max collapses to bin 0. */
-  def histogramBin(c: Column, mn: Double, mx: Double, bins: Int): Column = {
+  def histogramBin(c: Column, mn: Double, mx: Double, bins: Int): Column =
     if (mx <= mn) lit(0)
-    else {
-      val w = (mx - mn) / bins
-      least(floor((c - lit(mn)) / lit(w)), lit(bins - 1)).cast("int")
-    }
-  }
+    else histogramBin(c, lit(mn), lit((mx - mn) / bins), lit(bins - 1))
+
+  /** [[histogramBin]] with the range given per row: `w` the bin width
+    * (max-min)/bins, positive, and `last` = bins-1. */
+  def histogramBin(c: Column, mn: Column, w: Column, last: Column): Column =
+    least(floor((c - mn) / w), last).cast("int")
 
   /** Dot product of two array<numeric> columns in double precision,
     * summed left-to-right (deterministic). Backed by the codegen'd

@@ -125,18 +125,23 @@ object CrawlSchedule {
     *
     *   fetch_at(k) = delay_h·k + running_max(due(j) − delay_h·j)
     *
-    * Non-positive / null delays are rejected loudly — a zero delay
-    * is "no politeness", which is a policy decision the caller
-    * should make by passing 1 µs explicitly, not a default this
-    * function should silently honor. Exact 64-bit integer arithmetic
-    * end to end; one shuffle on host. */
+    * Anything but one positive delay per host is rejected loudly,
+    * by one groupBy(host) guard aggregate: a zero delay is "no
+    * politeness", which is a policy decision the caller should make
+    * by passing 1 µs explicitly, not a default this function should
+    * silently honor, and two delays on one host break the closed
+    * form. Exact 64-bit integer arithmetic end to end; one shuffle on
+    * host. */
   def dueSchedulePerHost(due: DataFrame, hostCol: String,
       urlCol: String, dueCol: String, delayCol: String): DataFrame = {
-    val bad = due.where(col(delayCol).isNull ||
-      col(delayCol).cast("long") <= 0)
+    val d = col(delayCol).cast("long")
+    val bad = due.groupBy(col(hostCol).cast("string"))
+      .agg(count(when(d.isNull || d <= 0, 1)).as("n_bad"),
+        min(d).as("lo"), max(d).as("hi"))
+      .where(col("n_bad") > 0 || col("lo") =!= col("hi"))
     require(bad.isEmpty,
-      s"$delayCol must be positive on every row — null/zero delays " +
-        "are a policy decision, not a default")
+      s"$delayCol must be one positive delay per host — null/zero " +
+        "delays are a policy decision, not a default")
     val ord = Window.partitionBy("host").orderBy("due_us", "url")
     val run = Window.partitionBy("host").orderBy("due_us", "url")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -141,10 +141,10 @@ object Dust {
     * broadcasts (the [[Robots]] argument; a >2M-host rule set would
     * want the same dual-path treatment). The frontier side is
     * map-only parse + posexplode (fan-out bounded by params/URL),
-    * one broadcast-hash join, one groupBy(url) to reassemble — the
-    * single shuffle, partially aggregated, keyed by the frontier URL
-    * so skew follows URL frequency (dedupe first if the frontier
-    * carries repeats). */
+    * one broadcast-hash join, one groupBy per input row to
+    * reassemble — the single shuffle, partially aggregated. Each
+    * input row yields exactly one output row: a frontier that lists
+    * a URL twice gets it back twice, each with its own params. */
   def applyRules(frontier: DataFrame, urlCol: String,
       rules: DataFrame): DataFrame = {
     val safe = rules.where(col("safe"))
@@ -158,14 +158,15 @@ object Dust {
     val noQuery = base.where(col("__qpos") === 0)
       .select(col("url"), col("__defrag").as("canonical_url"))
     val kept = base.where(col("__qpos") > 0)
+      .withColumn("__rid", monotonically_increasing_id())
       .withColumn("__pre", expr("substring(__defrag, 1, __qpos - 1)"))
       .withColumn("host", hostOf(col("__defrag")))
-      .select(col("url"), col("__pre"), col("host"),
+      .select(col("__rid"), col("url"), col("__pre"), col("host"),
         posexplode(split(expr("substring(__defrag, __qpos + 1)"), "&"))
           .as(Seq("__i", "__p")))
       .join(broadcast(safe), col("host") === col("__rhost") &&
         substring_index(col("__p"), "=", 1) === col("__rparam"), "left")
-      .groupBy("url", "__pre")
+      .groupBy("__rid", "url", "__pre")
       .agg(array_sort(collect_list(
         when(col("__rhost").isNull, struct(col("__i"), col("__p")))))
         .as("__keep"))

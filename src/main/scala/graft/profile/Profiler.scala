@@ -1,7 +1,7 @@
 package graft.profile
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -25,11 +25,14 @@ import scala.concurrent.duration.Duration
   *   B. one explode->groupBy job producing per-(column,value) counts, from
   *      which exact n_distinct / n_unique / top-K / uniformity chi2 for ALL
   *      columns come at once;
-  *   C. one explode->groupBy job for every column's fixed-width histogram;
+  *   C. one groupBy(column, bin) job for every column's fixed-width
+  *      histogram, over B's count tables (exact mode) or the data;
   *   D. one `df.agg` for every numeric column's MAD (needs pass-A medians);
-  *   E. one char-level rollup over the (small) distinct-value table;
+  *   E. one char-level rollup over the (small) distinct-value table,
+  *      its top chars through B's top-K heaps;
   *   F. one groupBy-all-columns job for duplicate rows;
-  *   G. one `df.agg` with all pairwise Pearson + nullity correlations;
+  *   G. one co-moment scan with all pairwise Pearson (and Spearman)
+  *      correlations;
   *   H. one explode->groupBy job for all Cramer's-V contingency tables;
   *   K. opt-in Kendall tau-b and phi-k.
   *
@@ -87,7 +90,10 @@ object Profiler {
   /** One fixed-width histogram: `value` is the column as a double (epoch
     * seconds for datetimes), binned over [min, max]. */
   private case class HistTarget(
-      name: String, value: Column, min: Double, max: Double, bins: Int)
+      name: String, value: Column, min: Double, max: Double, bins: Int) {
+    /** Bin width; none when max <= min (one bin). */
+    def width: Option[Double] = if (max > min) Some((max - min) / bins) else None
+  }
 
   def profile(df: DataFrame, cfg: ProfileConfig = ProfileConfig.default): TableProfile = {
     // MapType columns canonicalize to a sorted-entries string up front
@@ -120,9 +126,9 @@ object Profiler {
     // on a bounded pool of concurrent Spark jobs (the reference used a
     // client-side ThreadPool the same way, model/summary.py:155-185).
     // Launch order is the pool's FIFO order: pass A's chunks, B1, B2,
-    // then (before the pass-B await) F, the head, C's full-bin job and
-    // Spearman's ranks. A pool thread only ever awaits a future created
-    // before its own, so even poolSize = 1 cannot deadlock.
+    // then (before the pass-B await) F, the head and Spearman's ranks.
+    // A pool thread only ever awaits a future created before its own,
+    // so even poolSize = 1 cannot deadlock.
     val pool = Executors.newFixedThreadPool(cfg.poolSize)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val a = new PassA(aChunks.zipWithIndex.map { case (ch, i) =>
@@ -134,7 +140,8 @@ object Profiler {
         else if (cfg.exactDistinct) exact
         else (sketchValueInfo(a, cols), None)
       }
-    val catF = passB(catSupported)(passBCat(working, catSupported, cfg))
+    val catF = passB(catSupported)(passBCat(working, catSupported, preDatetime,
+      preDatetime.filter(typeOf(_).contains(TimestampType)), cfg))
     val numF = passB(preNumeric)(
       passBNum(working, preNumeric, preNumeric.filter(typeOf(_).contains(FloatType)), cfg))
     try {
@@ -144,9 +151,6 @@ object Profiler {
       // to the unrepartitioned profile (limit(10) on the raw scan reads
       // almost nothing, so this costs ~0 even when `working` differs)
       val headF = Future(passHead(if (repartitioned) canon else working, fields, cfg))
-      val histPreF =
-        if (!cfg.computeHistograms || !cfg.exactDistinct) Future.successful(Map.empty[String, Histogram])
-        else Future(passCFull(working, a, preNumeric, preDatetime, cfg))
       val ranksF: Future[Option[Either[RankMaps, DataFrame]]] =
         if (!cfg.computeCorrelations || !cfg.computeSpearman || preNumeric.size < 2)
           Future.successful(None)
@@ -171,17 +175,22 @@ object Profiler {
         val nd = valueInfo.get(c).map(_.nDistinct).getOrElse(Long.MaxValue)
         nd >= 2 && nd <= cfg.maxCramersCardinality
       }
-      val histogramsF = Future(passC(working, a, await(histPreF), numCounts,
+      val histogramsF = Future(passC(working, a,
+        numCounts.toSeq ++ vcTable.filter(_ => datetimeCols.nonEmpty),
         numericCols, datetimeCols, valueInfo(_).nDistinct, cfg))
       val madsF = Future(passD(working, a, numericCols, cfg))
-      val charStatsF = Future(passE(vcTable, stringCats))
-      // Pearson and Spearman run as CONCURRENT futures: Spearman's
-      // co-moment scan overlaps Pearson's aggregate instead of queueing
-      // behind it — they share no state beyond the persisted input.
-      val pearsonF = Future(passPearson(working, numericCols, cfg))
-      val spearmanF = Future {
+      val charStatsF = Future(passE(vcTable.filter(_ => cfg.computeCharStats), stringCats))
+      // Pearson (and Spearman, given rank maps) come from one co-moment
+      // scan; the shuffle-rank Spearman fallback runs concurrently.
+      val coMomentsF = Future {
+        if (!cfg.computeCorrelations || numericCols.size < 2) Seq.empty
+        else passG(working, numericCols, await(ranksF).flatMap(_.left.toOption),
+          repartitioned)
+      }
+      val spearmanShuffleF = Future {
         if (numericCols.size < 2) None
-        else await(ranksF).map(passSpearman(working, numericCols, _, repartitioned))
+        else await(ranksF).flatMap(_.toOption).map(t =>
+          timed("G:spearman")(spearmanMatrix(working, numericCols, Some(t))))
       }
       val cramersF = Future(passH(working, contingencyCols, cfg))
       val kendallF = Future(passK(working, numericCols, cfg))
@@ -207,7 +216,8 @@ object Profiler {
               case _ => Map.empty[Double, Double]
             }
             NumericStats(
-              mean = a.double(s"$p::mean"), std = a.double(s"$p::std"),
+              mean = a.double(s"$p::sum") / cnt,
+              std = math.sqrt(a.double(s"$p::variance")),
               variance = a.double(s"$p::variance"), min = a.double(s"$p::min"),
               max = a.double(s"$p::max"), sum = a.double(s"$p::sum"),
               skewness = a.double(s"$p::skew"), kurtosis = a.double(s"$p::kurt"),
@@ -218,7 +228,7 @@ object Profiler {
           case ProfileType.Categorical =>
             val lengths =
               if (f.dataType == StringType && declaredType == ProfileType.Categorical)
-                Some(LengthStats(a.double(s"$p::lenMean"), a.long(s"$p::lenMin"),
+                Some(LengthStats(a.double(s"$p::lenSum") / cnt, a.long(s"$p::lenMin"),
                   a.long(s"$p::lenMax"), a.double(s"$p::lenMedian")))
               else None
             CategoricalStats(vi.map(_.topK).getOrElse(Seq.empty), lengths,
@@ -246,7 +256,7 @@ object Profiler {
       val (nDuplicates, duplicateRows) = await(duplicatesF)
       val profile0 = TableProfile(table, columnProfiles, missingCounts,
         nDuplicates, duplicateRows,
-        await(pearsonF).toSeq ++ await(spearmanF).toSeq, await(cramersF),
+        await(coMomentsF) ++ await(spearmanShuffleF).toSeq, await(cramersF),
         await(headF), Seq.empty, await(kendallF), await(phikF))
       profile0.copy(alerts = Alerts.compute(profile0, cfg))
     } finally {
@@ -383,9 +393,9 @@ object Profiler {
       t match {
         case ProfileType.Numeric =>
           val d = c.cast("double")
+          // mean and std are sum / count and sqrt(variance) on the driver:
+          // the same IEEE operations Average and StddevSamp evaluate
           scalarAggs += ((sum(d).as(s"$p::sum"), 1))
-          scalarAggs += ((avg(d).as(s"$p::mean"), 2))
-          scalarAggs += ((stddev_samp(d).as(s"$p::std"), 3))
           scalarAggs += ((var_samp(d).as(s"$p::variance"), 3))
           scalarAggs += ((min(d).as(s"$p::min"), 1))
           scalarAggs += ((max(d).as(s"$p::max"), 1))
@@ -403,7 +413,7 @@ object Profiler {
               lit((1.0 / cfg.quantileRelativeError).toInt))).as(s"$p::quantiles")
         case ProfileType.Categorical =>
           val len = length(c).cast("double")
-          scalarAggs += ((avg(len).as(s"$p::lenMean"), 2))
+          scalarAggs += ((sum(len).as(s"$p::lenSum"), 1))
           scalarAggs += ((min(length(c)).as(s"$p::lenMin"), 1))
           scalarAggs += ((max(length(c)).as(s"$p::lenMax"), 1))
           sketchAggs += percentile_approx(len, lit(0.5), lit(10000)).as(s"$p::lenMedian")
@@ -439,29 +449,52 @@ object Profiler {
   // half-width jobs running concurrently finish in roughly half the
   // wall time of one full-width job. The numeric half (B2) also
   // carries each value's direct double cast, from which Spearman's
-  // rank table and the clamped-bin histogram fixups derive WITHOUT
-  // re-scanning the data. Distinct stats still group on the
-  // cast-to-string form — injective for every numeric type, unlike
-  // the double cast (longs above 2^53 collide there).
+  // rank table and the exact histograms derive WITHOUT re-scanning
+  // the data. Distinct stats still group on the cast-to-string form —
+  // injective for every numeric type, unlike the double cast (longs
+  // above 2^53 collide there).
 
   /** (c, v, cnt): every non-null value of `cols`, cast to string, with
-    * its count — one melt → groupBy job over the data. */
-  private def valueCounts(working: DataFrame, cols: Seq[String]): DataFrame =
+    * its count — one melt → groupBy job over the data. Values of
+    * `epochCols` also key on `vd`, their epoch seconds taken from the
+    * raw column (null for the other columns). */
+  private def valueCounts(working: DataFrame, cols: Seq[String],
+      epochCols: Seq[String] = Seq.empty): DataFrame = {
+    val keys = if (epochCols.isEmpty) Seq("c", "v") else Seq("c", "v", "vd")
     working
       .select(explode(array(cols.map { c =>
-        struct(lit(c).as("c"), qcol(c).cast("string").as("v"))
+        val epoch =
+          if (epochCols.contains(c)) unix_timestamp(qcol(c).cast("timestamp"))
+          else lit(null)
+        struct(Seq(lit(c).as("c"), qcol(c).cast("string").as("v"),
+          epoch.cast("double").as("vd")).take(keys.size): _*)
       }: _*)).as("kv"))
-      .select(col("kv.c").as("c"), col("kv.v").as("v"))
+      .select(keys.map(k => col(s"kv.$k").as(k)): _*)
       .where(col("v").isNotNull)
-      .groupBy("c", "v").agg(count(lit(1)).as("cnt"))
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
+  }
 
   /** Pass B1 (exact mode): the categorical / boolean / datetime side.
-    * Pass E (char rollups) reads the persisted count table, so it is
-    * returned when char stats are on and released otherwise. */
-  private def passBCat(working: DataFrame, cols: Seq[String],
-      cfg: ProfileConfig): BResult = {
-    val (info, vc) = statsFromCounts(valueCounts(working, cols), cols, cfg, "cat")
-    if (cfg.computeCharStats) (info, Some(vc))
+    * Pass E (char rollups) and the datetime histograms read the
+    * persisted count table, which is released at once when neither
+    * applies. Like B2's `vd`, each datetime value's epoch seconds ride
+    * along as `vd`. A date's (or local timestamp's) string form parses
+    * back to it, per DISTINCT value; a `TimestampType` value's drops its
+    * offset, so two instants of a DST fall-back hour would print alike:
+    * `timestampCols` key the melt on the raw value's epoch instead. */
+  private def passBCat(working: DataFrame, cols: Seq[String], datetimeCols: Seq[String],
+      timestampCols: Seq[String], cfg: ProfileConfig): BResult = {
+    val counts = valueCounts(working, cols, timestampCols)
+    val fromString = datetimeCols.diff(timestampCols)
+    val parsed = when(col("c").isin(fromString: _*),
+      unix_timestamp(col("v").cast("timestamp")).cast("double"))
+    val (info, vc) = statsFromCounts(
+      if (fromString.isEmpty) counts
+      else counts.withColumn("vd",
+        if (timestampCols.isEmpty) parsed else parsed.otherwise(col("vd"))),
+      cols, cfg, "cat")
+    if (cfg.computeCharStats || (cfg.computeHistograms && datetimeCols.nonEmpty))
+      (info, Some(vc))
     else { vc.unpersist(); (info, None) }
   }
 
@@ -606,7 +639,7 @@ object Profiler {
         f.name -> Option(r.getAs[Any](f.name)).map(_.toString).orNull).toMap
     }.toSeq
 
-  // ---- Pass C: all histograms in one explode->groupBy ----------------
+  // ---- Pass C: all histograms in one groupBy(c, bin) ----------------
 
   /** Histogram targets off pass A's min/max: numeric columns with
     * `numericBins(c)` bins, datetime columns with the full bin count.
@@ -621,101 +654,64 @@ object Profiler {
         cfg.histogramBins)))
       .filter(t => !t.min.isNaN && !t.max.isNaN)
 
-  /** Folds (bin, count) pairs into one histogram per target; bins
-    * outside [0, bins) are dropped. */
-  private def foldHistograms(targets: Seq[HistTarget])(
-      binCounts: HistTarget => Iterable[(Int, Long)]): Map[String, Histogram] =
+  /** `value`'s bin for a target's min, width (null: one bin) and last
+    * bin; null when `value` is null, NaN or infinite. */
+  private def binOf(value: Column, mn: Column, w: Column, last: Column): Column =
+    when(value.isNotNull && !value.isNaN &&
+      value =!= Double.PositiveInfinity && value =!= Double.NegativeInfinity,
+      when(w.isNull, lit(0)).otherwise(histogramBin(value, mn, w, last)))
+
+  /** Every target's histogram from one groupBy(c, bin) job over
+    * `binned`, a (c, bin, n) table of binned values and their weights;
+    * bins outside [0, bins) are dropped. */
+  private def histograms(binned: DataFrame,
+      targets: Seq[HistTarget]): Map[String, Histogram] = {
+    val rows = timed("C:histograms")(binned.where(col("bin").isNotNull)
+      .groupBy("c", "bin").agg(sum(col("n")).as("cnt")).collect())
+    val byCol = rows.groupBy(_.getAs[String]("c"))
     targets.map { t =>
       val counts = Array.fill(t.bins)(0L)
-      binCounts(t).foreach { case (b, n) => if (b >= 0 && b < t.bins) counts(b) += n }
-      val w = if (t.max > t.min) (t.max - t.min) / t.bins else 1.0
+      byCol.getOrElse(t.name, Array.empty[Row]).foreach { r =>
+        val b = r.getAs[Int]("bin")
+        if (b >= 0 && b < t.bins) counts(b) += r.getAs[Long]("cnt")
+      }
+      val w = t.width.getOrElse(1.0)
       t.name -> Histogram(counts.toSeq, (0 to t.bins).map(i => t.min + i * w))
     }.toMap
+  }
 
-  /** Every target's histogram from one explode → groupBy(c, bin) job
-    * over the data. */
-  private def runHistogramJob(working: DataFrame, targets: Seq[HistTarget],
-      label: String): Map[String, Histogram] =
-    if (targets.isEmpty) Map.empty
-    else {
-      val binStructs = targets.map { t =>
-        struct(lit(t.name).as("c"),
-          when(t.value.isNotNull && !t.value.isNaN &&
-            t.value =!= Double.PositiveInfinity && t.value =!= Double.NegativeInfinity,
-            histogramBin(t.value, t.min, t.max, t.bins)).as("bin"))
-      }
-      val rows = timed(label)(working
-        .select(explode(array(binStructs: _*)).as("kb"))
-        .select(col("kb.c").as("c"), col("kb.bin").as("bin"))
-        .where(col("bin").isNotNull)
-        .groupBy("c", "bin").agg(count(lit(1)).as("cnt"))
-        .collect())
-      val byCol = rows.groupBy(_.getAs[String]("c"))
-      foldHistograms(targets)(t => byCol.getOrElse(t.name, Array.empty[Row])
-        .map(r => (r.getAs[Int]("bin"), r.getAs[Long]("cnt"))))
-    }
-
-  /** Exact-by-construction histogram from B2's numeric value counts:
-    * bin each distinct value (its exact double is carried in `vd`)
-    * weighted by its count. Only used for columns with
-    * n_distinct < bins, so the collect is bounded by bins x cols. */
-  private def histogramsFromCounts(nc: DataFrame,
-      targets: Seq[HistTarget]): Map[String, Histogram] =
-    if (targets.isEmpty) Map.empty
-    else {
-      val rows = timed("C:hist-fixup")(
-        nc.where(col("c").isin(targets.map(_.name): _*))
-          .select(col("c"), col("vd"), col("cnt")).collect())
-      val byCol = rows.groupBy(_.getAs[String]("c"))
-      foldHistograms(targets) { t =>
-        byCol.getOrElse(t.name, Array.empty[Row]).toSeq
-          .map(r => (r.getAs[Double]("vd"), r.getAs[Long]("cnt")))
-          .collect { case (x, n) if !x.isNaN && !x.isInfinite =>
-            // identical IEEE arithmetic to histogramBin
-            val b = if (t.max <= t.min) 0
-              else math.min(math.floor((x - t.min) / ((t.max - t.min) / t.bins)),
-                (t.bins - 1).toDouble).toInt
-            (b, n)
-          }
-      }
-    }
-
-  /** Pass C, exact mode, launched BEFORE the pass-B await so its scan
-    * overlaps B's explode/groupBy: histograms for every declared-numeric
-    * + datetime column at the FULL bin count. Columns whose effective
-    * bin count is smaller (n_distinct < bins) are re-derived afterwards
-    * from B2's value-count table by [[passC]] — a bounded driver-side
-    * fixup, not a second scan. */
-  private def passCFull(working: DataFrame, a: PassA, numeric: Seq[String],
-      datetime: Seq[String], cfg: ProfileConfig): Map[String, Histogram] =
-    runHistogramJob(working,
-      histTargets(a, numeric, datetime, cfg)(_ => cfg.histogramBins), "C:histograms")
-
-  /** Pass C (post-B): clamp/fix up the precomputed histograms. A numeric
-    * column with n_distinct < histogramBins gets min(bins, n_distinct)
-    * bins (reference parity). Its exact histogram is DERIVED from pass
-    * B's value-count table: binning each distinct value weighted by its
-    * count is identical to binning each row, and such a column has
-    * < bins distinct values by definition, so the collect is bounded.
-    * Demoted columns lose their histogram. Sketch mode has no full-bin
-    * pass to fix up (pass B is free there, no value-count scan to
-    * overlap), so one clamped job after it is the cheapest plan. */
-  private def passC(working: DataFrame, a: PassA, full: Map[String, Histogram],
-      numCounts: Option[DataFrame], numericCols: Seq[String],
-      datetimeCols: Seq[String], nDistinct: String => Long,
+  /** Pass C (post-B): every numeric and datetime column's histogram. A
+    * numeric column with n_distinct < histogramBins gets
+    * min(bins, n_distinct) bins (reference parity); demoted columns get
+    * none. Exact mode bins each DISTINCT value of pass B's count tables
+    * (`vd`: the value as a double, epoch seconds for datetimes)
+    * weighted by its count — identical to binning each row, and no
+    * further scan of the data. Each row looks its target's parameters
+    * up by column name in a hash map (a broadcast join would build a
+    * hashed relation for a few rows), so the work per row does not grow
+    * with the column count. Sketch mode has no count tables, so it
+    * bins the rows in one explode over the data. */
+  private def passC(working: DataFrame, a: PassA, countTables: Seq[DataFrame],
+      numericCols: Seq[String], datetimeCols: Seq[String], nDistinct: String => Long,
       cfg: ProfileConfig): Map[String, Histogram] = {
-    def clampedBins(c: String): Int =
-      math.min(cfg.histogramBins, math.max(1, nDistinct(c).toInt))
-    if (!cfg.computeHistograms) Map.empty
+    val targets = histTargets(a, numericCols, datetimeCols, cfg)(c =>
+      math.min(cfg.histogramBins, math.max(1, nDistinct(c).toInt)))
+    if (!cfg.computeHistograms || targets.isEmpty) Map.empty
     else if (cfg.exactDistinct) {
-      val clamped = histTargets(a,
-        numericCols.filter(clampedBins(_) != cfg.histogramBins), Nil, cfg)(clampedBins)
-      val keep = (numericCols ++ datetimeCols).toSet
-      full.view.filterKeys(keep).toMap ++
-        numCounts.fold(Map.empty[String, Histogram])(histogramsFromCounts(_, clamped))
+      val params = targets.map(t =>
+        t.name -> ((t.min, t.width.map(Double.box).orNull, t.bins - 1))).toMap
+      val mn = udf((c: String) => params(c)._1)
+      val w = udf((c: String) => params(c)._2)
+      val last = udf((c: String) => params(c)._3)
+      histograms(countTables.map(_.select("c", "vd", "cnt")).reduce(_ union _)
+        .where(col("c").isin(targets.map(_.name): _*))
+        .select(col("c"), binOf(col("vd"), mn(col("c")), w(col("c")), last(col("c"))).as("bin"),
+          col("cnt").as("n")), targets)
     } else
-      runHistogramJob(working,
-        histTargets(a, numericCols, datetimeCols, cfg)(clampedBins), "C:histograms")
+      histograms(working.select(explode(array(targets.map(t =>
+        struct(lit(t.name).as("c"),
+          binOf(t.value, lit(t.min), t.width.fold(lit(null))(lit(_)), lit(t.bins - 1)).as("bin"),
+          lit(1L).as("n"))): _*)).as("kb")).select("kb.*"), targets)
   }
 
   /** Pass D: MAD for all numeric columns in one agg, around pass A's
@@ -751,7 +747,8 @@ object Profiler {
 
   /** Pass E: char-level rollups of the string columns `cols`, weighting
     * each distinct value's chars by the value's count: an explode over
-    * B1's (small) distinct-value table, not the data. */
+    * B1's (small) distinct-value table, not the data, then each
+    * column's 1000 most frequent chars through pass B's top-K heaps. */
   private def passE(vcTable: Option[DataFrame], cols: Seq[String]): Map[String, CharStats] =
     vcTable match {
       case Some(vc) if cols.nonEmpty =>
@@ -760,13 +757,10 @@ object Profiler {
           .select(col("c"), col("cnt"),
             explode(split(col("v"), "")).as("ch"))
           .where(length(col("ch")) > 0)
-          .groupBy("c", "ch").agg(sum(col("cnt")).as("n"))
-        val w = Window.partitionBy("c").orderBy(col("n").desc, col("ch"))
-        val top = timed("E:chars")(chars.withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 1000).collect())
-        top.groupBy(_.getAs[String]("c")).map { case (c, rs) =>
-          val pairs = rs.sortBy(r => (-r.getAs[Long]("n"), r.getAs[String]("ch")))
-            .map(r => r.getAs[String]("ch") -> r.getAs[Long]("n")).toSeq
+          .groupBy("c", "ch").agg(sum(col("cnt")).as("cnt"))
+        val top = timed("E:chars")(
+          topKPerColumn(chars.withColumnRenamed("ch", "v"), 1000))
+        top.map { case (c, pairs) =>
           val total = pairs.map(_._2).sum
           def rollup(f: Int => String): Map[String, Long] =
             pairs.groupBy { case (ch, _) => f(ch.codePointAt(0)) }
@@ -785,37 +779,6 @@ object Profiler {
         }
       case _ => Map.empty
     }
-
-  /** Every pairwise `corr` of `cols` over `data`, as a symmetric matrix
-    * (NaN where corr is null). corr carries 6 aggregate buffer fields;
-    * > ~16 pairs in one agg drops the HashAggregate out of codegen (the
-    * pass-A lesson) — so 15-pair chunks, run SEQUENTIALLY: nesting
-    * Futures on the profiler's bounded pool and awaiting them from a
-    * pool thread deadlocks at poolSize=1 (the only thread blocks on
-    * tasks that can never schedule). */
-  private def corrMatrix(method: String, data: DataFrame, cols: Seq[String])(
-      value: String => Column): CorrelationMatrix = {
-    val pairs = for { i <- cols.indices; j <- (i + 1) until cols.size } yield (i, j)
-    val rs = pairs.zipWithIndex.grouped(15).flatMap { ch =>
-      val exprs = ch.map { case ((i, j), k) =>
-        corr(value(cols(i)), value(cols(j))).as(s"c$k")
-      }
-      data.agg(exprs.head, exprs.tail: _*).head().toSeq
-    }.toSeq
-    val m = Array.fill(cols.size, cols.size)(1.0)
-    pairs.zip(rs).foreach { case ((i, j), r) =>
-      val v = Option(r).map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN)
-      m(i)(j) = v; m(j)(i) = v
-    }
-    CorrelationMatrix(method, cols, m.map(_.toSeq).toSeq)
-  }
-
-  /** Pass G: Pearson over the numeric columns. */
-  private def passPearson(working: DataFrame, numericCols: Seq[String],
-      cfg: ProfileConfig): Option[CorrelationMatrix] =
-    if (!cfg.computeCorrelations || numericCols.size < 2) None
-    else Some(timed("G:pearson")(
-      corrMatrix("pearson", working, numericCols)(c => qcol(c).cast("double"))))
 
   /** Spearman's rank state, built concurrently with pass B. The rank
     * table derives from B2's numeric counts — one small aggregation over
@@ -866,32 +829,29 @@ object Profiler {
     }
   }
 
-  /** Pass G: Spearman over the post-demotion numeric columns, applying
-    * the rank state [[passSpearmanRanks]] built before demotion. */
-  private def passSpearman(working: DataFrame, numericCols: Seq[String],
-      ranks: Either[RankMaps, DataFrame], repartitioned: Boolean): CorrelationMatrix =
-    ranks match {
-      case Left(maps) =>
-        // r17: the co-moment scan is the LAST job of the profile (it
-        // gates on demotion, so the pool is idle by now) — at the
-        // passWidth the persisted table runs 1.6 s on 8 of 32 cores.
-        // When the input was repartition-eligible (>= 8 MB, scan
-        // under-parallelized), widen just this NARROW projection
-        // (numeric doubles only) to the full core count: the
-        // exchange is tens of MB against a 3x scan win. Partition
-        // regrouping moves the Welford pairwise merge order — the
-        // same last-ulp drift class as the pass-width repartition
-        // itself (gates round at 4-6 dp); sub-floor fixtures keep
-        // the historical plan byte-for-byte.
-        val base =
-          if (repartitioned)
-            working.select(numericCols.map(qcol): _*).repartition(
-              working.sparkSession.sparkContext.defaultParallelism)
-          else working
-        timed("G:spearman")(spearmanViaRankMaps(base, numericCols, maps))
-      case Right(rankTable) =>
-        timed("G:spearman")(spearmanMatrix(working, numericCols, Some(rankTable)))
-    }
+  /** Pass G: Pearson over the post-demotion numeric columns and, when
+    * [[passSpearmanRanks]] built driver-side rank maps, Spearman from
+    * the same co-moment scan. */
+  private def passG(working: DataFrame, numericCols: Seq[String],
+      rankMaps: Option[RankMaps], repartitioned: Boolean): Seq[CorrelationMatrix] = {
+    // r17: the co-moment scan is the LAST job of the profile (it
+    // gates on demotion, so the pool is idle by now) — at the
+    // passWidth the persisted table runs 1.6 s on 8 of 32 cores.
+    // When the input was repartition-eligible (>= 8 MB, scan
+    // under-parallelized), widen just this NARROW projection
+    // (numeric doubles only) to the full core count: the
+    // exchange is tens of MB against a 3x scan win. Partition
+    // regrouping moves the Welford pairwise merge order — the
+    // same last-ulp drift class as the pass-width repartition
+    // itself (gates round at 4-6 dp); sub-floor fixtures keep
+    // the historical plan byte-for-byte.
+    val base =
+      if (repartitioned)
+        working.select(numericCols.map(qcol): _*).repartition(
+          working.sparkSession.sparkContext.defaultParallelism)
+      else working
+    timed("G:co-moments")(coMomentCorrelations(base, numericCols, rankMaps))
+  }
 
   /** Pass H: Cramer's V over all pairs of `cols` in one explode →
     * groupBy job of contingency counts. */
@@ -1044,8 +1004,8 @@ object Profiler {
     * partitioned). This is the SHUFFLE plan, the 100 TB fallback: melt
     * to (rid, col, value), join ranks on (col, value), rebuild rows by
     * conditional aggregation on rid — a plain hash shuffle over N*m
-    * rank rows, no pivot analysis pass, nothing broadcast. One chunked
-    * aggregate then computes all pairwise correlations. */
+    * rank rows, no pivot analysis pass, nothing broadcast. The
+    * co-moment kernel's Pearson over the ranked rows is the matrix. */
   private[profile] def spearmanMatrix(df: DataFrame, cols: Seq[String],
       precomputedRanks: Option[DataFrame] = None): CorrelationMatrix = {
     val rid = monotonically_increasing_id().as("__rid")
@@ -1057,17 +1017,14 @@ object Profiler {
       .where(col("v").isNotNull && !col("v").isNaN)
     val ranks = precomputedRanks.getOrElse(
       graft.ops.Ranking.avgRanks(kv.select("c", "v"), "c", "v"))
-    // the chunked corr agg scans the rank-space table once per chunk:
-    // persist it once
     val ranked = kv.join(ranks, Seq("c", "v"))
       .groupBy("__rid")
       .agg(
         max(when(col("c") === cols.head, col("avgrank"))).as(cols.head),
         cols.tail.map(c =>
           max(when(col("c") === c, col("avgrank"))).as(c)): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try timed("G:spearman-corr")(corrMatrix("spearman", ranked, cols)(qcol))
-    finally ranked.unpersist(false)
+    timed("G:spearman-corr")(coMomentCorrelations(ranked, cols, None))
+      .head.copy(method = "spearman")
   }
 
   /** Driver-side tie-averaged ranking straight from a per-(column, value)
@@ -1077,7 +1034,7 @@ object Profiler {
     * map-building collect when the ranks were only ever going to be
     * collected into broadcast maps anyway — same avg-rank semantics
     * (#smaller + (cnt+1)/2, -0.0 folded) and the same
-    * doubleToLongBits(value) keys [[spearmanViaRankMaps]] reads. The
+    * doubleToLongBits(value) keys [[coMomentCorrelations]] reads. The
     * shuffle plan ([[spearmanMatrix]]) remains the route above the gate. */
   private[profile] def buildRankMapsFromCounts(
       counts: DataFrame, cols: Seq[String]): RankMaps = {
@@ -1155,52 +1112,60 @@ object Profiler {
     }
   }
 
-  /** Spearman via driver-resident rank maps — the small-cardinality fast
-    * path. The caller guarantees the rank table fits on the driver
-    * (gated on the EXACT per-column distinct counts), so:
-    * per column, a primitive (doubleToLongBits(value) -> avgrank)
-    * LongMap is built and broadcast; ONE mapPartitions scan then
-    * accumulates Welford co-moments for every column pair (numerically
-    * stable, the same merge formula Spark's own Covariance aggregate
-    * uses), merged on the driver. Zero shuffles, zero joins, one scan,
-    * and the driver transfer is partitions x pairs x 6 doubles. */
-  private[profile] def spearmanViaRankMaps(df: DataFrame, cols: Seq[String],
-      rankMaps: RankMaps): CorrelationMatrix = {
-    val spark = df.sparkSession
+  /** Pearson over the raw doubles of `cols` and, given rank maps,
+    * Spearman via those driver-resident maps (the small-cardinality fast
+    * path: the caller guarantees the rank table fits on the driver).
+    * Per column, a primitive (doubleToLongBits(value) -> avgrank)
+    * LongMap is broadcast; ONE mapPartitions scan then accumulates
+    * Welford co-moments for every column pair of every matrix
+    * (numerically stable, the same update Spark's own Corr aggregate
+    * uses), merged in partition order. Zero joins, one scan, and the
+    * driver receives at most max(64, sqrt(partitions)) arrays of
+    * matrices x pairs x 6 doubles. Pearson keeps `corr`'s semantics:
+    * nulls drop pairwise, NaN and +-inf propagate to NaN, n < 2 or zero
+    * variance gives NaN. Spearman drops null and NaN values pairwise. */
+  private[profile] def coMomentCorrelations(df: DataFrame, cols: Seq[String],
+      rankMaps: Option[RankMaps]): Seq[CorrelationMatrix] = {
     val nCols = cols.size
-    val mapsArr: Array[mutable.LongMap[Double]] =
-      cols.map(c => rankMaps.getOrElse(c,
-        mutable.LongMap.empty[Double])).toArray
-    val bc = spark.sparkContext.broadcast(mapsArr)
+    val mapsArr: Array[mutable.LongMap[Double]] = rankMaps.toArray.flatMap(rm =>
+      cols.map(c => rm.getOrElse(c, mutable.LongMap.empty[Double])))
+    val nM = if (mapsArr.isEmpty) 1 else 2 // matrix 0 Pearson, 1 Spearman
+    val bc = df.sparkSession.sparkContext.broadcast(mapsArr)
     val base = df.select(cols.map(c => qcol(c).cast("double").as(c)): _*)
     val pairI = (for { i <- 0 until nCols; j <- (i + 1) until nCols } yield i).toArray
     val pairJ = (for { i <- 0 until nCols; j <- (i + 1) until nCols } yield j).toArray
     val nPairs = pairI.length
-    val partStats: Array[Array[Double]] = base.mapPartitions { it =>
+    val len = nM * nPairs * 6
+    val partials = base.rdd.mapPartitionsWithIndex { (pi, it) =>
       val maps = bc.value
-      val s = Array.ofDim[Double](nPairs * 6) // n, mx, my, cxx, cyy, cxy
-      val vals = new Array[Double](nCols)
+      // per (matrix, pair): n, mx, my, cxx, cyy, cxy
+      val s = new Array[Double](len)
+      val vals = new Array[Double](nM * nCols) // matrix m's value of column i at m * nCols + i
+      val ok = new Array[Boolean](nM * nCols)
       it.foreach { row =>
         var i = 0
         while (i < nCols) {
-          vals(i) =
-            if (row.isNullAt(i)) Double.NaN
-            else {
-              val x0 = row.getDouble(i)
-              if (x0 != x0) Double.NaN
-              else {
-                val x = if (x0 == 0.0) 0.0 else x0
-                maps(i).getOrElse(
-                  java.lang.Double.doubleToLongBits(x), Double.NaN)
-              }
+          ok(i) = !row.isNullAt(i)
+          if (ok(i)) vals(i) = row.getDouble(i)
+          if (nM == 2) {
+            val x0 = vals(i)
+            ok(nCols + i) = false
+            if (ok(i) && x0 == x0) {
+              val x = if (x0 == 0.0) 0.0 else x0
+              vals(nCols + i) = maps(i).getOrElse(
+                java.lang.Double.doubleToLongBits(x), Double.NaN)
+              ok(nCols + i) = vals(nCols + i) == vals(nCols + i)
             }
+          }
           i += 1
         }
-        var p = 0
-        while (p < nPairs) {
-          val x = vals(pairI(p)); val y = vals(pairJ(p))
-          if (x == x && y == y) {
-            val o = p * 6
+        var q = 0
+        while (q < nM * nPairs) {
+          val m = q / nPairs; val p = q % nPairs
+          val a = m * nCols + pairI(p); val b = m * nCols + pairJ(p)
+          if (ok(a) && ok(b)) {
+            val x = vals(a); val y = vals(b)
+            val o = q * 6
             val n = s(o) + 1; s(o) = n
             val dx = x - s(o + 1); s(o + 1) += dx / n
             val dy = y - s(o + 2); s(o + 2) += dy / n
@@ -1208,46 +1173,57 @@ object Profiler {
             s(o + 4) += dy * (y - s(o + 2))
             s(o + 5) += dx * (y - s(o + 2))
           }
-          p += 1
+          q += 1
         }
       }
-      Iterator.single(s)
-    }(org.apache.spark.sql.Encoders.kryo[Array[Double]]).collect()
+      Iterator.single(pi -> s)
+    }
+    // Partials merge in partition order, so the result does not hang on
+    // task timing. Past 64 partitions they first merge on the executors
+    // in about sqrt(partitions) groups, which bounds the driver transfer.
+    def fold(ps: Iterator[(Int, Array[Double])]): Array[Double] =
+      ps.toArray.sortBy(_._1).iterator.map(_._2).foldLeft(new Array[Double](len))(mergeCoMoments)
+    val nParts = partials.getNumPartitions
+    val agg = fold(
+      if (nParts <= 64) partials.collect().iterator
+      else partials.partitionBy(new HashPartitioner(math.ceil(math.sqrt(nParts)).toInt))
+        .mapPartitionsWithIndex((g, it) => Iterator.single(g -> fold(it))).collect().iterator)
     bc.destroy()
-    // parallel co-moment merge (Chan et al. pairwise-update form)
-    val agg = Array.ofDim[Double](nPairs * 6)
-    partStats.foreach { s =>
-      var p = 0
-      while (p < nPairs) {
-        val o = p * 6
-        val n1 = agg(o); val n2 = s(o)
-        if (n2 > 0) {
-          if (n1 == 0) { var k = 0; while (k < 6) { agg(o + k) = s(o + k); k += 1 } }
-          else {
-            val n = n1 + n2
-            val dx = s(o + 1) - agg(o + 1); val dy = s(o + 2) - agg(o + 2)
-            agg(o) = n
-            agg(o + 1) += dx * n2 / n
-            agg(o + 2) += dy * n2 / n
-            agg(o + 3) += s(o + 3) + dx * dx * n1 * n2 / n
-            agg(o + 4) += s(o + 4) + dy * dy * n1 * n2 / n
-            agg(o + 5) += s(o + 5) + dx * dy * n1 * n2 / n
-          }
-        }
-        p += 1
+    Seq("pearson", "spearman").take(nM).zipWithIndex.map { case (method, mi) =>
+      val m = Array.fill(nCols, nCols)(1.0)
+      for (p <- 0 until nPairs) {
+        val o = (mi * nPairs + p) * 6
+        // as corr: a zero denominator (zero variance) gives NaN
+        val d = math.sqrt(agg(o + 3) * agg(o + 4))
+        val v = if (agg(o) < 2 || d == 0) Double.NaN else agg(o + 5) / d
+        m(pairI(p))(pairJ(p)) = v; m(pairJ(p))(pairI(p)) = v
       }
+      CorrelationMatrix(method, cols, m.map(_.toSeq).toSeq)
     }
-    val m = Array.fill(nCols, nCols)(1.0)
-    var p = 0
-    while (p < nPairs) {
-      val o = p * 6
-      val v =
-        if (agg(o) < 2 || agg(o + 3) <= 0 || agg(o + 4) <= 0) Double.NaN
-        else agg(o + 5) / math.sqrt(agg(o + 3) * agg(o + 4))
-      m(pairI(p))(pairJ(p)) = v; m(pairJ(p))(pairI(p)) = v
-      p += 1
+  }
+
+  /** Folds co-moment array `s` into `agg` (Chan et al. pairwise-update
+    * form, per 6-double (n, mx, my, cxx, cyy, cxy) slot); returns `agg`. */
+  private def mergeCoMoments(agg: Array[Double], s: Array[Double]): Array[Double] = {
+    var o = 0
+    while (o < agg.length) {
+      val n1 = agg(o); val n2 = s(o)
+      if (n2 > 0) {
+        if (n1 == 0) System.arraycopy(s, o, agg, o, 6)
+        else {
+          val n = n1 + n2
+          val dx = s(o + 1) - agg(o + 1); val dy = s(o + 2) - agg(o + 2)
+          agg(o) = n
+          agg(o + 1) += dx * n2 / n
+          agg(o + 2) += dy * n2 / n
+          agg(o + 3) += s(o + 3) + dx * dx * n1 * n2 / n
+          agg(o + 4) += s(o + 4) + dy * dy * n1 * n2 / n
+          agg(o + 5) += s(o + 5) + dx * dy * n1 * n2 / n
+        }
+      }
+      o += 6
     }
-    CorrelationMatrix("spearman", cols, m.map(_.toSeq).toSeq)
+    agg
   }
 
   /** Two-letter Unicode general-category codes, normalizing

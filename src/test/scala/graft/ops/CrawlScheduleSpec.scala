@@ -44,6 +44,15 @@ class CrawlScheduleSpec extends SparkSpec {
     assert(e.getMessage.contains("positive"))
   }
 
+  test("dueSchedulePerHost: two delays on one host reject loudly") {
+    val due = Seq(("h", "u0", 0L, 10L), ("h", "u1", 1L, 20L),
+      ("g", "v0", 0L, 3L)).toDF("host", "url", "due", "delay")
+    val e = intercept[IllegalArgumentException] {
+      CrawlSchedule.dueSchedulePerHost(due, "host", "url", "due", "delay")
+    }
+    assert(e.getMessage.contains("one positive delay per host"))
+  }
+
   test("sitemapStaleness: all four classes and the priority order") {
     val entries = Seq(
       ("u_never", Some(50L)), ("u_stale", Some(200L)),

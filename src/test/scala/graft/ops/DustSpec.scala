@@ -109,6 +109,18 @@ class DustSpec extends SparkSpec {
       "remaining params keep original relative order, never re-sorted")
   }
 
+  test("applyRules: a URL listed twice comes back twice, params once " +
+    "each") {
+    val rules = Seq(("a.example", "sess", true)).toDF("host", "param", "safe")
+    val dup = "http://a.example/x?page=2&sess=1"
+    val frontier = Seq(dup, dup, "http://a.example/y").toDF("url")
+    val got = Dust.applyRules(frontier, "url", rules)
+      .collect().map(r => r.getString(0) -> r.getString(1)).sorted.toSeq
+    assert(got === Seq(dup -> "http://a.example/x?page=2",
+      dup -> "http://a.example/x?page=2",
+      "http://a.example/y" -> "http://a.example/y"))
+  }
+
   test("trapHosts: ratio + floor thresholds, depth and query stats") {
     val healthy = (1 to 60).map(i =>
       (s"http://ok.example/p/$i", s"h$i"))

@@ -188,6 +188,109 @@ class ProfilerSpec extends SparkSpec {
     assert(pearson.values(0)(1) == pearson.values(1)(0))
   }
 
+  test("co-moment Pearson equals corr: nulls, NaN, +-inf, constant, n < 2") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, corr}
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(7)
+    val rows = (0 until 300).map { i =>
+      val a = rnd.nextGaussian() * 1e3 + 5e6
+      def sometimesNull(v: Double) = if (rnd.nextInt(10) == 0) null else v
+      Row(sometimesNull(a), sometimesNull(0.3 * a + rnd.nextGaussian()),
+        if (i == 17) null else 4.25,                        // constant
+        if (i == 40) Double.NaN else rnd.nextDouble(),      // one NaN
+        if (i == 41) Double.PositiveInfinity else i.toDouble,
+        if (i == 42) Double.NegativeInfinity else -i.toDouble,
+        if (i == 5) 1.0 else null)                          // n = 1
+    }
+    val names = Seq("a", "b", "k", "nan", "pinf", "ninf", "one")
+    // past 64 partitions the partials merge on the executors first
+    for (parts <- Seq(3, 100)) {
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts),
+        StructType(names.map(StructField(_, DoubleType))))
+      val Seq(got) = Profiler.coMomentCorrelations(df, names, None)
+      assert(got.method == "pearson")
+      val pairs = for { i <- names.indices; j <- (i + 1) until names.size } yield (i, j)
+      // ANSI corr raises DIVIDE_BY_ZERO on a zero variance; without ANSI
+      // it returns null there, which the matrix reads as NaN
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      val want = try df.agg(corr(col(names.head), col(names(1))),
+        pairs.tail.map { case (i, j) => corr(col(names(i)), col(names(j))) }: _*).head()
+      finally spark.conf.unset("spark.sql.ansi.enabled")
+      pairs.zipWithIndex.foreach { case ((i, j), k) =>
+        val w = if (want.isNullAt(k)) Double.NaN else want.getDouble(k)
+        val g = got.values(i)(j)
+        assert(java.lang.Double.compare(g, got.values(j)(i)) == 0)
+        assert((w.isNaN && g.isNaN) || math.abs(w - g) <= 1e-12,
+          s"${names(i)}/${names(j)}: corr $w, kernel $g")
+      }
+      assert(!got.values(0)(1).isNaN && got.values(0)(2).isNaN &&
+        got.values(0)(3).isNaN && got.values(0)(4).isNaN && got.values(0)(6).isNaN)
+    }
+  }
+
+  test("exact datetime histogram bins each instant of a DST fall-back hour") {
+    // In New York, 05:30Z and 06:30Z both read 01:30 local on
+    // 2021-11-07: one string, two instants, two bins. The date column
+    // takes the string route next to it.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val t0 = java.time.Instant.parse("2021-11-07T04:00:00Z").toEpochMilli
+    val rows = Seq(0.0, 1.5, 1.5, 2.5, 4.0).map(h =>
+      Row(new Timestamp(t0 + (h * 3600000).toLong),
+        java.sql.Date.valueOf(java.time.LocalDate.of(2021, 11, 1 + (h * 2).toInt))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(Seq(StructField("ts", TimestampType), StructField("d", DateType))))
+    val cfg = ProfileConfig.default.copy(persist = false)
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    val (exact, sketch) = try (Profiler.profile(df, cfg),
+      Profiler.profile(df, cfg.copy(exactDistinct = false, exactQuantiles = false)))
+    finally spark.conf.set("spark.sql.session.timeZone", tz)
+    def hist(p: TableProfile, i: Int) =
+      p.columns(i).typed.asInstanceOf[DateTimeStats].histogram.get
+    assert(exact.columns.head.common.nDistinct == 4)
+    for (i <- 0 to 1) assert(hist(exact, i).counts == hist(sketch, i).counts)
+    assert(hist(exact, 0).counts.zipWithIndex.collect { case (n, b) if n > 0 => b -> n } ==
+      Seq(0 -> 1L, 18 -> 2L, 31 -> 1L, 49 -> 1L))
+  }
+
+  test("flagship profile issues a fixed number of Spark queries") {
+    // Each distinct query compiles its own whole-stage classes, and a
+    // warm profile that needs more of them than Spark's codegen cache
+    // holds recompiles them every time: a pass that adds a query must
+    // show up here.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.graft.ListenerProbe
+    val rows = (0 until 60).map { i =>
+      Row(s"s${i % 7}", i.toLong * 31 % 50, (i % 13) * 0.5 + i, (i % 3).toFloat,
+        i % 2 == 0, java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(i % 20L)),
+        new Timestamp(i * 3600000L), s"word${i % 40} w${i % 9}")
+    }
+    val schema = StructType(Seq(
+      StructField("cat", StringType), StructField("l", LongType),
+      StructField("d", DoubleType), StructField("f", FloatType),
+      StructField("b", BooleanType), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("txt", StringType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val cfg = ProfileConfig.default.copy(computeSpearman = true, computeKendall = true)
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = queries.add(f)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerProbe.drain(spark)
+    spark.listenerManager.register(listener)
+    try {
+      Profiler.profile(df, cfg)
+      ListenerProbe.drain(spark)
+    } finally spark.listenerManager.unregister(listener)
+    assert(queries.size == 17, s"Spark queries per flagship profile: $queries")
+  }
+
   test("table stats rollup") {
     assert(profile.table.n == 9)
     assert(profile.table.nVar == 8)

@@ -155,6 +155,23 @@ class SpearmanSpec extends SparkSpec {
     }
   }
 
+  test("shuffle-rank fallback gives NaN on a pair with zero variance") {
+    // Over the rows where both are non-null, y is constant: the
+    // correlation is undefined, which the matrix reads as NaN (an ANSI
+    // corr aggregate would raise DIVIDE_BY_ZERO instead)
+    val df = (0 until 100).map { i =>
+      (if (i < 50) Some(i.toDouble) else None, if (i < 50) 7.0 else i.toDouble)
+    }.toDF("x", "y")
+    val cfg = ProfileConfig.default.copy(persist = false, computeSpearman = true)
+    for (maxDistinct <- Seq(cfg.spearmanBroadcastMaxDistinct, 0L)) {
+      val p = Profiler.profile(df, cfg.copy(spearmanBroadcastMaxDistinct = maxDistinct))
+      for (method <- Seq("pearson", "spearman")) {
+        val m = p.correlations.find(_.method == method).get
+        assert(m.columns == Seq("x", "y") && m.values(0)(1).isNaN, s"$method, $maxDistinct")
+      }
+    }
+  }
+
   test("spearman handles ties and perfect monotonicity") {
     val df = Seq((1.0, 10.0), (2.0, 20.0), (2.0, 25.0), (3.0, 30.0))
       .toDF("x", "y")
