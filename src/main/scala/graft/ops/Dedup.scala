@@ -308,31 +308,47 @@ object Dedup {
 
   /** MinHash signatures over any (id, g) shingle table. One shuffle
     * regardless of width, and ONE md5 per shingle regardless of width:
-    * the hash family is [[minhashHashPair]] + [[minhashHash]]. */
+    * the hash family is [[minhashX]] + [[minhashHash]]. */
   def minhashSignaturesFromShingles(sh: DataFrame, numHashes: Int): DataFrame = {
-    val (h1, h2) = minhashHashPair(col("g"))
-    val withH = sh.select(col("id"), h1.as("h1"), h2.as("h2"))
+    val withX = sh.select(col("id"), minhashX(col("g")).as("x"))
     val aggs = (0 until numHashes).map(i =>
-      min(minhashHash(col("h1"), col("h2"), i)).as(s"s$i"))
-    withH.groupBy("id").agg(aggs.head, aggs.tail: _*)
+      min(minhashHash(col("x"), i)).as(s"s$i"))
+    withX.groupBy("id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** The seed pair of the MinHash family, shared by the batch
-    * signatures and [[graft.streaming.StreamingNearDup]]: h1 and h2
-    * are the two 28-bit halves of a single md5 of the shingle (h2
-    * forced odd) — the double-hashing construction that makes k-hash
-    * minhash cost O(1) hashes per element instead of O(k) (Kirsch &
-    * Mitzenmacher). Values stay < 2^34, overflow-safe and identically
-    * computable in any engine with md5 + integer ops. */
-  private[graft] def minhashHashPair(g: Column): (Column, Column) = {
-    val hex = md5(g)
-    (conv(substring(hex, 1, 7), 16, 10).cast("long"),
-      conv(substring(hex, 8, 7), 16, 10).cast("long") * 2 + 1)
+  /** The prime modulus p = 2^31 − 1 of the MinHash family. */
+  private[graft] val MinhashPrime: Long = 2147483647L
+
+  /** The coefficients (a_i, b_i) of MinHash hash i, 1 <= a_i < p and
+    * 0 <= b_i < p: a fixed-seed splitmix64 stream, so Spark, the
+    * streaming twin and the DuckDB oracle all read the same constants. */
+  private[graft] def minhashCoefficients(i: Int): (Long, Long) = {
+    def mix(k: Long): Long = {
+      var z = 0x6d696e68617368L + k * 0x9E3779B97F4A7C15L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      z ^ (z >>> 31)
+    }
+    (1L + java.lang.Math.floorMod(mix(2L * i), MinhashPrime - 1),
+      java.lang.Math.floorMod(mix(2L * i + 1), MinhashPrime))
   }
 
-  /** Hash `i` of the MinHash family: h_i(g) = h1(g) + i * h2(g). */
-  private[graft] def minhashHash(h1: Column, h2: Column, i: Int): Column =
-    h1 + lit(i.toLong) * h2
+  /** The MinHash family's input, shared by the batch signatures and
+    * [[graft.streaming.StreamingNearDup]]: x = the low 31 bits of the
+    * first 32 bits of the shingle's md5 — one md5 per shingle,
+    * whatever the signature width. */
+  private[graft] def minhashX(g: Column): Column =
+    conv(substring(md5(g), 1, 8), 16, 10).cast("long").bitwiseAND(MinhashPrime)
+
+  /** Hash `i` of the MinHash family: the universal hash
+    * h_i(x) = (a_i·x + b_i) mod p. Independent across i, unlike a
+    * double-hashing family h1 + i·h2 whose minimum drifts to the
+    * smallest h2 as i grows; every intermediate is below 2^63, so a
+    * Spark `long` and a DuckDB `BIGINT` agree bit for bit. */
+  private[graft] def minhashHash(x: Column, i: Int): Column = {
+    val (a, b) = minhashCoefficients(i)
+    (x * lit(a) + lit(b)) % lit(MinhashPrime)
+  }
 
   /** The LSH band keys over signature columns `s0..s{bands*r-1}`: an
     * array of one (band, key) struct per band, key = md5 of the band's

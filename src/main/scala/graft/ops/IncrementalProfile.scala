@@ -121,20 +121,19 @@ object IncrementalProfile {
     val structs = use.map { c =>
       // try_cast only suppresses RUNTIME cast failures (ANSI cast would
       // throw on non-numeric strings); array/map/struct -> double is an
-      // ANALYSIS-time error, so complex types skip the numeric leg
-      // entirely and contribute counts + HLL only
-      val castable = {
+      // ANALYSIS-time error, and so are date and timestamp_ntz -> double,
+      // so datetimes take the profiler's epoch-seconds leg and complex
+      // types skip the numeric leg entirely (counts + HLL only)
+      val vd = {
         import org.apache.spark.sql.types._
         df.schema(c).dataType match {
-          case _: NumericType => true
-          case StringType | BooleanType | DateType | TimestampType |
-              TimestampNTZType => true
-          case _ => false
+          case _: NumericType | StringType | BooleanType =>
+            expr(s"try_cast(`$c` AS DOUBLE)")
+          case DateType | TimestampType | TimestampNTZType =>
+            unix_timestamp(col(c).cast("timestamp")).cast("double")
+          case _ => lit(null).cast("double")
         }
       }
-      val vd =
-        if (castable) expr(s"try_cast(`$c` AS DOUBLE)")
-        else lit(null).cast("double")
       struct(
         lit(c).as("c"),
         vd.as("vd"),

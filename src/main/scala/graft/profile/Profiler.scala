@@ -48,7 +48,7 @@ object Profiler {
 
   /** Column reference by EXACT name (backtick-quoted): `col("a.b")` would
     * otherwise parse the dot as struct-field access. */
-  private def qcol(name: String): Column =
+  private[graft] def qcol(name: String): Column =
     col("`" + name.replace("`", "``") + "`")
 
   /** Runs `body`; with GRAFT_VERBOSE set, prints its wall time to stderr. */
@@ -228,15 +228,15 @@ object Profiler {
           case ProfileType.Categorical =>
             val lengths =
               if (f.dataType == StringType && declaredType == ProfileType.Categorical)
-                Some(LengthStats(a.double(s"$p::lenSum") / cnt, a.long(s"$p::lenMin"),
-                  a.long(s"$p::lenMax"), a.double(s"$p::lenMedian")))
+                Some(LengthStats(a.double(s"$p::len_sum") / cnt, a.long(s"$p::len_min"),
+                  a.long(s"$p::len_max"), a.double(s"$p::len_median")))
               else None
             CategoricalStats(vi.map(_.topK).getOrElse(Seq.empty), lengths,
               charStats.get(p), vi.flatMap(_.chi2P))
           case ProfileType.Bool =>
             BooleanStats(a.long(s"$p::true"), a.long(s"$p::false"))
           case ProfileType.DateTime =>
-            DateTimeStats(a.long(s"$p::epochMin"), a.long(s"$p::epochMax"),
+            DateTimeStats(a.long(s"$p::min"), a.long(s"$p::max"),
               histograms.get(p))
           case _ => UnsupportedStats
         }
@@ -332,17 +332,94 @@ object Profiler {
         sz < BigInt(canon.sparkSession.sessionState.conf.defaultSizeInBytes)
     }
 
-  /** Pass A: fused scalar aggregates, chunked for codegen.
+  /** Pass A's chunk families: codegen'd scalars, and the three
+    * ObjectHashAggregate families that each get their own jobs. */
+  private[graft] object AggFamily extends Enumeration {
+    val Scalar, Sketch, Distinct, TopK = Value
+  }
+
+  /** One pass-A statistic of one column: its snake_case name, its
+    * (unaliased) aggregate, its aggregation-buffer width estimate and
+    * its chunk family. */
+  private[graft] final case class ColumnAgg(
+      stat: String, agg: Column, width: Int, family: AggFamily.Value)
+
+  /** The per-column statistics rule: pass A's aggregates for one column
+    * of profile type `t` under `cfg`. Batch pass A packs them into
+    * chunks keyed `s"$p::$stat"`; [[graft.streaming.StreamingProfiler]]
+    * runs the same list under [[ProfileConfig.minimal]] as a windowed
+    * aggregation: under that config every aggregate is a mergeable
+    * scalar or sketch, so the list streams in update mode.
+    *
+    * Mean and std are not aggregates: consumers take sum / count and
+    * sqrt(variance), the same IEEE operations Average and StddevSamp
+    * evaluate. Sketch-mode distinct counts come from HLL for EVERY
+    * column (bool and datetime included); sketch-mode top values
+    * (approx_top_k, DataSketches frequent items, keyed on the same
+    * string cast as exact mode's pass B) only for categorical columns,
+    * the one type whose report surfaces them — sketching all 17
+    * lineitem columns measured +3.4 s wall on q00b vs ~0 for the 2
+    * categorical ones. Datetimes report epoch seconds. */
+  private[graft] def columnAggs(f: StructField, t: ProfileType,
+      cfg: ProfileConfig): Seq[ColumnAgg] = {
+    import AggFamily._
+    val c = qcol(f.name)
+    val p = f.name
+    def scalar(stat: String, agg: Column, width: Int = 1) = ColumnAgg(stat, agg, width, Scalar)
+    def sketch(stat: String, agg: Column, family: AggFamily.Value = Sketch) =
+      ColumnAgg(stat, agg, 0, family)
+    val distinct =
+      if (cfg.exactDistinct) Nil
+      else Seq(sketch("approx_distinct", approx_count_distinct(c, cfg.distinctRsd), Distinct))
+    val typed = t match {
+      case ProfileType.Numeric =>
+        val d = c.cast("double")
+        val qs = cfg.quantiles
+        Seq(scalar("sum", sum(d)), scalar("variance", var_samp(d), 3),
+          scalar("min", min(d)), scalar("max", max(d)),
+          scalar("skew", correctedSkewness(d), 6), scalar("kurt", correctedKurtosis(d), 7),
+          scalar("zeros", count(when(d === 0.0, 1))),
+          scalar("inf", count(
+            when(d === Double.PositiveInfinity || d === Double.NegativeInfinity, 1))),
+          sketch("quantiles", if (cfg.exactQuantiles)
+            expr(s"percentile(cast(`$p` as double), array(${qs.mkString(",")}))")
+          else
+            percentile_approx(d, array(qs.map(lit): _*),
+              lit((1.0 / cfg.quantileRelativeError).toInt))))
+      case ProfileType.Categorical =>
+        val len = length(c).cast("double")
+        val k = math.min(cfg.topK, cfg.sketchTopKMaxTracked)
+        val topK =
+          if (cfg.exactDistinct || k <= 0) Nil
+          else Seq(sketch("topk", expr(
+            s"approx_top_k(cast(`$p` as string), $k, ${cfg.sketchTopKMaxTracked})"), TopK))
+        Seq(scalar("len_sum", sum(len)),
+          scalar("len_min", min(length(c))), scalar("len_max", max(length(c))),
+          sketch("len_median", percentile_approx(len, lit(0.5), lit(10000)))) ++ topK
+      case ProfileType.Bool =>
+        Seq(scalar("true", count(when(c === true, 1))),
+          scalar("false", count(when(c === false, 1))))
+      case ProfileType.DateTime =>
+        val e = unix_timestamp(c.cast("timestamp"))
+        Seq(scalar("min", min(e)), scalar("max", max(e)))
+      case _ => Nil
+    }
+    scalar("count", count(c)) +: (distinct ++ typed)
+  }
+
+  /** Pass A: every column's [[columnAggs]], packed into jobs.
     *
     * One agg with every expression would exceed ~100 aggregate buffer
     * fields on a wide table, which silently drops the whole
     * HashAggregate out of whole-stage codegen (measured 15.6 s vs ~3 s
-    * at sf0.1). Expressions carry a buffer-width estimate and are
-    * greedily packed into <= 90-buffer chunks; sketch aggregates
-    * (percentile, HLL) are ObjectHashAggregate and never codegen, so
-    * they get their own jobs rather than dragging the scalars down.
-    * Chunks run concurrently on the pool over the persisted input —
-    * still a constant number of scans, independent of row count.
+    * at sf0.1). Scalars are greedily packed into <= 90-buffer chunks;
+    * the sketch, HLL distinct and top-K families are
+    * ObjectHashAggregate and never codegen, so they get their own jobs
+    * rather than dragging the scalars down (fusing the HLL chunk with
+    * the quantiles doubled pass A's critical path in sketch mode,
+    * measured 11s vs 2x ~5s). Chunks run concurrently on the pool over
+    * the persisted input — still a constant number of scans,
+    * independent of row count.
     *
     * Sketch chunks come FIRST: the percentile job is the longest pass-A
     * leg (sort-based ObjectHashAggregate) and pass D gates on its
@@ -361,85 +438,17 @@ object Profiler {
     * [[repartitionInput]]), not this split. */
   private def passAChunks(supported: Seq[(StructField, ProfileType)],
       cfg: ProfileConfig): Seq[Seq[Column]] = {
-    val scalarAggs = mutable.ArrayBuffer[(Column, Int)]((count(lit(1)).as("__n"), 1))
-    val sketchAggs = mutable.ArrayBuffer[Column]()
-    // HLL distinct sketches get their OWN chunk: in sketch mode they are
-    // as expensive as the quantile job, and fusing both into one serial
-    // aggregation doubled pass A's critical path (measured 11s vs 2x ~5s)
-    val distinctAggs = mutable.ArrayBuffer[Column]()
-    // Sketch-mode top-K values: pass B (the exact explode->groupBy value
-    // counts) is skipped entirely when exactDistinct=false, which used
-    // to leave the 100 TB operating mode with NO top values at all.
-    // approx_top_k (DataSketches frequent-items, mergeable, one scan)
-    // fills them; same cast-to-string key as exact mode's pass B. Own
-    // chunk: TypedImperativeAggregate forces ObjectHashAggregate, so
-    // fusing it with codegen'd scalars would de-codegen those.
-    // CATEGORICAL columns only: they are the one type whose report
-    // surfaces topValues (numeric shows histograms, bool its two counts,
-    // datetime its range; sketch mode never demotes numerics) — sketching
-    // all 17 lineitem columns measured +3.4 s wall on q00b vs ~0 for the
-    // 2 categorical ones.
-    val topkAggs = mutable.ArrayBuffer[Column]()
-    val sketchTopK = !cfg.exactDistinct && cfg.topK > 0 &&
-      cfg.sketchTopKMaxTracked > 0
-    supported.foreach { case (f, t) =>
-      val c = qcol(f.name)
-      val p = f.name
-      scalarAggs += ((count(c).as(s"$p::count"), 1))
-      // sketch mode reads $p::approxDistinct for EVERY column (bool and
-      // datetime included) — omitting it silently reported nDistinct = 0
-      if (!cfg.exactDistinct)
-        distinctAggs += approx_count_distinct(c, cfg.distinctRsd).as(s"$p::approxDistinct")
-      t match {
-        case ProfileType.Numeric =>
-          val d = c.cast("double")
-          // mean and std are sum / count and sqrt(variance) on the driver:
-          // the same IEEE operations Average and StddevSamp evaluate
-          scalarAggs += ((sum(d).as(s"$p::sum"), 1))
-          scalarAggs += ((var_samp(d).as(s"$p::variance"), 3))
-          scalarAggs += ((min(d).as(s"$p::min"), 1))
-          scalarAggs += ((max(d).as(s"$p::max"), 1))
-          scalarAggs += ((correctedSkewness(d).as(s"$p::skew"), 6))
-          scalarAggs += ((correctedKurtosis(d).as(s"$p::kurt"), 7))
-          scalarAggs += ((count(when(d === 0.0, 1)).as(s"$p::zeros"), 1))
-          scalarAggs += ((count(
-            when(d === Double.PositiveInfinity || d === Double.NegativeInfinity, 1))
-            .as(s"$p::inf"), 1))
-          val qs = cfg.quantiles
-          sketchAggs += (if (cfg.exactQuantiles)
-            expr(s"percentile(cast(`$p` as double), array(${qs.mkString(",")}))")
-          else
-            percentile_approx(d, array(qs.map(lit): _*),
-              lit((1.0 / cfg.quantileRelativeError).toInt))).as(s"$p::quantiles")
-        case ProfileType.Categorical =>
-          val len = length(c).cast("double")
-          scalarAggs += ((sum(len).as(s"$p::lenSum"), 1))
-          scalarAggs += ((min(length(c)).as(s"$p::lenMin"), 1))
-          scalarAggs += ((max(length(c)).as(s"$p::lenMax"), 1))
-          sketchAggs += percentile_approx(len, lit(0.5), lit(10000)).as(s"$p::lenMedian")
-          if (sketchTopK) {
-            val k = math.min(cfg.topK, cfg.sketchTopKMaxTracked)
-            topkAggs += expr(
-              s"approx_top_k(cast(`$p` as string), $k, ${cfg.sketchTopKMaxTracked})")
-              .as(s"$p::topk")
-          }
-        case ProfileType.Bool =>
-          scalarAggs += ((count(when(c === true, 1)).as(s"$p::true"), 1))
-          scalarAggs += ((count(when(c === false, 1)).as(s"$p::false"), 1))
-        case ProfileType.DateTime =>
-          val e = unix_timestamp(c.cast("timestamp"))
-          scalarAggs += ((min(e).as(s"$p::epochMin"), 1))
-          scalarAggs += ((max(e).as(s"$p::epochMax"), 1))
-        case _ => ()
-      }
+    import AggFamily._
+    val aggs = supported.flatMap { case (f, t) =>
+      columnAggs(f, t, cfg).map(a => a.copy(agg = a.agg.as(s"${f.name}::${a.stat}")))
     }
-    val scalarChunks = scalarAggs.foldLeft(Vector.empty[(Vector[Column], Int)]) {
-      case (chunks :+ ((cur, w)), (e, width)) if w + width <= 90 =>
-        chunks :+ ((cur :+ e, w + width))
-      case (chunks, (e, width)) => chunks :+ ((Vector(e), width))
+    def family(k: AggFamily.Value) = aggs.filter(_.family == k)
+    val scalarChunks = family(Scalar).foldLeft(Vector((Vector(count(lit(1)).as("__n")), 1))) {
+      case (chunks :+ ((cur, w)), a) if w + a.width <= 90 =>
+        chunks :+ ((cur :+ a.agg, w + a.width))
+      case (chunks, a) => chunks :+ ((Vector(a.agg), a.width))
     }.map(_._1)
-    (sketchAggs.grouped(6) ++ distinctAggs.grouped(6) ++ topkAggs.grouped(6))
-      .map(_.toSeq).toSeq ++ scalarChunks
+    Seq(Sketch, Distinct, TopK).flatMap(family(_).map(_.agg).grouped(6)) ++ scalarChunks
   }
 
   // ---- Pass B: per-(column,value) counts, as TWO concurrent jobs -----
@@ -554,7 +563,7 @@ object Profiler {
           s.collect { case r: Row if !r.isNullAt(0) => (r.getString(0), r.getLong(1)) }.toSeq
         case _ => Seq.empty
       }
-      c -> ValueInfo(a.long(s"$c::approxDistinct"), -1L, None, top)
+      c -> ValueInfo(a.long(s"$c::approx_distinct"), -1L, None, top)
     }.toMap
 
   /** Pass F: duplicate rows — (n - distinct rows, the most duplicated
@@ -650,7 +659,7 @@ object Profiler {
       a.double(s"$c::min"), a.double(s"$c::max"), numericBins(c))) ++
       datetime.map(c => HistTarget(c,
         unix_timestamp(qcol(c).cast("timestamp")).cast("double"),
-        a.long(s"$c::epochMin").toDouble, a.long(s"$c::epochMax").toDouble,
+        a.long(s"$c::min").toDouble, a.long(s"$c::max").toDouble,
         cfg.histogramBins)))
       .filter(t => !t.min.isNaN && !t.max.isNaN)
 

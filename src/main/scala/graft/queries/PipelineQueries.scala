@@ -24,11 +24,13 @@ object PipelineQueries {
   private def dkHash(xSql: String, seed: Int): String =
     s"('0x'||substr(md5('$seed:'||$xSql),1,15))::BIGINT"
 
-  /** DuckDB rendering of the double-hashing minhash family
-    * h_i(g) = h1 + i*h2 (mirrors Dedup.minhashSignaturesFromShingles). */
-  private def dkMinhash(i: Int): String =
-    s"(('0x'||substr(md5(g),1,7))::BIGINT + " +
-      s"$i * (('0x'||substr(md5(g),8,7))::BIGINT * 2 + 1))"
+  /** DuckDB rendering of MinHash hash i, h_i(x) = (a_i·x + b_i) mod p
+    * with Dedup's own constants (mirrors Dedup.minhashX/minhashHash). */
+  private def dkMinhash(i: Int): String = {
+    val (a, b) = Dedup.minhashCoefficients(i)
+    val p = Dedup.MinhashPrime
+    s"(($a * (('0x'||substr(md5(g),1,8))::BIGINT & $p) + $b) % $p)"
+  }
 
   /** DuckDB word-n-gram shingles with distinct, mirroring
     * Dedup.wordShingleTable (word shingles keep shingle document

@@ -49,14 +49,10 @@ object StreamingNearDup {
     val extraCols = extra.map(col)
     val hashed = df.select(
         col(idCol).cast("long").as("id") +: extraCols :+
-        transform(grams, { g =>
-          val (h1, h2) = Dedup.minhashHashPair(g)
-          struct(h1.as("h1"), h2.as("h2"))
-        }).as("hs"): _*)
-      .where(size(col("hs")) > 0) // < n words: no signature (batch parity)
+        transform(grams, g => Dedup.minhashX(g)).as("xs"): _*)
+      .where(size(col("xs")) > 0) // < n words: no signature (batch parity)
     val sigCols = (0 until numHashes).map(i =>
-      array_min(transform(col("hs"),
-        h => Dedup.minhashHash(h.getField("h1"), h.getField("h2"), i)))
+      array_min(transform(col("xs"), x => Dedup.minhashHash(x, i)))
         .as(s"s$i"))
     hashed.select(col("id") +: extraCols ++: sigCols: _*)
       .select(col("id") +: extraCols :+

@@ -1,19 +1,31 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.profile.ProfileType
+import graft.profile.{ProfileConfig, ProfileType, Profiler}
 
 /** Incremental profiling over Structured Streaming.
   *
   * The reference has no streaming abstraction at all (SURVEY §1.1); this
-  * is the natural Spark-first extension: the same fused scalar-aggregate
-  * design as the batch Profiler's pass A, expressed as a windowed
-  * streaming aggregation. Everything used here is a streamable aggregate
-  * (sums/counts/min/max/HLL++/GK-sketch) — no sort-based or distinct
-  * aggregates, so the query runs in update/append mode with state bounded
-  * by (windows x columns).
+  * is the natural Spark-first extension: the batch Profiler's pass A in
+  * its sketch mode ([[ProfileConfig.minimal]], the 100 TB operating
+  * config), expressed as a windowed streaming aggregation. The
+  * aggregates are [[Profiler.columnAggs]] — the one per-column
+  * statistics rule both profiles share — and every one of them is
+  * mergeable (sums/counts/min/max, corrected moments, HLL++,
+  * percentile_approx, approx_top_k), so the query runs in update mode
+  * with state bounded by (windows x columns).
+  *
+  * Output: one row per window `w` with the window's row count `n` and,
+  * per supported column `p`, `${p}_$stat` for each of its pass-A
+  * statistics (`count`, `approx_distinct`; numeric `sum`, `variance`,
+  * `min`, `max`, `skew`, `kurt`, `zeros`, `inf`, `quantiles` at
+  * `ProfileConfig.minimal.quantiles`; string `len_sum`, `len_min`,
+  * `len_max`, `len_median`, `topk`; boolean `true`, `false`; datetime
+  * `min`, `max` in epoch seconds) plus the derived `${p}_mean`,
+  * `${p}_std` and `${p}_len_mean` — sum / count, sqrt(variance) and
+  * len_sum / count, the operations the batch report uses.
   *
   * Usage:
   * {{{
@@ -26,51 +38,31 @@ import graft.profile.ProfileType
 object StreamingProfiler {
 
   /** Per-window, per-table profile: one row per window with every
-    * column's streamable stats. */
+    * column's pass-A statistics (see the object doc for the schema). */
   def windowedProfile(
       df: DataFrame, timeCol: String, windowDuration: String,
       watermark: String): DataFrame = {
-    val aggs = profileAggs(df)
+    val fields = df.schema.fields.toSeq
+      .map(f => f -> ProfileType.fromDataType(f.dataType))
+      .filter(_._2 != ProfileType.Unsupported)
+    val aggs = count(lit(1)).as("n") +: fields.flatMap { case (f, t) =>
+      Profiler.columnAggs(f, t, ProfileConfig.minimal)
+        .map(a => a.agg.as(s"${f.name}_${a.stat}"))
+    }
+    val derived = fields.flatMap { case (f, t) =>
+      def stat(s: String) = Profiler.qcol(s"${f.name}_$s")
+      t match {
+        case ProfileType.Numeric => Seq(
+          (stat("sum") / stat("count")).as(s"${f.name}_mean"),
+          sqrt(stat("variance")).as(s"${f.name}_std"))
+        case ProfileType.Categorical =>
+          Seq((stat("len_sum") / stat("count")).as(s"${f.name}_len_mean"))
+        case _ => Nil
+      }
+    }
     df.withWatermark(timeCol, watermark)
       .groupBy(window(col(timeCol), windowDuration).as("w"))
       .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** The streamable subset of the batch profiler's pass-A expressions. */
-  def profileAggs(df: DataFrame): Seq[Column] = {
-    val fields = df.schema.fields.toSeq
-      .filter(f => ProfileType.fromDataType(f.dataType) != ProfileType.Unsupported)
-    count(lit(1)).as("n") +: fields.flatMap { f =>
-      val c = col(f.name)
-      val p = f.name
-      val base = Seq(
-        count(c).as(s"${p}_count"),
-        approx_count_distinct(c).as(s"${p}_approx_distinct"))
-      ProfileType.fromDataType(f.dataType) match {
-        case ProfileType.Numeric =>
-          val d = c.cast("double")
-          base ++ Seq(
-            sum(d).as(s"${p}_sum"),
-            avg(d).as(s"${p}_mean"),
-            stddev_samp(d).as(s"${p}_std"),
-            min(d).as(s"${p}_min"),
-            max(d).as(s"${p}_max"),
-            count(when(d === 0.0, 1)).as(s"${p}_zeros"),
-            percentile_approx(d, array(lit(0.25), lit(0.5), lit(0.75)),
-              lit(1000)).as(s"${p}_quartiles"))
-        case ProfileType.Categorical =>
-          base ++ Seq(
-            avg(length(c)).as(s"${p}_len_mean"),
-            min(length(c)).as(s"${p}_len_min"),
-            max(length(c)).as(s"${p}_len_max"))
-        case ProfileType.Bool =>
-          base :+ count(when(c === true, 1)).as(s"${p}_true")
-        case ProfileType.DateTime =>
-          base ++ Seq(
-            min(c).as(s"${p}_min"),
-            max(c).as(s"${p}_max"))
-        case _ => base
-      }
-    }
+      .select(col("*") +: derived: _*)
   }
 }

@@ -154,4 +154,23 @@ class IncrementalProfileSpec extends SparkSpec {
     assert(merged.nNum == 1 && merged.vMin.contains(7.0) &&
       merged.mean == 7.0)
   }
+
+  test("datetime columns summarize as epoch seconds, like the profiler") {
+    val d = spark.sql("""SELECT * FROM VALUES
+        (DATE'2024-01-01', TIMESTAMP_NTZ'2024-03-01 10:00:00',
+         TIMESTAMP'2024-03-01 10:00:00'),
+        (DATE'1969-12-31', TIMESTAMP_NTZ'1970-01-01 00:00:00',
+         TIMESTAMP'1970-01-01 00:00:01'),
+        (NULL, NULL, NULL)
+      AS t(d, ntz, ts)""")
+    val m = summarize(d).collect().map(s => s.column -> s).toMap
+    for (c <- Seq("d", "ntz", "ts")) {
+      val e = unix_timestamp(col(c).cast("timestamp"))
+      val exp = d.select(min(e), max(e), count(col(c))).head()
+      assert(m(c).nRows == 3 && m(c).n == 2 && m(c).nNum == 2, c)
+      assert(m(c).vMin.contains(exp.getLong(0).toDouble), c)
+      assert(m(c).vMax.contains(exp.getLong(1).toDouble), c)
+    }
+    assert(m("d").vMin.contains(-86400.0) && m("ntz").vMin.contains(0.0))
+  }
 }
