@@ -68,8 +68,8 @@ final case class ProfileConfig(
       * full-table shuffle and a key-only shuffle at 100 TB. Exact up to
       * a simultaneous double XxHash64 collision (expected ~1e-15 merged
       * pairs at 1e12 rows); false for the collision-impossible
-      * full-row groupBy. Only the duplicate top listing's tie-break at
-      * the cut differs between modes (counts are identical). */
+      * full-row groupBy. Both modes list the same groups: ties at the
+      * listing's cut break by the row hash. */
     duplicatesByHash: Boolean = true,
     /** Rows in the head sample (reference: model/sample.py:52-71). */
     sampleHead: Int = 10,

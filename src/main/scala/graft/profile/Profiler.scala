@@ -1,7 +1,8 @@
 package graft.profile
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -12,6 +13,7 @@ import java.util.concurrent.{Executors, TimeUnit}
 import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.reflect.ClassTag
 
 /** Spark-native table profiler.
   *
@@ -25,12 +27,13 @@ import scala.concurrent.duration.Duration
   *   B. one explode->groupBy job producing per-(column,value) counts, from
   *      which exact n_distinct / n_unique / top-K / uniformity chi2 for ALL
   *      columns come at once;
-  *   C. one groupBy(column, bin) job for every column's fixed-width
-  *      histogram, over B's count tables (exact mode) or the data;
+  *   C. one binning job for every column's fixed-width histogram: a
+  *      typed scan of B's count tables (exact mode) or a groupBy(column,
+  *      bin) over the data (sketch mode);
   *   D. one `df.agg` for every numeric column's MAD (needs pass-A medians);
   *   E. one char-level rollup over the (small) distinct-value table,
-  *      its top chars through B's top-K heaps;
-  *   F. one groupBy-all-columns job for duplicate rows;
+  *      its top chars through bounded heaps;
+  *   F. one job over the row-hash groups for duplicate rows;
   *   G. one co-moment scan with all pairwise Pearson (and Spearman)
   *      correlations;
   *   H. one explode->groupBy job for all Cramer's-V contingency tables;
@@ -326,10 +329,12 @@ object Profiler {
       // default), which would make the 8 MB floor vacuous and shuffle
       // every tiny RDD-backed table; require a REAL estimate below the
       // sentinel before paying the exchange.
+      // The size tests come first: counting the partitions plans the
+      // table as external rows and compiles a deserializer.
       val sz = canon.queryExecution.optimizedPlan.stats.sizeInBytes
-      canon.rdd.getNumPartitions < passWidth(canon) &&
-        sz >= BigInt(8L * 1024 * 1024) &&
-        sz < BigInt(canon.sparkSession.sessionState.conf.defaultSizeInBytes)
+      sz >= BigInt(8L * 1024 * 1024) &&
+        sz < BigInt(canon.sparkSession.sessionState.conf.defaultSizeInBytes) &&
+        canon.rdd.getNumPartitions < passWidth(canon)
     }
 
   /** Pass A's chunk families: codegen'd scalars, and the three
@@ -526,28 +531,43 @@ object Profiler {
     (info, Some(nc))
   }
 
+  /** One column's tally over a (c, v, cnt) count table: k distinct
+    * values, u of them unique, n = Σcnt, sq = Σcnt² and the `topK` most
+    * frequent values under [[valueOrder]]. */
+  private final case class Tally(k: Long, u: Long, n: Long, sq: Long,
+      top: Vector[(String, Long)])
+
   /** Shared tail of both pass-B halves: persists the (c, v, cnt) table,
-    * then distinct/unique/chi2 + top-K per column off it. Returns the
-    * persisted table, or releases it again when a job fails. */
+    * then distinct/unique/chi2 + top-K per column off it in one typed
+    * scan. The sums are exact (`sum` raises on overflow under ANSI, so
+    * do these). Returns the persisted table, or releases it again when a
+    * job fails. */
   private def statsFromCounts(counts: DataFrame, names: Seq[String],
       cfg: ProfileConfig, label: String): (Map[String, ValueInfo], DataFrame) = {
     val persisted = counts.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val distinctRows = timed(s"B:$label-stats")(persisted.groupBy("c").agg(
-        count(lit(1)).as("k"),
-        sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("u"),
-        sum(col("cnt")).as("N"),
-        sum(col("cnt") * col("cnt")).as("sq")).collect())
-      val distinctMap = distinctRows.map { r =>
-        val k = r.getAs[Long]("k"); val n = r.getAs[Long]("N")
-        val chi2 = chi2FromCounts(n.toDouble, r.getAs[Long]("sq").toDouble, k)
-        r.getAs[String]("c") -> ((k, r.getAs[Long]("u"),
-          chi2PValue(chi2, k - 1)))
-      }.toMap
-      val topMap = timed(s"B:$label-topk")(topKPerColumn(persisted, cfg.topK))
+      val k = cfg.topK
+      val tallies = timed(s"B:$label-stats")(foldPartitions(
+        typedCounts(persisted, "v", Encoders.STRING), () => Map.empty[String, Tally]) { it =>
+        val sums = mutable.Map.empty[String, Array[Long]]
+        val tops = mutable.Map.empty[String, Least[(String, Long)]]
+        it.foreach { case (c, v, cnt) =>
+          val s = sums.getOrElseUpdate(c, new Array[Long](4))
+          s(0) += 1
+          if (cnt == 1) s(1) += 1
+          s(2) = Math.addExact(s(2), cnt)
+          s(3) = Math.addExact(s(3), Math.multiplyExact(cnt, cnt))
+          tops.getOrElseUpdate(c, new Least(k, valueOrder)) += ((v, cnt))
+        }
+        sums.map { case (c, s) => c -> Tally(s(0), s(1), s(2), s(3), tops(c).sorted) }.toMap
+      }(mergeByKey[Tally]((a, b) => Tally(a.k + b.k, a.u + b.u, Math.addExact(a.n, b.n),
+        Math.addExact(a.sq, b.sq), Least.merge(a.top, b.top, k, valueOrder)))))
       (names.map { c =>
-        val (k, u, p) = distinctMap.getOrElse(c, (0L, 0L, 1.0))
-        c -> ValueInfo(k, u, Some(p), topMap.getOrElse(c, Seq.empty))
+        c -> (tallies.get(c) match {
+          case Some(t) => ValueInfo(t.k, t.u,
+            Some(chi2PValue(chi2FromCounts(t.n.toDouble, t.sq.toDouble, t.k), t.k - 1)), t.top)
+          case None => ValueInfo(0L, 0L, Some(1.0), Seq.empty)
+        })
       }.toMap, persisted)
     } catch { case e: Throwable => persisted.unpersist(false); throw e }
   }
@@ -581,7 +601,12 @@ object Profiler {
     * BOTH family members. Float/double normalize -0.0 -> 0.0 and NaN ->
     * canonical NaN to match groupBy's key equality. The exact fallback
     * groups on every column (collision-impossible, full-row shuffle;
-    * maps were already canonicalized to strings at profile() entry). */
+    * maps were already canonicalized to strings at profile() entry) and
+    * hashes each group's row the same way.
+    *
+    * Both modes then run one typed scan over the (h1, h2, cnt) groups:
+    * the group count, and the `duplicatesHead` groups with cnt > 1 in
+    * (cnt desc, h1, h2) order, so ties at the cut resolve by hash. */
   private def passF(working: DataFrame, supported: Seq[StructField], a: PassA,
       cfg: ProfileConfig): (Long, Seq[(Map[String, String], Long)]) = {
     val names = supported.map(_.name)
@@ -604,30 +629,31 @@ object Profiler {
       }.map(ColumnBridge.expression)
       val h1 = ColumnBridge.column(XxHash64(hashEx, 42L))
       val h2 = ColumnBridge.column(XxHash64(hashEx, -7046029254386353131L))
-      val (keyed, keys, order) =
-        if (cfg.duplicatesByHash)
-          (working, Seq(h1.as("__h1"), h2.as("__h2")),
-            Seq(col("__cnt").desc, col("__h1"), col("__h2")))
-        else (working.select(names.map(qcol): _*), names.map(qcol),
-          col("__cnt").desc +: names.map(qcol))
-      val grouped = keyed.groupBy(keys: _*).agg(count(lit(1)).as("__cnt"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val (distinctRowCount, top) =
-        try (timed("F:dup-count")(grouped.count()),
-          timed("F:dup-top")(grouped.where(col("__cnt") > 1).orderBy(order: _*)
-            .limit(cfg.duplicatesHead).collect()))
-        finally grouped.unpersist()
+      val groupSize = count(lit(1)).as("__cnt")
+      val groups =
+        if (cfg.duplicatesByHash) working.groupBy(h1.as("__h1"), h2.as("__h2")).agg(groupSize)
+        else working.groupBy(names.map(qcol): _*).agg(groupSize)
+          .select(h1.as("__h1"), h2.as("__h2"), col("__cnt"))
+      val head = cfg.duplicatesHead
+      val order = Ordering.by[(Long, Long, Long), (Long, Long, Long)] {
+        case (x1, x2, n) => (-n, x1, x2)
+      }
+      val (distinctRowCount, top) = timed("F:dup-groups")(foldPartitions(
+        groups.as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)).rdd,
+        () => (0L, Vector.empty[(Long, Long, Long)])) { it =>
+        var n = 0L
+        val heap = new Least(head, order)
+        it.foreach { g => n += 1; if (g._3 > 1) heap += g }
+        (n, heap.sorted)
+      } { case ((n1, t1), (n2, t2)) => (n1 + n2, Least.merge(t1, t2, head, order)) })
       val topSeq =
-        if (!cfg.duplicatesByHash) top.map(r => values(r) -> r.getAs[Long]("__cnt")).toSeq
-        else if (top.isEmpty) Seq.empty
+        if (top.isEmpty) Seq.empty
         else {
           // One representative row per listed group: a map-only scan
-          // filtered to <= duplicatesHead hash pairs (ties at the cut
-          // resolve by hash, not column order — counts are identical
-          // either way). Driver-side sort restores the cnt-desc,
-          // value-ascending presentation of the exact path.
-          val cntOf = top.map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-          val cond = top.map(r => h1 === r.getLong(0) && h2 === r.getLong(1)).reduce(_ || _)
+          // filtered to <= duplicatesHead hash pairs. Driver-side sort
+          // gives the cnt-desc, value-ascending presentation.
+          val cntOf = top.map { case (x1, x2, n) => (x1, x2) -> n }.toMap
+          val cond = top.map { case (x1, x2, _) => h1 === x1 && h2 === x2 }.reduce(_ || _)
           val reps = timed("F:dup-reps")(working.where(cond)
             .select((names.map(qcol) :+ h1.as("__h1") :+ h2.as("__h2")): _*)
             .dropDuplicates("__h1", "__h2").collect())
@@ -670,24 +696,14 @@ object Profiler {
       value =!= Double.PositiveInfinity && value =!= Double.NegativeInfinity,
       when(w.isNull, lit(0)).otherwise(histogramBin(value, mn, w, last)))
 
-  /** Every target's histogram from one groupBy(c, bin) job over
-    * `binned`, a (c, bin, n) table of binned values and their weights;
-    * bins outside [0, bins) are dropped. */
-  private def histograms(binned: DataFrame,
-      targets: Seq[HistTarget]): Map[String, Histogram] = {
-    val rows = timed("C:histograms")(binned.where(col("bin").isNotNull)
-      .groupBy("c", "bin").agg(sum(col("n")).as("cnt")).collect())
-    val byCol = rows.groupBy(_.getAs[String]("c"))
+  /** Every target's histogram from its per-bin counts (none: all 0). */
+  private def histograms(targets: Seq[HistTarget],
+      counts: Map[String, Array[Long]]): Map[String, Histogram] =
     targets.map { t =>
-      val counts = Array.fill(t.bins)(0L)
-      byCol.getOrElse(t.name, Array.empty[Row]).foreach { r =>
-        val b = r.getAs[Int]("bin")
-        if (b >= 0 && b < t.bins) counts(b) += r.getAs[Long]("cnt")
-      }
       val w = t.width.getOrElse(1.0)
-      t.name -> Histogram(counts.toSeq, (0 to t.bins).map(i => t.min + i * w))
+      t.name -> Histogram(counts.get(t.name).fold(Seq.fill(t.bins)(0L))(_.toSeq),
+        (0 to t.bins).map(i => t.min + i * w))
     }.toMap
-  }
 
   /** Pass C (post-B): every numeric and datetime column's histogram. A
     * numeric column with n_distinct < histogramBins gets
@@ -695,11 +711,10 @@ object Profiler {
     * none. Exact mode bins each DISTINCT value of pass B's count tables
     * (`vd`: the value as a double, epoch seconds for datetimes)
     * weighted by its count — identical to binning each row, and no
-    * further scan of the data. Each row looks its target's parameters
-    * up by column name in a hash map (a broadcast join would build a
-    * hashed relation for a few rows), so the work per row does not grow
-    * with the column count. Sketch mode has no count tables, so it
-    * bins the rows in one explode over the data. */
+    * further scan of the data — in one typed scan with [[binOf]]'s
+    * arithmetic. Sketch mode has no count tables, so it bins the rows in
+    * one explode → groupBy(c, bin) over the data. Bins outside
+    * [0, bins) are dropped. */
   private def passC(working: DataFrame, a: PassA, countTables: Seq[DataFrame],
       numericCols: Seq[String], datetimeCols: Seq[String], nDistinct: String => Long,
       cfg: ProfileConfig): Map[String, Histogram] = {
@@ -707,20 +722,42 @@ object Profiler {
       math.min(cfg.histogramBins, math.max(1, nDistinct(c).toInt)))
     if (!cfg.computeHistograms || targets.isEmpty) Map.empty
     else if (cfg.exactDistinct) {
-      val params = targets.map(t =>
-        t.name -> ((t.min, t.width.map(Double.box).orNull, t.bins - 1))).toMap
-      val mn = udf((c: String) => params(c)._1)
-      val w = udf((c: String) => params(c)._2)
-      val last = udf((c: String) => params(c)._3)
-      histograms(countTables.map(_.select("c", "vd", "cnt")).reduce(_ union _)
-        .where(col("c").isin(targets.map(_.name): _*))
-        .select(col("c"), binOf(col("vd"), mn(col("c")), w(col("c")), last(col("c"))).as("bin"),
-          col("cnt").as("n")), targets)
-    } else
-      histograms(working.select(explode(array(targets.map(t =>
+      val params = targets.map(t => t.name -> ((t.min, t.width, t.bins))).toMap
+      val counts = timed("C:histograms")(foldPartitions(
+        typedCounts(countTables.map(_.select("c", "vd", "cnt")).reduce(_ union _),
+          "vd", Encoders.DOUBLE),
+        () => Map.empty[String, Array[Long]]) { it =>
+        val out = mutable.Map.empty[String, Array[Long]]
+        it.foreach { case (c, vd, cnt) =>
+          params.get(c).foreach { case (mn, w, bins) =>
+            if (vd != null && !vd.isNaN && !vd.isInfinite) {
+              val b = w.fold(0L)(w => math.min(math.floor((vd - mn) / w).toLong, bins - 1L))
+              if (b >= 0 && b < bins) {
+                val h = out.getOrElseUpdate(c, new Array[Long](bins))
+                h(b.toInt) = Math.addExact(h(b.toInt), cnt)
+              }
+            }
+          }
+        }
+        out.toMap
+      }(mergeByKey[Array[Long]]((x, y) => x.indices.map(i => Math.addExact(x(i), y(i))).toArray)))
+      histograms(targets, counts)
+    } else {
+      val rows = timed("C:histograms")(working.select(explode(array(targets.map(t =>
         struct(lit(t.name).as("c"),
-          binOf(t.value, lit(t.min), t.width.fold(lit(null))(lit(_)), lit(t.bins - 1)).as("bin"),
-          lit(1L).as("n"))): _*)).as("kb")).select("kb.*"), targets)
+          binOf(t.value, lit(t.min), t.width.fold(lit(null))(lit(_)), lit(t.bins - 1)).as("bin"))
+      ): _*)).as("kb")).select("kb.*")
+        .where(col("bin").isNotNull).groupBy("c", "bin").count().collect())
+      val bins = targets.map(t => t.name -> t.bins).toMap
+      histograms(targets, rows.groupBy(_.getString(0)).map { case (c, rs) =>
+        val h = new Array[Long](bins(c))
+        rs.foreach { r =>
+          val b = r.getInt(1)
+          if (b >= 0 && b < h.length) h(b) += r.getLong(2)
+        }
+        c -> h
+      })
+    }
   }
 
   /** Pass D: MAD for all numeric columns in one agg, around pass A's
@@ -755,20 +792,30 @@ object Profiler {
     }
 
   /** Pass E: char-level rollups of the string columns `cols`, weighting
-    * each distinct value's chars by the value's count: an explode over
-    * B1's (small) distinct-value table, not the data, then each
-    * column's 1000 most frequent chars through pass B's top-K heaps. */
+    * each distinct value's chars by the value's count: one typed scan of
+    * B1's (small) distinct-value table, not the data, that splits each
+    * value into code points (as Spark's `split` does with an empty
+    * pattern), sums per (column, char), then keeps each column's 1000
+    * most frequent chars in bounded heaps. */
   private def passE(vcTable: Option[DataFrame], cols: Seq[String]): Map[String, CharStats] =
     vcTable match {
       case Some(vc) if cols.nonEmpty =>
-        val chars = vc
-          .where(col("c").isin(cols: _*))
-          .select(col("c"), col("cnt"),
-            explode(split(col("v"), "")).as("ch"))
-          .where(length(col("ch")) > 0)
-          .groupBy("c", "ch").agg(sum(col("cnt")).as("cnt"))
-        val top = timed("E:chars")(
-          topKPerColumn(chars.withColumnRenamed("ch", "v"), 1000))
+        val wanted = cols.toSet
+        val charCounts = typedCounts(vc, "v", Encoders.STRING)
+          .flatMap { case (c, v, cnt) =>
+            if (!wanted(c)) Iterator.empty
+            else v.codePoints().toArray.iterator
+              .map(cp => (c, new String(Character.toChars(cp))) -> cnt)
+          }
+          .reduceByKey((x, y) => Math.addExact(x, y))
+        val top = timed("E:chars")(foldPartitions(charCounts,
+          () => Map.empty[String, Vector[(String, Long)]]) { it =>
+          val heaps = mutable.Map.empty[String, Least[(String, Long)]]
+          it.foreach { case ((c, ch), cnt) =>
+            heaps.getOrElseUpdate(c, new Least(1000, valueOrder)) += ((ch, cnt))
+          }
+          heaps.map { case (c, h) => c -> h.sorted }.toMap
+        }(mergeByKey[Vector[(String, Long)]](Least.merge(_, _, 1000, valueOrder))))
         top.map { case (c, pairs) =>
           val total = pairs.map(_._2).sum
           def rollup(f: Int => String): Map[String, Long] =
@@ -967,40 +1014,60 @@ object Profiler {
         graft.ops.PhiKOp.phik(working, cols(i), cols(j),
           cfg.maxCramersCardinality)).toMap
 
-  /** Exact per-column top-K value counts WITHOUT a per-column sort:
-    * bounded top-K heaps per partition (mergeable), merged on the driver.
-    * A window row_number would sort every distinct value of every column
-    * (O(distinct log distinct) per column and a full extra shuffle); the
-    * heap pass is one scan of the distinct-value table with
-    * partitions x columns x K bounded output. Ordering: count desc,
-    * value asc (reference: summary_algorithms.py:463-468). */
-  private def topKPerColumn(
-      vc: DataFrame, k: Int): Map[String, Seq[(String, Long)]] = {
-    val ord = Ordering.by[(String, Long), (Long, String)] {
-      case (v, cnt) => (-cnt, v)
+  // ---- Typed kernels over persisted tables ------------------------------
+  // Passes B, C, E and F read their tables through typed `mapPartitions`
+  // folds, as the co-moment kernel does: a closure generates no code, and
+  // the typed read's deserializer is the one generated class, shared by
+  // every read of the same shape. A warm profile then compiles few enough
+  // distinct classes to stay in Spark's codegen cache.
+
+  /** Count-desc, value-asc: the top-K order of value and char counts
+    * (reference: summary_algorithms.py:463-468). */
+  private val valueOrder: Ordering[(String, Long)] =
+    Ordering.by[(String, Long), (Long, String)] { case (v, cnt) => (-cnt, v) }
+
+  /** A bounded heap that keeps the `k` least elements under `ord`. */
+  private final class Least[A](k: Int, ord: Ordering[A]) {
+    private val heap = mutable.PriorityQueue.empty[A](ord) // head: the worst kept
+    def +=(a: A): Unit = if (k > 0) {
+      if (heap.size < k) heap.enqueue(a)
+      else if (ord.lt(a, heap.head)) { heap.dequeue(); heap.enqueue(a) }
     }
-    val partials: Array[(String, Seq[(String, Long)])] = vc
-      .select(col("c"), col("v"), col("cnt"))
-      .as[(String, String, Long)](
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.scalaLong))
-      .mapPartitions { it =>
-        val heaps = mutable.Map
-          .empty[String, mutable.PriorityQueue[(String, Long)]]
-        it.foreach { case (c, v, cnt) =>
-          val h = heaps.getOrElseUpdate(c,
-            mutable.PriorityQueue.empty[(String, Long)](ord))
-          h.enqueue((v, cnt))
-          if (h.size > k) h.dequeue() // drops the ord-max = worst element
-        }
-        heaps.iterator.map { case (c, h) => (c, h.toSeq) }
-      }(org.apache.spark.sql.Encoders.kryo[(String, Seq[(String, Long)])])
-      .collect()
-    partials.groupBy(_._1).map { case (c, parts) =>
-      c -> parts.flatMap(_._2).sortBy { case (v, cnt) => (-cnt, v) }.take(k).toSeq
-    }
+    def sorted: Vector[A] = heap.toVector.sorted(ord)
+  }
+
+  private object Least {
+    /** The `k` least of two sorted partials: order-independent under a
+      * total order. */
+    def merge[A](a: Vector[A], b: Vector[A], k: Int, ord: Ordering[A]): Vector[A] =
+      (a ++ b).sorted(ord).take(k)
+  }
+
+  /** Merges per-key partials, combining the values of a key in both. */
+  private def mergeByKey[V](f: (V, V) => V)(a: Map[String, V], b: Map[String, V]): Map[String, V] =
+    b.foldLeft(a) { case (m, (c, v)) => m.updated(c, m.get(c).fold(v)(f(_, v))) }
+
+  /** (c, value, cnt) rows of a persisted pass-B count table. */
+  private def typedCounts[V](table: DataFrame, value: String,
+      enc: Encoder[V]): RDD[(String, V, Long)] =
+    table.select(col("c"), col(value), col("cnt"))
+      .as(Encoders.tuple(Encoders.STRING, enc, Encoders.scalaLong)).rdd
+
+  /** Folds each partition of `rdd` into one partial with `part`, then
+    * merges the partials with `merge` starting from `zero()`. Partials
+    * merge in partition order, so the result does not hang on task
+    * timing. Past 64 partitions they first merge on the executors in
+    * about sqrt(partitions) groups, which bounds the driver transfer. */
+  private def foldPartitions[T, P: ClassTag](rdd: RDD[T], zero: () => P)(
+      part: Iterator[T] => P)(merge: (P, P) => P): P = {
+    def fold(ps: Iterator[(Int, P)]): P =
+      ps.toArray.sortBy(_._1).iterator.map(_._2).foldLeft(zero())(merge)
+    val partials = rdd.mapPartitionsWithIndex((i, it) => Iterator.single(i -> part(it)))
+    val nParts = partials.getNumPartitions
+    fold(
+      if (nParts <= 64) partials.collect().iterator
+      else partials.partitionBy(new HashPartitioner(math.ceil(math.sqrt(nParts)).toInt))
+        .mapPartitionsWithIndex((g, it) => Iterator.single(g -> fold(it))).collect().iterator)
   }
 
   /** Spearman rank-correlation matrix = Pearson over tie-averaged ranks.
@@ -1145,7 +1212,7 @@ object Profiler {
     val pairJ = (for { i <- 0 until nCols; j <- (i + 1) until nCols } yield j).toArray
     val nPairs = pairI.length
     val len = nM * nPairs * 6
-    val partials = base.rdd.mapPartitionsWithIndex { (pi, it) =>
+    val agg = foldPartitions(base.rdd, () => new Array[Double](len)) { it =>
       val maps = bc.value
       // per (matrix, pair): n, mx, my, cxx, cyy, cxy
       val s = new Array[Double](len)
@@ -1185,18 +1252,8 @@ object Profiler {
           q += 1
         }
       }
-      Iterator.single(pi -> s)
-    }
-    // Partials merge in partition order, so the result does not hang on
-    // task timing. Past 64 partitions they first merge on the executors
-    // in about sqrt(partitions) groups, which bounds the driver transfer.
-    def fold(ps: Iterator[(Int, Array[Double])]): Array[Double] =
-      ps.toArray.sortBy(_._1).iterator.map(_._2).foldLeft(new Array[Double](len))(mergeCoMoments)
-    val nParts = partials.getNumPartitions
-    val agg = fold(
-      if (nParts <= 64) partials.collect().iterator
-      else partials.partitionBy(new HashPartitioner(math.ceil(math.sqrt(nParts)).toInt))
-        .mapPartitionsWithIndex((g, it) => Iterator.single(g -> fold(it))).collect().iterator)
+      s
+    }(mergeCoMoments)
     bc.destroy()
     Seq("pearson", "spearman").take(nM).zipWithIndex.map { case (method, mi) =>
       val m = Array.fill(nCols, nCols)(1.0)
