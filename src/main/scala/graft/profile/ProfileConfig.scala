@@ -62,15 +62,6 @@ final case class ProfileConfig(
     duplicatesFraction: Double = 0.01,
     /** Number of duplicate rows listed (reference: config_default.yaml:152-153). */
     duplicatesHead: Int = 10,
-    /** Count duplicate rows by a 128-bit row-hash pair instead of a
-      * groupBy on every column: the shuffle carries 16 bytes + a count
-      * per row instead of the whole table — the difference between a
-      * full-table shuffle and a key-only shuffle at 100 TB. Exact up to
-      * a simultaneous double XxHash64 collision (expected ~1e-15 merged
-      * pairs at 1e12 rows); false for the collision-impossible
-      * full-row groupBy. Both modes list the same groups: ties at the
-      * listing's cut break by the row hash. */
-    duplicatesByHash: Boolean = true,
     /** Rows in the head sample (reference: model/sample.py:52-71). */
     sampleHead: Int = 10,
     /** Persist the input before multi-pass profiling

@@ -28,7 +28,7 @@ import scala.reflect.ClassTag
   *      which exact n_distinct / n_unique / top-K / uniformity chi2 for ALL
   *      columns come at once;
   *   C. one binning job for every column's fixed-width histogram: a
-  *      typed scan of B's count tables (exact mode) or a groupBy(column,
+  *      typed scan of B's count table (exact mode) or a groupBy(column,
   *      bin) over the data (sketch mode);
   *   D. one `df.agg` for every numeric column's MAD (needs pass-A medians);
   *   E. one char-level rollup over the (small) distinct-value table,
@@ -67,7 +67,8 @@ object Profiler {
 
   private[profile] type RankMaps = Map[String, mutable.LongMap[Double]]
 
-  /** A pass-B half's value statistics plus its persisted count table. */
+  /** Pass B's value statistics plus its persisted count table (exact
+    * mode only). */
   private type BResult = (Map[String, ValueInfo], Option[DataFrame])
 
   /** Pass B's per-column value statistics (or sketch mode's stand-ins). */
@@ -113,8 +114,6 @@ object Profiler {
     def named(keep: ProfileType => Boolean, cols: Seq[(StructField, ProfileType)]) =
       cols.collect { case (f, t) if keep(t) => f.name }
     val preNumeric = named(_ == ProfileType.Numeric, supported)
-    val preDatetime = named(_ == ProfileType.DateTime, supported)
-    val catSupported = named(_ != ProfileType.Numeric, supported)
     def typeOf(c: String) = fields.find(_.name == c).map(_.dataType)
     val repartitioned = repartitionInput(canon, cfg)
     val working =
@@ -128,8 +127,8 @@ object Profiler {
     // and passes C-H are independent given their results — all overlap
     // on a bounded pool of concurrent Spark jobs (the reference used a
     // client-side ThreadPool the same way, model/summary.py:155-185).
-    // Launch order is the pool's FIFO order: pass A's chunks, B1, B2,
-    // then (before the pass-B await) F, the head and Spearman's ranks.
+    // Launch order is the pool's FIFO order: pass A's chunks, B, then
+    // (before the pass-B await) F, the head and Spearman's ranks.
     // A pool thread only ever awaits a future created before its own,
     // so even poolSize = 1 cannot deadlock.
     val pool = Executors.newFixedThreadPool(cfg.poolSize)
@@ -137,16 +136,11 @@ object Profiler {
     val a = new PassA(aChunks.zipWithIndex.map { case (ch, i) =>
       Future(timed(s"A:agg-chunk$i")(working.agg(ch.head, ch.tail: _*).head()))
     })
-    def passB(cols: Seq[String])(exact: => BResult): Future[BResult] =
-      Future {
-        if (cols.isEmpty) (Map.empty[String, ValueInfo], None)
-        else if (cfg.exactDistinct) exact
-        else (sketchValueInfo(a, cols), None)
-      }
-    val catF = passB(catSupported)(passBCat(working, catSupported, preDatetime,
-      preDatetime.filter(typeOf(_).contains(TimestampType)), cfg))
-    val numF = passB(preNumeric)(
-      passBNum(working, preNumeric, preNumeric.filter(typeOf(_).contains(FloatType)), cfg))
+    val bF: Future[BResult] = Future {
+      if (supported.isEmpty) (Map.empty[String, ValueInfo], None)
+      else if (cfg.exactDistinct) passB(working, supported, cfg)
+      else (sketchValueInfo(a, supported.map(_._1.name)), None)
+    }
     try {
       val duplicatesF = Future(passF(working, supported.map(_._1), a, cfg))
       // head rows come from the PRE-repartition plan: a round-robin
@@ -157,11 +151,9 @@ object Profiler {
       val ranksF: Future[Option[Either[RankMaps, DataFrame]]] =
         if (!cfg.computeCorrelations || !cfg.computeSpearman || preNumeric.size < 2)
           Future.successful(None)
-        else Future(Some(passSpearmanRanks(working, preNumeric, await(numF), cfg)))
+        else Future(Some(passSpearmanRanks(working, preNumeric, await(bF), cfg)))
 
-      val (catInfo, vcTable) = await(catF)
-      val (numInfo, numCounts) = await(numF)
-      val valueInfo: Map[String, ValueInfo] = catInfo ++ numInfo
+      val (valueInfo, counts) = await(bF)
       // Demotion: numeric with few distinct values profiles as categorical
       // (reference: typeset_relations.py:68-77).
       val typed: Seq[(StructField, ProfileType)] = supported.map { case (f, t) =>
@@ -178,11 +170,10 @@ object Profiler {
         val nd = valueInfo.get(c).map(_.nDistinct).getOrElse(Long.MaxValue)
         nd >= 2 && nd <= cfg.maxCramersCardinality
       }
-      val histogramsF = Future(passC(working, a,
-        numCounts.toSeq ++ vcTable.filter(_ => datetimeCols.nonEmpty),
-        numericCols, datetimeCols, valueInfo(_).nDistinct, cfg))
+      val histogramsF = Future(passC(working, a, counts, numericCols, datetimeCols,
+        valueInfo(_).nDistinct, cfg))
       val madsF = Future(passD(working, a, numericCols, cfg))
-      val charStatsF = Future(passE(vcTable.filter(_ => cfg.computeCharStats), stringCats))
+      val charStatsF = Future(passE(counts.filter(_ => cfg.computeCharStats), stringCats))
       // Pearson (and Spearman, given rank maps) come from one co-moment
       // scan; the shuffle-rank Spearman fallback runs concurrently.
       val coMomentsF = Future {
@@ -269,8 +260,7 @@ object Profiler {
       // can persist a table after it is released here.
       pool.shutdown()
       pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-      for (f <- Seq(catF, numF); (_, Some(t)) <- f.value.flatMap(_.toOption))
-        t.unpersist(false)
+      for ((_, Some(t)) <- bF.value.flatMap(_.toOption)) t.unpersist(false)
       if (cfg.persist) working.unpersist()
     }
   }
@@ -456,24 +446,22 @@ object Profiler {
     Seq(Sketch, Distinct, TopK).flatMap(family(_).map(_.agg).grouped(6)) ++ scalarChunks
   }
 
-  // ---- Pass B: per-(column,value) counts, as TWO concurrent jobs -----
+  // ---- Pass B: per-(column,value) counts, one job ---------------------
   // Replaces the reference's per-column value_counts jobs
-  // (series_wrappers.py:104-131) with explode->groupBy — split by
-  // declared type: the melt multiplies rows by column count, so two
-  // half-width jobs running concurrently finish in roughly half the
-  // wall time of one full-width job. The numeric half (B2) also
-  // carries each value's direct double cast, from which Spearman's
-  // rank table and the exact histograms derive WITHOUT re-scanning
-  // the data. Distinct stats still group on the cast-to-string form —
+  // (series_wrappers.py:104-131) with one explode->groupBy over every
+  // supported column. Distinct stats group on the cast-to-string form —
   // injective for every numeric type, unlike the double cast (longs
-  // above 2^53 collide there).
+  // above 2^53 collide there). Each distinct value also carries `vd`,
+  // its value as a double (epoch seconds for datetimes), from which the
+  // exact histograms and Spearman's rank table derive WITHOUT
+  // re-scanning the data.
 
   /** (c, v, cnt): every non-null value of `cols`, cast to string, with
     * its count — one melt → groupBy job over the data. Values of
     * `epochCols` also key on `vd`, their epoch seconds taken from the
     * raw column (null for the other columns). */
   private def valueCounts(working: DataFrame, cols: Seq[String],
-      epochCols: Seq[String] = Seq.empty): DataFrame = {
+      epochCols: Seq[String]): DataFrame = {
     val keys = if (epochCols.isEmpty) Seq("c", "v") else Seq("c", "v", "vd")
     working
       .select(explode(array(cols.map { c =>
@@ -488,47 +476,36 @@ object Profiler {
       .groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
   }
 
-  /** Pass B1 (exact mode): the categorical / boolean / datetime side.
-    * Pass E (char rollups) and the datetime histograms read the
-    * persisted count table, which is released at once when neither
-    * applies. Like B2's `vd`, each datetime value's epoch seconds ride
-    * along as `vd`. A date's (or local timestamp's) string form parses
-    * back to it, per DISTINCT value; a `TimestampType` value's drops its
-    * offset, so two instants of a DST fall-back hour would print alike:
-    * `timestampCols` key the melt on the raw value's epoch instead. */
-  private def passBCat(working: DataFrame, cols: Seq[String], datetimeCols: Seq[String],
-      timestampCols: Seq[String], cfg: ProfileConfig): BResult = {
-    val counts = valueCounts(working, cols, timestampCols)
-    val fromString = datetimeCols.diff(timestampCols)
-    val parsed = when(col("c").isin(fromString: _*),
-      unix_timestamp(col("v").cast("timestamp")).cast("double"))
-    val (info, vc) = statsFromCounts(
-      if (fromString.isEmpty) counts
-      else counts.withColumn("vd",
-        if (timestampCols.isEmpty) parsed else parsed.otherwise(col("vd"))),
-      cols, cfg, "cat")
-    if (cfg.computeCharStats || (cfg.computeHistograms && datetimeCols.nonEmpty))
-      (info, Some(vc))
-    else { vc.unpersist(); (info, None) }
-  }
-
-  /** Pass B2 (exact mode): the numeric side, with the double cast
-    * carried per distinct value. vd (the exact double a DIRECT cast
-    * produces) is derived per DISTINCT value after the groupBy, not per
-    * input row: int/long/double/decimal strings parse back to the
-    * identical double, and floats are restored through an intermediate
-    * float cast (a float's shortest string parses to a different double
-    * than (double)f). Keeps the explode+shuffle rows as narrow as B1's. */
-  private def passBNum(working: DataFrame, cols: Seq[String],
-      floatCols: Seq[String], cfg: ProfileConfig): BResult = {
-    val vd =
-      if (floatCols.isEmpty) col("v").cast("double")
-      else when(col("c").isin(floatCols: _*),
-        col("v").cast("float").cast("double"))
-        .otherwise(col("v").cast("double"))
-    val (info, nc) = statsFromCounts(
-      valueCounts(working, cols).withColumn("vd", vd), cols, cfg, "num")
-    (info, Some(nc))
+  /** Pass B (exact mode): value statistics of every supported column and
+    * the persisted (c, v, vd, cnt) table they come from. `vd` is derived
+    * per DISTINCT value after the groupBy, not per input row: numeric
+    * strings parse back to the exact double a direct cast produces, and
+    * floats are restored through an intermediate float cast (a float's
+    * shortest string parses to a different double than (double)f). A
+    * date's (or local timestamp's) string form parses back to its epoch
+    * seconds; a `TimestampType` value's drops its offset, so two instants
+    * of a DST fall-back hour would print alike: those columns key the
+    * melt on the raw value's epoch instead. Other columns get null. */
+  private def passB(working: DataFrame, cols: Seq[(StructField, ProfileType)],
+      cfg: ProfileConfig): BResult = {
+    def named(keep: (DataType, ProfileType) => Boolean) =
+      cols.collect { case (f, t) if keep(f.dataType, t) => f.name }
+    val timestampCols = named((d, _) => d == TimestampType)
+    val v = col("v")
+    val vd = Seq(
+      named((d, _) => d == FloatType) -> v.cast("float").cast("double"),
+      named((d, t) => d != FloatType && t == ProfileType.Numeric) -> v.cast("double"),
+      named((d, t) => d != TimestampType && t == ProfileType.DateTime) ->
+        unix_timestamp(v.cast("timestamp")).cast("double"),
+      timestampCols -> col("vd")
+    ).filter(_._1.nonEmpty).map { case (cs, e) => (col("c").isin(cs: _*), e) } match {
+      case (c0, e0) +: rest => rest.foldLeft(when(c0, e0)) { case (w, (c, e)) => w.when(c, e) }
+      case _ => lit(null).cast("double")
+    }
+    val names = cols.map(_._1.name)
+    val (info, table) = statsFromCounts(
+      valueCounts(working, names, timestampCols).withColumn("vd", vd), names, cfg)
+    (info, Some(table))
   }
 
   /** One column's tally over a (c, v, cnt) count table: k distinct
@@ -537,17 +514,16 @@ object Profiler {
   private final case class Tally(k: Long, u: Long, n: Long, sq: Long,
       top: Vector[(String, Long)])
 
-  /** Shared tail of both pass-B halves: persists the (c, v, cnt) table,
-    * then distinct/unique/chi2 + top-K per column off it in one typed
-    * scan. The sums are exact (`sum` raises on overflow under ANSI, so
-    * do these). Returns the persisted table, or releases it again when a
-    * job fails. */
+  /** Persists pass B's (c, v, vd, cnt) table, then distinct/unique/chi2
+    * + top-K per column off it in one typed scan. The sums are exact
+    * (`sum` raises on overflow under ANSI, so do these). Returns the
+    * persisted table, or releases it again when a job fails. */
   private def statsFromCounts(counts: DataFrame, names: Seq[String],
-      cfg: ProfileConfig, label: String): (Map[String, ValueInfo], DataFrame) = {
+      cfg: ProfileConfig): (Map[String, ValueInfo], DataFrame) = {
     val persisted = counts.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val k = cfg.topK
-      val tallies = timed(s"B:$label-stats")(foldPartitions(
+      val tallies = timed("B:stats")(foldPartitions(
         typedCounts(persisted, "v", Encoders.STRING), () => Map.empty[String, Tally]) { it =>
         val sums = mutable.Map.empty[String, Array[Long]]
         val tops = mutable.Map.empty[String, Least[(String, Long)]]
@@ -590,22 +566,19 @@ object Profiler {
     * rows with their counts). Pandas semantics, NOT the reference spark
     * impl, which is identically zero (dataframe_wrappers.py:542-550).
     *
-    * By default rows group on a 128-bit row-hash pair: groupBy on the
-    * full row shuffles every byte of the table, while groupBy on
-    * (h1, h2) shuffles 16 bytes + a count per row — THE scale difference
+    * Rows group on a 128-bit row-hash pair: groupBy on the full row
+    * would shuffle every byte of the table, while groupBy on (h1, h2)
+    * shuffles 16 bytes + a count per row — THE scale difference
     * for pass F at 100 TB. Two independently-seeded XxHash64s make a
     * false row-merge need a simultaneous 2^-128 double collision (~1e-15
     * expected merges at 1e12 rows). Hash inputs interleave each column
     * with its null flag: the hash mixer SKIPS null children, so without
     * the flags ("a", null) and (null, "a") would hash identically in
     * BOTH family members. Float/double normalize -0.0 -> 0.0 and NaN ->
-    * canonical NaN to match groupBy's key equality. The exact fallback
-    * groups on every column (collision-impossible, full-row shuffle;
-    * maps were already canonicalized to strings at profile() entry) and
-    * hashes each group's row the same way.
+    * canonical NaN to match groupBy's key equality.
     *
-    * Both modes then run one typed scan over the (h1, h2, cnt) groups:
-    * the group count, and the `duplicatesHead` groups with cnt > 1 in
+    * One typed scan over the (h1, h2, cnt) groups then gives the group
+    * count, and the `duplicatesHead` groups with cnt > 1 in
     * (cnt desc, h1, h2) order, so ties at the cut resolve by hash. */
   private def passF(working: DataFrame, supported: Seq[StructField], a: PassA,
       cfg: ProfileConfig): (Long, Seq[(Map[String, String], Long)]) = {
@@ -629,11 +602,7 @@ object Profiler {
       }.map(ColumnBridge.expression)
       val h1 = ColumnBridge.column(XxHash64(hashEx, 42L))
       val h2 = ColumnBridge.column(XxHash64(hashEx, -7046029254386353131L))
-      val groupSize = count(lit(1)).as("__cnt")
-      val groups =
-        if (cfg.duplicatesByHash) working.groupBy(h1.as("__h1"), h2.as("__h2")).agg(groupSize)
-        else working.groupBy(names.map(qcol): _*).agg(groupSize)
-          .select(h1.as("__h1"), h2.as("__h2"), col("__cnt"))
+      val groups = working.groupBy(h1.as("__h1"), h2.as("__h2")).agg(count(lit(1)).as("__cnt"))
       val head = cfg.duplicatesHead
       val order = Ordering.by[(Long, Long, Long), (Long, Long, Long)] {
         case (x1, x2, n) => (-n, x1, x2)
@@ -708,24 +677,23 @@ object Profiler {
   /** Pass C (post-B): every numeric and datetime column's histogram. A
     * numeric column with n_distinct < histogramBins gets
     * min(bins, n_distinct) bins (reference parity); demoted columns get
-    * none. Exact mode bins each DISTINCT value of pass B's count tables
+    * none. Exact mode bins each DISTINCT value of pass B's count table
     * (`vd`: the value as a double, epoch seconds for datetimes)
     * weighted by its count — identical to binning each row, and no
     * further scan of the data — in one typed scan with [[binOf]]'s
-    * arithmetic. Sketch mode has no count tables, so it bins the rows in
+    * arithmetic. Sketch mode has no count table, so it bins the rows in
     * one explode → groupBy(c, bin) over the data. Bins outside
     * [0, bins) are dropped. */
-  private def passC(working: DataFrame, a: PassA, countTables: Seq[DataFrame],
+  private def passC(working: DataFrame, a: PassA, counts: Option[DataFrame],
       numericCols: Seq[String], datetimeCols: Seq[String], nDistinct: String => Long,
       cfg: ProfileConfig): Map[String, Histogram] = {
     val targets = histTargets(a, numericCols, datetimeCols, cfg)(c =>
       math.min(cfg.histogramBins, math.max(1, nDistinct(c).toInt)))
     if (!cfg.computeHistograms || targets.isEmpty) Map.empty
-    else if (cfg.exactDistinct) {
+    else if (counts.nonEmpty) {
       val params = targets.map(t => t.name -> ((t.min, t.width, t.bins))).toMap
-      val counts = timed("C:histograms")(foldPartitions(
-        typedCounts(countTables.map(_.select("c", "vd", "cnt")).reduce(_ union _),
-          "vd", Encoders.DOUBLE),
+      val binned = timed("C:histograms")(foldPartitions(
+        typedCounts(counts.get, "vd", Encoders.DOUBLE),
         () => Map.empty[String, Array[Long]]) { it =>
         val out = mutable.Map.empty[String, Array[Long]]
         it.foreach { case (c, vd, cnt) =>
@@ -741,7 +709,7 @@ object Profiler {
         }
         out.toMap
       }(mergeByKey[Array[Long]]((x, y) => x.indices.map(i => Math.addExact(x(i), y(i))).toArray)))
-      histograms(targets, counts)
+      histograms(targets, binned)
     } else {
       val rows = timed("C:histograms")(working.select(explode(array(targets.map(t =>
         struct(lit(t.name).as("c"),
@@ -793,7 +761,7 @@ object Profiler {
 
   /** Pass E: char-level rollups of the string columns `cols`, weighting
     * each distinct value's chars by the value's count: one typed scan of
-    * B1's (small) distinct-value table, not the data, that splits each
+    * pass B's (small) distinct-value table, not the data, that splits each
     * value into code points (as Spark's `split` does with an empty
     * pattern), sums per (column, char), then keeps each column's 1000
     * most frequent chars in bounded heaps. */
@@ -837,52 +805,44 @@ object Profiler {
     }
 
   /** Spearman's rank state, built concurrently with pass B. The rank
-    * table derives from B2's numeric counts — one small aggregation over
-    * distinct cells, not another data scan. When those counts prove the
-    * whole rank table driver-sized, the per-column rank maps are built
-    * HERE, pre-demotion, so the post-B critical path runs only the
+    * table derives from pass B's count table — one small aggregation
+    * over distinct cells, not another data scan. When the counts prove
+    * the whole rank table driver-sized, the per-column rank maps are
+    * built HERE, pre-demotion, so the post-B critical path runs only the
     * one-scan co-moment job (Left); above the gate the SHUFFLE rank
     * table is the 100 TB fallback (Right). */
   private def passSpearmanRanks(working: DataFrame, cols: Seq[String],
-      numStats: BResult, cfg: ProfileConfig): Either[RankMaps, DataFrame] = {
-    val (numInfo, numCounts) = numStats
-    val total = cols.iterator.map(c => numInfo(c).nDistinct).sum
-    numCounts match {
-      case Some(nc) =>
+      b: BResult, cfg: ProfileConfig): Either[RankMaps, DataFrame] = {
+    val (info, table) = b
+    val total = cols.iterator.map(c => info(c).nDistinct).sum
+    val (counts, estimate) = table match {
+      case Some(t) =>
         // rank in DOUBLE space (ties averaged across values that
-        // collide under the cast, matching the direct-melt plan):
-        // re-aggregate the string-keyed counts by vd
-        val counts = nc.where(!col("vd").isNaN)
-          .select(col("c"), col("vd").as("v"), col("cnt"))
-        if (total <= cfg.spearmanBroadcastMaxDistinct)
-          // driver-sized: rank IN the driver off one bounded collect
-          // of the PERSISTED count table — no vd re-aggregation
-          // shuffle (the driver accumulator folds string-distinct
-          // values that collide under the double cast), and the
-          // distributed ranking would only have been collected into
-          // these maps anyway
-          Left(timed("G:spearman-maps")(buildRankMapsFromCounts(counts, cols)))
-        else
-          Right(timed("G:spearman-ranks")(graft.ops.Ranking.avgRanksFromCounts(
-            counts.groupBy("c", "v").agg(sum(col("cnt")).as("cnt")), "c", "v")))
+        // collide under the cast, matching the direct-melt plan): the
+        // string-keyed counts of `cols`, keyed by vd
+        (t.where(col("c").isin(cols: _*) && !col("vd").isNaN)
+          .select(col("c"), col("vd").as("v"), col("cnt")), total.toDouble)
       case None =>
-        // sketch mode: no counts table — rank from a direct melt
-        // (one groupBy shuffle). The driver-side rank maps are still
-        // gated here, on the HLL++ distinct ESTIMATES with a 1.2x
-        // safety margin for sketch error (3 rsd = 3%; 20% is
-        // comfortably past any excursion): a 100 TB rank table still
-        // takes the shuffle plan, but a driver-sized one gets the same
-        // zero-shuffle co-moment pass as exact mode.
-        val kv = working.select(explode(array(cols.map(c =>
+        // sketch mode: no count table — count a direct melt (one
+        // groupBy shuffle), gated on the HLL++ distinct ESTIMATES with
+        // a 1.2x safety margin for sketch error (3 rsd = 3%; 20% is
+        // comfortably past any excursion)
+        (working.select(explode(array(cols.map(c =>
             struct(lit(c).as("c"), qcol(c).cast("double").as("v"))): _*)).as("kv"))
           .select(col("kv.c").as("c"), col("kv.v").as("v"))
           .where(col("v").isNotNull && !col("v").isNaN)
-        if (total * 1.2 <= cfg.spearmanBroadcastMaxDistinct)
-          Left(timed("G:spearman-maps")(buildRankMapsFromCounts(
-            kv.groupBy("c", "v").agg(count(lit(1)).as("cnt")), cols)))
-        else Right(timed("G:spearman-ranks")(
-          graft.ops.Ranking.avgRanks(kv, "c", "v")))
+          .groupBy("c", "v").agg(count(lit(1)).as("cnt")), total * 1.2)
     }
+    if (estimate <= cfg.spearmanBroadcastMaxDistinct)
+      // driver-sized: rank IN the driver off one bounded collect of the
+      // counts — no v re-aggregation shuffle (the driver accumulator
+      // folds string-distinct values that collide under the double
+      // cast), and the distributed ranking would only have been
+      // collected into these maps anyway
+      Left(timed("G:spearman-maps")(buildRankMapsFromCounts(counts, cols)))
+    else
+      Right(timed("G:spearman-ranks")(graft.ops.Ranking.avgRanksFromCounts(
+        counts.groupBy("c", "v").agg(sum(col("cnt")).as("cnt")), "c", "v")))
   }
 
   /** Pass G: Pearson over the post-demotion numeric columns and, when

@@ -70,6 +70,8 @@ class CountTableKernelSpec extends SparkSpec {
   }
 
   test("histograms: +-inf, NaN, null, min = max, the max edge, float and date columns") {
+    // one count table holds every branch of pass B's `vd`: float, double,
+    // long, date, timestamp and (null) string values
     val inf = Double.PositiveInfinity
     def d(x: Double): java.lang.Double = x
     val rows = (0 until 90).map { i =>
@@ -80,11 +82,15 @@ class CountTableKernelSpec extends SparkSpec {
         if (i == 5) d(Double.NaN) else d(i % 5),                           // NaN: no histogram
         if (i % 4 == 0) null else d(3.5),                                  // min = max
         if (i % 8 == 0) null else java.lang.Float.valueOf((i % 17) * 0.1f), // float
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(i * 37L % 500)))
+        if (i % 6 == 0) null else java.lang.Long.valueOf(i * 7919L % 1000 - 500), // long
+        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(i * 37L % 500)),
+        if (i % 10 == 0) null else new java.sql.Timestamp(i * 7919L % 400 * 3600017L), // ms
+        if (i % 7 == 0) null else s"text ${i % 13}")
     }
-    val names = Seq("edge", "pinf", "ninf", "nan", "const", "f")
+    val names = Seq("edge", "pinf", "ninf", "nan", "const", "f", "l")
     val schema = StructType(names.take(5).map(StructField(_, DoubleType)) ++ Seq(
-      StructField("f", FloatType), StructField("dt", DateType)))
+      StructField("f", FloatType), StructField("l", LongType), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("s", StringType)))
     val df = frame(rows, schema, 9)
     // threshold 0: the constant column stays numeric and gets one bin
     val cfg = quiet.copy(lowCategoricalThreshold = 0)
@@ -121,8 +127,11 @@ class CountTableKernelSpec extends SparkSpec {
     }
     assert(p.columns.find(_.name == "edge").get.typed.asInstanceOf[NumericStats]
       .histogram.get.counts.last > 0)
-    val dt = p.columns.find(_.name == "dt").get.typed.asInstanceOf[DateTimeStats].histogram
-    assert(same(dt, expected(unix_timestamp(col("dt").cast("timestamp")), _ => cfg.histogramBins)))
+    for (c <- Seq("dt", "ts")) {
+      val got = p.columns.find(_.name == c).get.typed.asInstanceOf[DateTimeStats].histogram
+      assert(same(got, expected(unix_timestamp(col(c).cast("timestamp")), _ => cfg.histogramBins)), c)
+    }
+    assert(p.columns.find(_.name == "s").get.typed.asInstanceOf[CategoricalStats].topValues.size == 13)
   }
 
   test("char stats: supplementary code points, combining marks, empty strings, nulls") {
@@ -169,7 +178,7 @@ class CountTableKernelSpec extends SparkSpec {
         .toMap -> r.getLong(names.size)).toMap
     val head = ProfileConfig.default.duplicatesHead
     val topCounts = exact.values.filter(_ > 1).toSeq.sorted.reverse.take(head)
-    // the hash mode's SQL: groups on the 128-bit row hash, listing order
+    // pass F's SQL: groups on the 128-bit row hash, listing order
     // (cnt desc, h1, h2)
     import org.apache.spark.sql.graft.ColumnBridge
     import org.apache.spark.sql.catalyst.expressions.XxHash64
@@ -182,16 +191,13 @@ class CountTableKernelSpec extends SparkSpec {
       .join(hashed.dropDuplicates("h1", "h2"), Seq("h1", "h2")).collect()
       .map(r => names.map(c => c -> Option(r.getAs[Any](c)).map(_.toString).orNull).toMap ->
         r.getAs[Long]("count")).toSet
-    for (byHash <- Seq(true, false)) {
-      val p = withShufflePartitions(8)(Profiler.profile(df,
-        quiet.copy(computeDuplicates = true, duplicatesByHash = byHash)))
-      assert(p.nDuplicates == rows.size - exact.size, s"byHash=$byHash")
-      assert(p.duplicateRows.map(_._2) == topCounts, s"byHash=$byHash")
-      assert(p.duplicateRows.forall { case (vals, n) => exact.get(vals).contains(n) })
-      // every group above the cut's count is listed
-      assert(exact.filter(_._2 > topCounts.last).toSet.subsetOf(p.duplicateRows.toSet))
-      if (byHash) assert(p.duplicateRows.toSet == listed)
-    }
+    val p = withShufflePartitions(8)(Profiler.profile(df, quiet.copy(computeDuplicates = true)))
+    assert(p.nDuplicates == rows.size - exact.size)
+    assert(p.duplicateRows.map(_._2) == topCounts)
+    assert(p.duplicateRows.forall { case (vals, n) => exact.get(vals).contains(n) })
+    // every group above the cut's count is listed
+    assert(exact.filter(_._2 > topCounts.last).toSet.subsetOf(p.duplicateRows.toSet))
+    assert(p.duplicateRows.toSet == listed)
   }
 
   test("a profile read at 120 partitions equals the 2-partition profile") {

@@ -135,17 +135,21 @@ class ProfilerSpec extends SparkSpec {
   }
 
   test("hash-pair duplicates == exact full-row groupBy (count and listing counts)") {
+    import org.apache.spark.sql.functions.col
     val doubled = fixture.union(fixture)
-    def run(byHash: Boolean) = Profiler.profile(doubled,
-      ProfileConfig.default.copy(persist = false, duplicatesByHash = byHash,
+    val h = Profiler.profile(doubled,
+      ProfileConfig.default.copy(persist = false,
         computeCorrelations = false, computeCramers = false,
         computeCharStats = false))
-    val h = run(byHash = true)
-    val e = run(byHash = false)
-    assert(h.nDuplicates == e.nDuplicates)
-    // same groups (all counts 2, same row values) — order may differ only
-    // in tie-breaks, so compare as sets
-    assert(h.duplicateRows.toSet == e.duplicateRows.toSet)
+    val names = doubled.columns.toSeq
+    val groups = doubled.groupBy(names.map(col): _*).count().collect().map(r =>
+      names.indices.map(i => names(i) -> Option(r.get(i)).map(_.toString).orNull).toMap ->
+        r.getLong(names.size))
+    assert(h.nDuplicates == doubled.count() - groups.length)
+    // every group is a pair and all of them fit the listing; the listing
+    // order breaks ties by hash, so compare as sets
+    assert(groups.forall(_._2 == 2) && groups.length <= ProfileConfig.default.duplicatesHead)
+    assert(h.duplicateRows.toSet == groups.toSet)
   }
 
   test("hash-pair duplicates: null position, -0.0/0.0 and NaN match groupBy equality") {
@@ -289,7 +293,7 @@ class ProfilerSpec extends SparkSpec {
       Profiler.profile(df, cfg)
       ListenerProbe.drain(spark)
     } finally spark.listenerManager.unregister(listener)
-    assert(queries.size == 13, s"Spark queries per flagship profile: $queries")
+    assert(queries.size == 12, s"Spark queries per flagship profile: $queries")
   }
 
   test("table stats rollup") {

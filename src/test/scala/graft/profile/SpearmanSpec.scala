@@ -133,7 +133,10 @@ class SpearmanSpec extends SparkSpec {
     // spearmanBroadcastMaxDistinct = 0 sends profile() down the Right
     // route: distributed ranks + spearmanMatrix's rank join, the plan a
     // rank table too big for the driver takes. Ties, nulls, -0.0 next
-    // to 0.0 and a FloatType column exercise every keying rule.
+    // to 0.0 and a FloatType column exercise every keying rule; the date
+    // and string columns share pass B's count table with the numeric
+    // ones, so both routes must keep to the numeric rows. Sketch mode
+    // takes both routes from its own melt.
     val rnd = new scala.util.Random(20261018)
     val df = (1 to 400).map { i =>
       val x = if (i % 17 == 0) None
@@ -142,16 +145,22 @@ class SpearmanSpec extends SparkSpec {
         else Some((rnd.nextInt(41) - 20).toDouble)
       val f = if (i % 19 == 0) None else Some(rnd.nextInt(30) * 1.1f)
       val y = if (i % 23 == 0) None else Some(math.floor(rnd.nextGaussian() * 8))
-      (x, f, y, rnd.nextInt(90).toLong)
-    }.toDF("x", "f", "y", "k")
+      val day = java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(rnd.nextInt(60)))
+      (x, f, y, rnd.nextInt(90).toLong, day, s"s${rnd.nextInt(70)}")
+    }.toDF("x", "f", "y", "k", "day", "s")
     val cfg = ProfileConfig.default.copy(persist = false, computeSpearman = true)
     def spearman(p: TableProfile) = p.correlations.find(_.method == "spearman").get
     val maps = spearman(Profiler.profile(df, cfg))
-    val shuffle = spearman(Profiler.profile(df, cfg.copy(spearmanBroadcastMaxDistinct = 0L)))
-    assert(maps.columns == Seq("x", "f", "y", "k") && shuffle.columns == maps.columns)
-    for (i <- maps.columns.indices; j <- maps.columns.indices) {
-      val (a, b) = (maps.values(i)(j), shuffle.values(i)(j))
-      assert(!a.isNaN && math.abs(a - b) < 1e-12, s"($i,$j): $a vs $b")
+    assert(maps.columns == Seq("x", "f", "y", "k"))
+    val sketch = cfg.copy(exactDistinct = false)
+    for ((route, other) <- Seq("exact shuffle" -> cfg.copy(spearmanBroadcastMaxDistinct = 0L),
+        "sketch maps" -> sketch, "sketch shuffle" -> sketch.copy(spearmanBroadcastMaxDistinct = 0L))) {
+      val got = spearman(Profiler.profile(df, other))
+      assert(got.columns == maps.columns, route)
+      for (i <- maps.columns.indices; j <- maps.columns.indices) {
+        val (a, b) = (maps.values(i)(j), got.values(i)(j))
+        assert(!a.isNaN && math.abs(a - b) < 1e-12, s"$route ($i,$j): $a vs $b")
+      }
     }
   }
 
