@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic reclamation for ITERATIVE localCheckpoint loops
@@ -19,8 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * runs while scan-shaped queries in the same pass stayed flat.
   *
   * The ring frees a generation as soon as the NEXT generation is
-  * materialized: `checkpoint()` tags the new RDD ids (diff of
-  * `sc.getPersistentRDDs` around the call), `rotate()` unpersists the
+  * materialized: `checkpoint()` tags the new RDD ids (a DataFrame's by
+  * the diff of `sc.getPersistentRDDs` around the call, an RDD's by its
+  * own id), `rotate()` unpersists the
   * generation before last. Two generations stay live — the current
   * edge table and everything derived in the round under construction
   * — so no block is dropped while any downstream action can still
@@ -47,6 +49,15 @@ final class CheckpointRing(spark: SparkSession) {
     val out = df.localCheckpoint(eager)
     curIds ++= sc.getPersistentRDDs.keySet.diff(before)
     out
+  }
+
+  /** `rdd.localCheckpoint()`, tagged to the current generation. Lazy,
+    * like `RDD.localCheckpoint`: the caller's next action that computes
+    * every partition materializes it. */
+  def checkpoint[T](rdd: RDD[T]): RDD[T] = {
+    rdd.localCheckpoint()
+    curIds += rdd.id
+    rdd
   }
 
   /** End of one iteration: the generation BEFORE last is dead — every

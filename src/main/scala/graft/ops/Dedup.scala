@@ -1043,16 +1043,17 @@ object Dedup {
   /** End-to-end near-dup dedup: collapse `pairs` into clusters
     * ([[connectedComponents]]) and keep ONE canonical row per cluster —
     * the one whose id equals the component label (= min id, deterministic)
-    * — plus every row not in any pair. The left join broadcasts nothing
-    * and shuffles on the id: at 100 TB the cluster table is tiny next to
+    * — plus every row not in any pair: one left anti join against the
+    * cluster members that are not their component's label. A row with
+    * a null id matches nothing and is kept. The join broadcasts nothing
+    * and shuffles on the id: at 100 TB the member table is tiny next to
     * the corpus (only docs with a near-dup appear in it). */
   def dedupByNearDupClusters(docs: DataFrame, idCol: String,
       pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cc = connectedComponents(pairs, aCol, bCol)
-      .select(col(aCol).as("__ccid"), col("component").as("__component"))
-    docs.join(cc, docs(idCol) === col("__ccid"), "left")
-      .where(col("__component").isNull || col("__component") === docs(idCol))
-      .drop("__ccid", "__component")
+    val dropped = connectedComponents(pairs, aCol, bCol)
+      .where(col(aCol) =!= col("component"))
+      .select(col(aCol).as("__ccid"))
+    docs.join(dropped, docs(idCol) === col("__ccid"), "left_anti")
   }
 
   /** First-`n`-words fingerprint: the cheap document key behind

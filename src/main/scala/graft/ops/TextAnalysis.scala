@@ -102,18 +102,24 @@ object TextAnalysis {
     def classRatio(pattern: String): Column =
       round(size(regexp_extract_all(c, lit(pattern), lit(0))).cast("double") / safeLen, 6)
     val ws = words(c)
-    val nw = greatest(size(ws), lit(1)).cast("double")
     Map(
       "n_chars" -> length(c).cast("long"),
       "n_words" -> size(ws).cast("long"),
-      "mean_word_len" -> round(
-        aggregate(ws, lit(0L), (acc, w) => acc + length(w)).cast("double") / nw, 6),
+      "mean_word_len" -> meanWordLen(ws),
       "punct_ratio" -> classRatio("[^A-Za-z0-9\\s]"),
       "digit_ratio" -> classRatio("[0-9]"),
       "upper_ratio" -> classRatio("[A-Z]"),
       "space_ratio" -> classRatio("[ ]"),
       "stopword_ratio_en" -> stopwordFraction(c, "en"))
   }
+
+  /** Mean character length of a word array, 6-decimal rounded: the one
+    * word-length rule of [[qualitySignals]] and [[repetitionTable]]. The
+    * length sum is the length of the words joined with "" (codegen'd, no
+    * per-word lambda); null for a null array. */
+  private def meanWordLen(ws: Column): Column =
+    round(length(array_join(ws, "")).cast("double") /
+      greatest(size(ws), lit(1)).cast("double"), 6)
 
   /** Composite quality score in [0,1]: rewards mid-length documents and
     * normal word shape, penalizes punctuation/digit soup. The exact
@@ -143,12 +149,13 @@ object TextAnalysis {
   /** Repetition signals: what fraction of the document's word n-grams
     * are repeats of an earlier n-gram (duplicate-n-gram fraction, the
     * Gopher repetition filters — Rae et al., arXiv:2112.11446 §A1.1).
-    * Pure per-row column expressions: no shuffle, scales as a map-only
-    * pass at any corpus size. */
+    * Pure per-row column expressions over the codegen'd
+    * [[graft.functions.WordNgramsExpr]] (all n-grams, then the distinct
+    * ones): no shuffle, scales as a map-only pass at any corpus size.
+    * A null text gives null counts. */
   def repetitionSignals(c: Column, n: Int): Map[String, Column] = {
-    val gs = wordNgrams(c, n)
-    val total = size(gs)
-    val nd = size(array_distinct(gs))
+    val total = size(wordNgrams(c, n))
+    val nd = size(graft.functions.WordNgramsExpr.ngrams(c, n, distinct = true))
     Map(
       s"n_${n}grams" -> total.cast("long"),
       s"n_distinct_${n}grams" -> nd.cast("long"),
@@ -158,55 +165,27 @@ object TextAnalysis {
           .otherwise(lit(0.0)), 6))
   }
 
-  /** Per-document repetition signals as a FULLY-CODEGEN plan: explode
-    * words with positions, form n-grams with `lead` over a per-document
-    * window (bounded partitions — a document's words, never the corpus),
-    * then count/count-distinct per document. The per-row expression form
-    * ([[repetitionSignals]]) is convenient for composition but its
-    * higher-order functions evaluate interpreted, outside codegen —
-    * measured ~10x the CPU of this plan at corpus scale. The shuffles
-    * here carry only (id, gram) pairs and per-doc scalars.
+  /** Per-document repetition signals as ONE per-row projection of
+    * [[words]], [[repetitionSignals]] and the [[qualitySignals]]
+    * word-length rule, all codegen'd: a map-only pass with no shuffle,
+    * at any corpus size. A null text counts as no words (zeros, where
+    * the expression forms give nulls). Each row gets its own statistics,
+    * whatever its id: rows that share an id, or have a null one, are
+    * not pooled.
     * Output: id, n_words, mean_word_len, n_{n}grams,
-    * n_distinct_{n}grams, dup_{n}gram_frac (values identical to the
-    * expression form). */
+    * n_distinct_{n}grams, dup_{n}gram_frac. */
   def repetitionTable(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
     require(n >= 2, "n-gram size must be >= 2")
-    import org.apache.spark.sql.expressions.Window
-    val w = df
-      .select(col(idCol).as("id"),
-        posexplode(split(lower(col(textCol)), "\\s+")).as(Seq("pos", "w")))
-      .where(length(col("w")) > 0)
-    val win = Window.partitionBy("id").orderBy("pos")
-    val leads = (1 until n).map(k => lead(col("w"), k).over(win))
-    val grams = w
-      .select(col("id"),
-        concat_ws(" ", (col("w") +: leads): _*).as("g"),
-        leads.last.isNotNull.as("full"))
-      .where(col("full"))
-    val rep = grams.groupBy("id").agg(
-      count(lit(1)).as("ng"),
-      countDistinct(col("g")).as("nd"))
-    val stats = w.groupBy("id").agg(
-      count(lit(1)).as("nw"),
-      sum(length(col("w"))).as("wl"))
-    val ng = coalesce(col("ng"), lit(0L))
-    val nd = coalesce(col("nd"), lit(0L))
-    val nw = coalesce(col("nw"), lit(0L))
-    df.select(col(idCol).as("id"))
-      .join(stats, Seq("id"), "left")
-      .join(rep, Seq("id"), "left")
-      .select(
-        col("id"),
-        nw.as("n_words"),
-        round(coalesce(col("wl").cast("double"), lit(0.0)) /
-          greatest(nw, lit(1L)).cast("double"), 6).as("mean_word_len"),
-        ng.as(s"n_${n}grams"),
-        nd.as(s"n_distinct_${n}grams"),
-        round(
-          when(ng > 0,
-            lit(1.0) - nd.cast("double") / ng.cast("double"))
-            .otherwise(lit(0.0)), 6).as(s"dup_${n}gram_frac"))
+    val ws = words(col(textCol))
+    val rep = repetitionSignals(col(textCol), n)
+    df.select(
+      col(idCol).as("id"),
+      coalesce(size(ws).cast("long"), lit(0L)).as("n_words"),
+      coalesce(meanWordLen(ws), lit(0.0)).as("mean_word_len"),
+      coalesce(rep(s"n_${n}grams"), lit(0L)).as(s"n_${n}grams"),
+      coalesce(rep(s"n_distinct_${n}grams"), lit(0L)).as(s"n_distinct_${n}grams"),
+      rep(s"dup_${n}gram_frac").as(s"dup_${n}gram_frac"))
   }
 
   /** LINE-level repetition signals — the other half of the Gopher
@@ -266,11 +245,9 @@ object TextAnalysis {
     * the practical requirement that separates a filter stage from a
     * black box.
     *
-    * DataFrame-in/DataFrame-out, built on the fully-codegen
-    * [[repetitionTable]] plan — the per-row expression composition
-    * ([[repetitionSignals]] + [[qualitySignals]]) evaluates its
-    * higher-order lambdas interpreted and measured ~40x slower at
-    * corpus scale; this is the one blessed path (q43 runs it).
+    * DataFrame-in/DataFrame-out: the rules read [[repetitionTable]]'s
+    * one codegen'd per-row projection (n = 2), so the filter is a
+    * map-only pass with no shuffle (q43 runs it).
     * Output: id, n_words, mean_word_len, n_2grams, n_distinct_2grams,
     * dup_2gram_frac, r_word_count, r_word_shape, r_repetition, keep. */
   def gopherFilter(df: DataFrame, idCol: String, textCol: String,

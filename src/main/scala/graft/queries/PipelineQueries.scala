@@ -89,8 +89,8 @@ object PipelineQueries {
   /** Near-dup CLUSTERS: connected components over q22's pair list —
     * near-dup relations are not transitive, so pairs must collapse into
     * clusters before one canonical doc per group can be kept. Spark side
-    * is [[Dedup.connectedComponents]] (min-label propagation, hash joins
-    * only); the oracle computes the same min-reachable-id label with a
+    * is [[Dedup.connectedComponents]] (large-star/small-star contraction
+    * as a sort-and-stream RDD kernel); the oracle computes the same min-reachable-id label with a
     * recursive CTE, so the distributed fixpoint is hash-checked against
     * a closed-form transitive closure. */
   val qDedupClusters = Q(
@@ -815,10 +815,9 @@ object PipelineQueries {
   val qRepetitionFilter = Q(
     "q43_repetition_filter",
     (s, dir) => {
-      // The library's blessed filter path: gopherFilter runs the
-      // fully-codegen explode/window/aggregate repetitionTable plan
-      // (the interpreted higher-order expression composition measured
-      // 40 s at sf0.1 vs ~1 s for this plan).
+      // gopherFilter is one codegen'd per-row projection (word counts,
+      // joined-word length, all and distinct bigrams from WordNgramsExpr):
+      // a map-only scan with no shuffle.
       TextAnalysis.gopherFilter(table(s, dir, "documents"), "doc_id", "text")
         .select(
           col("id").as("doc_id"),

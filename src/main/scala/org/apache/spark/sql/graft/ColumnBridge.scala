@@ -21,4 +21,16 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `SparkSession.internalCreateDataFrame` is `private[sql]`: a
+    * DataFrame over an RDD of Catalyst internal rows, with no
+    * conversion from external rows (e.g. [[graft.ops.ConnectedComponents]]'
+    * typed kernel output). */
+  def internalCreateDataFrame(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }

@@ -368,6 +368,14 @@ class OpsSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().sorted
     // cluster {1,2,3} -> keep 1; {5,6} -> keep 5; 0 and 4 untouched
     assert(kept.toSeq == Seq(0L, 1L, 4L, 5L))
+    // a null id matches no cluster and is kept; the columns are docs'
+    val withNull = corpus.union(Seq[(Option[Long], String)]((None, "orphan"))
+      .toDF("doc_id", "text"))
+    val out = Dedup.dedupByNearDupClusters(withNull, "doc_id", pairs, "i", "j")
+    assert(out.columns.toSeq == Seq("doc_id", "text"))
+    assert(out.collect().map(r => Option(r.get(0)) -> r.getString(1)).toSet ==
+      Set(Some(0L) -> "body0", Some(1L) -> "body1", Some(4L) -> "body4",
+        Some(5L) -> "body5", None -> "orphan"))
   }
 
   test("ngramJaccardPairs finds the exact and near duplicate") {
@@ -801,19 +809,42 @@ class OpsSpec extends SparkSpec {
     assert(out(2L) == Seq(0L, 2L, 0L, true, "ip [IP] twice [IP]"))
   }
 
-  test("repetitionTable (codegen explode form) == expression form") {
-    val rep = TextAnalysis.repetitionSignals(col("text"), 3)
-    val sig = TextAnalysis.qualitySignals(col("text"))
-    val exprForm = docs.select(col("doc_id").as("id"),
-        sig("n_words").as("n_words"),
-        sig("mean_word_len").as("mean_word_len"),
-        rep("n_3grams").as("n_3grams"),
-        rep("n_distinct_3grams").as("n_distinct_3grams"),
-        rep("dup_3gram_frac").as("dup_3gram_frac"))
-      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
-    val tableForm = TextAnalysis.repetitionTable(docs, "doc_id", "text", 3)
-      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
-    assert(tableForm == exprForm)
+  test("repetitionTable and the expression forms == plain-Scala reference") {
+    def round6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    // lowercase, split on whitespace runs, lengths in code points
+    def reference(text: String, n: Int): Seq[Any] = {
+      val ws = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+      val grams = ws.sliding(n).filter(_.length == n).map(_.mkString(" ")).toSeq
+      val len = ws.map(w => w.codePointCount(0, w.length)).sum
+      Seq(ws.length.toLong, round6(len.toDouble / math.max(ws.length, 1)),
+        grams.size.toLong, grams.distinct.size.toLong,
+        if (grams.isEmpty) 0.0 else round6(1.0 - grams.distinct.size.toDouble / grams.size))
+    }
+    val extra = Seq("a b a b a b", "\tThe  cat\tsat\r\non the CAT sat\n",
+      "  lead and  trail  ", "", null, "word", "\u00C0B \u00E0b \u00C0B \u00E0b x",
+      "\u0130 \u0130 \u0130", "\uD83D\uDE00 x \uD83D\uDE00 x \uD83D\uDE00",
+      "a b c a b c a b c d")
+    val df = docs.select(col("doc_id"), col("text")).union(
+      extra.zipWithIndex.map { case (t, i) => (100L + i, t) }.toDF("doc_id", "text"))
+    val texts = df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(texts.size == 5 + extra.size)
+    for (n <- Seq(2, 3)) {
+      val rep = TextAnalysis.repetitionSignals(col("text"), n)
+      val sig = TextAnalysis.qualitySignals(col("text"))
+      val exprForm = df.select(col("doc_id"),
+          sig("n_words"), sig("mean_word_len"),
+          rep(s"n_${n}grams"), rep(s"n_distinct_${n}grams"), rep(s"dup_${n}gram_frac"))
+        .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+      val tableForm = TextAnalysis.repetitionTable(df, "doc_id", "text", n)
+        .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+      // a null text: the expression forms give nulls, the table zeros
+      val wantExpr = texts.map { case (id, t) =>
+        id -> (if (t == null) Seq(null, null, null, null, 0.0) else reference(t, n)) }
+      val wantTable = texts.map { case (id, t) => id -> reference(Option(t).getOrElse(""), n) }
+      assert(exprForm == wantExpr, s"n=$n")
+      assert(tableForm == wantTable, s"n=$n")
+    }
   }
 
   test("multimodal: decodeMeta passes non-image bytes through as unknown") {
